@@ -1,20 +1,43 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
+import java.util.concurrent.{Callable, Executors, TimeUnit, TimeoutException}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.plans.Checkpoints.{sweep => sweepSession}
+
+/** The 242-query suite bench, the driver's `runMain graft.Bench` surface.
+  *
+  * After an untimed session warm-up, every query runs in name order into
+  * the noop sink, once cold and then once warm. Each execution runs on its
+  * own job-group thread under a [[DeadlineS]] deadline and is followed by
+  * a hermetic [[graft.plans.Checkpoints.sweep]]. A query whose cold or
+  * warm execution failed (or hit the deadline) is re-run once as a
+  * cold + warm pair at the end of the run, and that pair replaces its
+  * figures. Host CPU steal is stamped per query and for the run; it never
+  * gates or retries anything.
+  *
+  * The full record goes to BENCH_DETAIL.json; stdout gets exactly one
+  * JSON line, [[summaryLine]].
+  */
 object Bench {
 
-  import graft.plans.Checkpoints.{sweep => sweepSession}
+  /** Per-execution wall-clock cap: one pathological query must not eat
+    * the driver's window. */
+  val DeadlineS = 120
+  /** How long a deadline-cancelled execution gets to unwind before the
+    * run moves on. */
+  val GraceS = 15
+  /** Chars of the stdout line spent on the slowest-queries map. The
+    * driver reads the last ~2,000 chars of stdout, and sbt appends a
+    * ~75-char "[success]" banner after the line. */
+  val QueryMapBudget = 600
 
-  /** (steal, total) jiffies from /proc/stat's aggregate cpu line — the
-    * hypervisor-contention counter. Young-GC pauses stretching from tens
-    * of ms to seconds while the guest is otherwise idle is host CPU
-    * steal; recording the per-query steal share makes a degraded bench
-    * window provable from the artifact itself instead of adjudicated
-    * after the fact (the BENCH_r06 1708-s failure mode). Only the first
-    * 8 fields (user nice system idle iowait irq softirq steal) are
-    * summed: guest/guest_nice are already folded into user/nice on
-    * Linux, so a full-line sum double-counts them and understates the
-    * steal share. (-1, -1) when unreadable (non-Linux). */
+  /** (steal, total) jiffies from /proc/stat's aggregate cpu line. Only
+    * the first 8 fields (user nice system idle iowait irq softirq steal)
+    * are summed: guest/guest_nice are already folded into user/nice, so a
+    * full-line sum double-counts them and understates the steal share.
+    * (-1, -1) when unreadable (non-Linux). */
   private[graft] def cpuSteal(): (Long, Long) =
     try {
       val src = scala.io.Source.fromFile("/proc/stat")
@@ -24,809 +47,145 @@ object Bench {
       } finally src.close()
     } catch { case _: Throwable => (-1L, -1L) }
 
-  // written by the spin probe so the JIT cannot dead-code-eliminate it
-  @volatile private var blackhole = 0L
-
-  /** Calibrated single-thread spin (~10-30 ms on a healthy host): wall
-    * time scales inversely with DELIVERED CPU speed, surfacing
-    * hypervisor-level slowdown waves that /proc/stat steal does NOT.
-    * Round 10 measured the same q237 plan at 24-76 s isolated with 0.6 %
-    * steal, then 5.7-9.5 s minutes later — a Python spin probe confirmed
-    * ~2.5-10× single-thread speed swings with near-zero steal the whole
-    * time, so the steal-based detector alone is blind to this host's
-    * dominant degradation mode. min of two back-to-back spins rejects a
-    * one-off GC/scheduler pause landing inside a probe. */
-  private[graft] def hostmark(): Double = {
-    def spin(): Double = {
-      val t0 = System.nanoTime
-      var x = 0x9E3779B97F4A7C15L
-      var i = 0
-      while (i < 8000000) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; i += 1 }
-      blackhole = x
-      (System.nanoTime - t0) / 1e6
-    }
-    math.min(spin(), spin())
+  /** One execution. `secs` is -1 for a failure and -2 for a deadline
+    * kill; `stealJ`/`jiffies` are the /proc/stat deltas of its window (0
+    * when unreadable), kept raw so the run figure can be jiffy-weighted. */
+  private[graft] case class Exec(ok: Boolean, secs: Double, stealJ: Long,
+                                 jiffies: Long) {
+    def stealPct: Double = if (jiffies <= 0) -1.0 else 100.0 * stealJ / jiffies
   }
 
-  /** (busy, total) jiffies from /proc/stat's aggregate line: busy =
-    * user+nice+system ONLY. Paired with [[selfJiffies]] this yields
-    * the EXTERNAL CPU share of a window — cycles burned by other
-    * processes in the guest. A fair-share competitor inflates query
-    * wall time 2-3× while steal reads 0 (it is guest-internal, nothing
-    * is stolen from the hypervisor's view) and the short spin probe
-    * reads clean (a 17 ms burst is scheduled immediately under CFS) —
-    * measured exactly so in round 10's hog experiment. steal, irq and
-    * softirq are deliberately EXCLUDED from busy (round-10 ADVICE):
-    * selfJiffies counts only this process's user+system, so folding
-    * hypervisor steal or kernel interrupt time into busy would be
-    * attributed to "guest co-resident processes", inflating ext and
-    * double-triggering the detector in high-steal or IO-heavy windows
-    * that the steal probes already cover. (-1,-1) when unreadable. */
-  private[graft] def cpuBusy(): (Long, Long) =
-    try {
-      val src = scala.io.Source.fromFile("/proc/stat")
-      try {
-        val f = src.getLines().next().trim.split("\\s+").drop(1).map(_.toLong)
-        (f(0) + f(1) + f(2), f.take(8).sum)
-      } finally src.close()
-    } catch { case _: Throwable => (-1L, -1L) }
+  /** A query's headline figures; `retried` marks that they come from the
+    * end-of-run retry pair. */
+  private[graft] case class Result(name: String, cold: Exec, warm: Exec,
+                                   retried: Boolean = false)
 
-  /** This process's own cumulative CPU jiffies (utime+stime across all
-    * threads, /proc/self/stat fields 14-15 — same USER_HZ unit as
-    * /proc/stat). -1 when unreadable. */
-  private[graft] def selfJiffies(): Long =
-    try {
-      val src = scala.io.Source.fromFile("/proc/self/stat")
-      try {
-        // comm (field 2) may contain spaces — split after the closing paren
-        val line = src.getLines().next()
-        val rest = line.substring(line.lastIndexOf(')') + 2).split("\\s+")
-        rest(11).toLong + rest(12).toLong // utime, stime (fields 14, 15)
-      } finally src.close()
-    } catch { case _: Throwable => -1L }
+  private def fmt(v: Double) = f"$v%.3f"
+  private def jmap(vs: Seq[(String, Double)]) =
+    vs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
 
-  /** Hypervisor steal measured UNDER LOAD: spin `threads` busy loops for
-    * `ms`, read the /proc/stat steal delta across the burst. An IDLE
-    * guest records near-zero steal even on a contended host (an idle
-    * vCPU is not runnable, so nothing is "stolen" from it) — round 10
-    * measured 11-14 % steal during 32-thread query bursts in windows
-    * whose idle-sampled steal and single-thread spin both read clean.
-    * This is the only probe that sees the contention mode queries
-    * actually run under. */
-  private[graft] def loadedStealPct(threads: Int, ms: Long): Double = {
-    val (s0, j0) = cpuSteal()
-    if (s0 < 0) return -1.0
-    val deadline = System.nanoTime + ms * 1000000L
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-    (1 to threads).foreach { _ =>
-      pool.submit(new Runnable {
-        def run(): Unit = {
-          var x = 0x9E3779B97F4A7C15L
-          while (System.nanoTime < deadline) {
-            x ^= x << 13; x ^= x >>> 7; x ^= x << 17
-          }
-          blackhole = x
-        }
-      })
-    }
-    pool.shutdown()
-    pool.awaitTermination(ms * 4, java.util.concurrent.TimeUnit.MILLISECONDS)
-    val (s1, j1) = cpuSteal()
-    if (s1 < 0 || j1 <= j0) -1.0 else 100.0 * (s1 - s0) / (j1 - j0)
+  /** Fields shared by the stdout line and BENCH_DETAIL.json. `value` is
+    * the cold total, -1 when any query is still failed after its retry: a
+    * failed query must not vanish from the headline. */
+  private def totals(rs: Seq[Result]): String = {
+    val nFailed = rs.count(!_.cold.ok)
+    val value = if (nFailed > 0) -1.0 else rs.map(_.cold.secs).sum
+    val warmValue = rs.filter(_.warm.ok).map(_.warm.secs).sum
+    val jiffies = rs.map(_.cold.jiffies).sum
+    val stealPct =
+      if (jiffies <= 0) -1.0 else 100.0 * rs.map(_.cold.stealJ).sum / jiffies
+    s""""metric":"total","value":${fmt(value)},"warm_value":${fmt(warmValue)},""" +
+      s""""unit":"sec","n_queries":${rs.size},"n_failed":$nFailed,""" +
+      s""""n_retried":${rs.count(_.retried)},"steal_pct":${fmt(stealPct)}"""
   }
 
-  /** Should a cold measured in or near a degraded window be retried even
-    * though it sits under the 3× blanket threshold? Two tiers (VERDICT
-    * r13 task 6):
-    *
-    *  - `ownWindow` — the execution's OWN bracketing evidence flagged it
-    *    (spin probes > 2× the run's best, or external CPU share above
-    *    the noise floor): retry when the cold exceeds the 3 s jitter
-    *    floor AND its own anchor when one exists (round-14 ADVICE: a
-    *    cold at or under its anchor was demonstrably NOT inflated by
-    *    the window, so re-measuring it spends a full execution plus an
-    *    awaitCleanWindow wait with no possible headline correction;
-    *    anchor-less queries keep the floor-only behavior). No 1.5×
-    *    multiplier here — the window evidence itself is the
-    *    corroboration, the anchor only has to show the measurement
-    *    moved at all.
-    *  - `nearWave` — the execution's own probes read clean but it ran
-    *    within the ±60 s expansion of a window some OTHER execution's
-    *    probes flagged (waves are minutes long and the probes only
-    *    bracket, so a wave can inflate a query whose own brackets landed
-    *    in lulls — exactly the r13 official q78/q116/q117 spikes, which
-    *    passed their anchor thresholds while 4 windows were degraded):
-    *    here the anchor must corroborate that the slowdown actually
-    *    reached the query — cold > max(3 s, 1.5× anchor), the pre-r14
-    *    bar. Anchor-less queries never fire on wave adjacency alone.
-    *
-    * In a clean run both flags are false for every execution and the
-    * rule never fires — no behavior change in clean windows. */
-  private[graft] def degradedRetryNeeded(coldSecs: Double,
-      anchor: Option[Double], ownWindow: Boolean,
-      nearWave: Boolean = false): Boolean =
-    if (ownWindow) coldSecs > 3.0 && anchor.forall(coldSecs > _)
-    else nearWave && anchor.exists(a => coldSecs > math.max(3.0, 1.5 * a))
+  /** The single stdout line: the totals plus the slowest queries that fit
+    * in [[QueryMapBudget]] chars. */
+  private[graft] def summaryLine(rs: Seq[Result], sfDir: String): String = {
+    val slowest = rs.map(r => r.name -> r.cold.secs).sortBy(-_._2)
+      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
+    val kept = slowest.scanLeft(0)(_ + _.length + 1).tail
+      .zip(slowest).takeWhile(_._1 <= QueryMapBudget).map(_._2)
+    s"""{${totals(rs)},"queries":${kept.mkString("{", ",", "}")},""" +
+      s""""sf":"$sfDir","detail":"BENCH_DETAIL.json"}"""
+  }
 
-  /** Did a measurement spanning [t0, t1] (nanoTime) fall inside the
-    * ±margin expansion of any detected degraded window? Pure interval
-    * overlap so the retry passes — which run AFTER the sweep and thus
-    * see the run's full wave list — can retro-flag executions whose own
-    * probes read clean. */
-  private[graft] def inWave(t0: Long, t1: Long,
-      waves: Seq[(Long, Long)], marginNs: Long): Boolean =
-    waves.exists { case (a, b) => t1 >= a - marginNs && t0 <= b + marginNs }
-
-  /** Per-query cold anchors ("name seconds" lines, '#' comments) from a
-    * recorded clean run of the full suite — the reference the bounded
-    * retry pass compares against. Missing/garbled file → empty map (the
-    * retry pass then only fires on outright failures). */
-  private[graft] def parseAnchors(path: String): Map[String, Double] =
-    try {
-      // explicit UTF-8: under a default-ASCII forked JVM a single
-      // non-ASCII byte in a COMMENT line would throw mid-iteration and
-      // silently defang every retry threshold (caught as an empty map)
-      val src = scala.io.Source.fromFile(path)(scala.io.Codec.UTF8)
-      try src.getLines()
-        .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
-        .flatMap { l =>
-          l.split("\\s+") match {
-            case Array(k, v) => v.toDoubleOption.map(k -> _)
-            case _           => None
-          }
-        }.toMap
-      finally src.close()
-    } catch { case _: Throwable => Map.empty }
-
-  /** Retry threshold for a query with a recorded anchor: a clean cold
-    * pass costs about the anchor ± plan-setup jitter, so 3× anchor with
-    * a 3 s floor separates "host degraded under this query" from normal
-    * variance (the documented same-code spread is 452–1056 s for the
-    * suite, driven by multi-second steal windows). No anchor (a new
-    * query) → None: only a failure triggers its retry. */
-  private[graft] def retryThreshold(anchor: Option[Double]): Option[Double] =
-    anchor.map(a => math.max(3.0, 3.0 * a))
-
-  /** Should a query's WARM figure be re-measured (VERDICT r8 task 2)?
-    * BENCH_r08's warm column read 951.9 s against a 618.4 s cold —
-    * physically impossible steady-state — because warm passes landing in
-    * degraded windows were never retried. Fires when: no successful warm
-    * exists at all (warm < 0, e.g. the first cold failed and only a retry
-    * succeeded), the measurement is `suspect` (it ran while a
-    * deadline-killed job was still unwinding), it exceeds the same
-    * max(3 s, 3× anchor) bar as a cold, or it exceeds the query's own
-    * headline COLD by more than the 3 s jitter floor (steady-state slower
-    * than cold is the physically-wrong signature itself). Only called for
-    * queries whose headline cold succeeded. */
-  private[graft] def warmRetryNeeded(warm: Double, coldSecs: Double,
-      anchor: Option[Double], suspect: Boolean): Boolean =
-    warm < 0 || suspect ||
-      retryThreshold(anchor).exists(warm > _) ||
-      (warm > 3.0 && warm > coldSecs)
-
-  /** Should a query get the ONE end-of-run final re-measurement (VERDICT
-    * r8 task 4)? Fires when, after the main retry pass, the headline cold
-    * still failed, still sits above its retry threshold, or was itself
-    * measured under contamination (the winning pass ran while a killed
-    * job lingered). Running these at the very end of the suite gives the
-    * furthest possible decorrelation from the degraded window the first
-    * two passes shared (r8's q164: first 81.1 s, retry deadline-killed in
-    * the same window, headline kept 81.1 s of pure noise — clean value
-    * 2.17 s). Bounded: at most one extra execution per query. */
-  private[graft] def finalRetryNeeded(coldOk: Boolean, coldSecs: Double,
-      anchor: Option[Double], suspect: Boolean): Boolean =
-    !coldOk || suspect || retryThreshold(anchor).exists(coldSecs > _)
-
-  /** Should the headline sweep pause for a clean window MID-RUN (VERDICT
-    * r11 task 4)? The first-sweep gate and the per-retry waits protect
-    * the run's edges, but BENCH_r11's warm sweep ran entirely inside a
-    * degradation wave that STARTED mid-run (366 s warm vs 160 s clean;
-    * 41 warm retries) with no protection between them. Trigger: K=3
-    * consecutive sweep executions carrying window-degradation evidence —
-    * one flagged execution is a transient (a single GC-length probe
-    * blip must not pause a healthy run), three in a row is a wave.
-    * Isolated blips reset the streak. */
-  private[graft] def midRunRegateNeeded(consecutiveDegraded: Int): Boolean =
-    consecutiveDegraded >= 3
-
-  /** One measured execution. `stealJ`/`jiffies` are the raw /proc/stat
-    * deltas (0 when unreadable) so the run-level steal figure can be
-    * jiffy-weighted instead of an unweighted mean of percentages (a 1-s
-    * query at 0 % must not offset a 90-s query at 4 %). `lingered` marks
-    * a deadline-cancelled task that was STILL unwinding when the 15 s
-    * grace expired — its tasks may overlap the next execution's timing,
-    * so the next execution (in ANY pass: cold, warm, retry) is treated as
-    * suspect and re-measured. */
-  private case class Exec(ok: Boolean, secs: Double, steal: Double,
-                          stealJ: Long, jiffies: Long, lingered: Boolean,
-                          mark: Double = -1.0, ext: Double = -1.0,
-                          // the run-best hostmark IN EFFECT when this
-                          // execution finished (its own probes folded in).
-                          // Degradation is judged against this snapshot,
-                          // not the end-of-run minimum: on a DVFS/turbo
-                          // host the run minimum keeps tightening, so a
-                          // clean early query could read >2x a later,
-                          // faster minimum and be spuriously flagged
-                          // (round-10 ADVICE).
-                          markRef: Double = -1.0,
-                          // nanoTime window of the measured work, for the
-                          // retro wave-adjacency check (r13 task 6)
-                          t0: Long = 0L, t1: Long = 0L)
+  /** The full record written to BENCH_DETAIL.json. */
+  private[graft] def detailJson(rs: Seq[Result], sfDir: String): String =
+    s"""{${totals(rs)},"queries":${jmap(rs.map(r => r.name -> r.cold.secs))},""" +
+      s""""warm":${jmap(rs.map(r => r.name -> r.warm.secs))},""" +
+      s""""retry":${jmap(rs.filter(_.retried).map(r => r.name -> r.cold.secs))},""" +
+      s""""steal":${jmap(rs.map(r => r.name -> r.cold.stealPct))},"sf":"$sfDir"}"""
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      // Match AQE's coalesce floor to bench scale the same way
-      // shuffle.partitions is matched to the host: the default 1 MB
-      // minPartitionSize is sized for I/O-bound stages at cluster scale,
-      // but at sf0.1 several CPU-dense post-shuffle stages (BM25
-      // weighting, shingle joins) carry only 1-4 MB and were coalesced
-      // to 1-2 tasks — q237's weight join measured as a 4.3 s 2-task
-      // stage on this 32-core session (event-log profile, round 9). At
-      // 100 TB shuffles dwarf the floor and this knob changes nothing.
+      // AQE's default 1 MB coalesce floor is sized for cluster-scale
+      // shuffles; at sf0.1 it coalesced CPU-dense post-shuffle stages
+      // (BM25 weighting, shingle joins) to 1-2 tasks
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .config("spark.ui.enabled", "false")
-    // SPARK_GRAFT_CONF="k=v;k=v": extra session confs for perf experiments
-    // (e.g. spark.sql.codegen.wholeStage=false to isolate compile cost)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-      })
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // profiling knobs (the driver sets neither): SPARK_GRAFT_ONLY=q36_ann_ivf
-    // restricts the query set; SPARK_GRAFT_REPEAT=N re-runs each query N-1
-    // times after its timed cold run (default 2 → one warm pass) — cold
-    // minus warm isolates plan-setup cost (codegen compile + file listing)
-    // from steady-state execution, and both columns land in
-    // BENCH_DETAIL.json. The headline "value" is always the COLD total.
-    // One-time session warm-up OUTSIDE the timed region: analyzer/optimizer
-    // rule instantiation, shuffle + noop-sink machinery, codegen plumbing,
-    // and the parquet read/write stack (footer reader, vectorized column
-    // readers) via a throwaway /tmp file. Measured ~4.5 s on this host,
-    // previously billed to whichever query ran first. Deliberately touches
-    // NO test table — the test tables' file listing and footer reads stay
-    // inside each query's timing.
+    // Untimed session warm-up: analyzer/optimizer rules, shuffle + noop
+    // sink, codegen plumbing and the parquet read/write stack, via a
+    // throwaway file. It touches no test table, so each query's file
+    // listing and footer reads stay inside its own timing.
     spark.range(16).repartition(2).selectExpr("sum(id) as s")
       .write.format("noop").mode("overwrite").save()
-    // fixed path + overwrite: repeated bench runs reuse the scratch space
     val warmDir =
       s"${System.getProperty("java.io.tmpdir")}/graft-warm/w.parquet"
     spark.range(64).selectExpr("id", "cast(id as double) d", "cast(id as string) s")
       .write.mode("overwrite").parquet(warmDir)
     spark.read.parquet(warmDir).write.format("noop").mode("overwrite").save()
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // default 2: every bench run measures one warm pass per query, so the
-    // "fixed plan-setup amortizes at cluster scale" claim is MEASURED
-    // fleet-wide in every BENCH_DETAIL (cold vs warm columns), not
-    // per-anecdote; SPARK_GRAFT_REPEAT=1 turns the warm pass off
-    val repeat = sys.env.get("SPARK_GRAFT_REPEAT").flatMap(_.toIntOption)
-      .getOrElse(2)
-    // sorted name order: deterministic run order (hash-map order made
-    // whichever query landed first absorb blame for one-time session
-    // warm-up, shuffling per-query numbers across code changes)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-    // Per-query wall-clock cap: with 242 queries × 2 passes, one
-    // pathological query (or one environment hiccup) must not eat the
-    // driver's whole window and turn the artifact into noise. The query
-    // runs on a dedicated thread under a job group; on deadline the job
-    // group is cancelled, the query is recorded failed-slow (-2) and gets
-    // one more chance in the retry pass, and the run moves on.
-    val deadlineS = sys.env.get("SPARK_GRAFT_DEADLINE_S")
-      .flatMap(_.toIntOption).getOrElse(120)
-    // noop sink: materializes every output column (count() would let
-    // Catalyst prune the projections this bench is supposed to measure)
-    // diagnosis knobs (driver sets none): SPARK_GRAFT_SWEEP=0 turns the
-    // hermetic sweep off; SPARK_GRAFT_INLINE=1 runs queries on the caller
-    // thread with no deadline — for isolating harness overhead from plan
-    // cost when a number looks off; SPARK_GRAFT_RETRY=0 disables every
-    // retry pass (cold, warm, and final); SPARK_GRAFT_ANCHOR points at an
-    // alternate per-query anchor file
-    val doSweep = !sys.env.get("SPARK_GRAFT_SWEEP").contains("0")
-    val inline = sys.env.get("SPARK_GRAFT_INLINE").contains("1")
-    // hostmark calibration: ~12 unmeasured probes JIT-compile the spin
-    // loop itself (the first interpreted reads are 10-20× the compiled
-    // cost and must not pollute the run minimum), then the minimum over
-    // them seeds the run's healthy-host reference. The reference keeps
-    // tightening: every later probe folds into it.
-    var minMark = (1 to 12).map(_ => hostmark()).min
+
     def execute(name: String, tag: String,
-                fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Exec = {
-      val tStart = System.nanoTime()
-      val preMark = hostmark()
-      val (steal0, jiffies0) = cpuSteal()
-      val (busy0, _) = cpuBusy()
-      val self0 = selfJiffies()
-      def stealOf(): (Double, Long, Long) = {
-        val (steal1, jiffies1) = cpuSteal()
-        if (steal0 < 0 || steal1 < 0 || jiffies1 <= jiffies0)
-          (-1.0, 0L, 0L)
-        else (100.0 * (steal1 - steal0) / (jiffies1 - jiffies0),
-          steal1 - steal0, jiffies1 - jiffies0)
-      }
-      def done(ok: Boolean, secs: Double, lingered: Boolean = false): Exec = {
-        val (pct, sj, jf) = stealOf()
-        // external CPU share of the window: guest-busy jiffies NOT burned
-        // by this process — a fair-share competitor inside the guest
-        // (invisible to both steal and the short spin probe)
-        val (busy1, _) = cpuBusy()
-        val self1 = selfJiffies()
-        val ext =
-          if (busy0 < 0 || busy1 < 0 || self0 < 0 || self1 < 0 || jf <= 0)
-            -1.0
-          else 100.0 * math.max(0L, (busy1 - busy0) - (self1 - self0)) / jf
-        // the execution's window indicator is the WORSE of the two
-        // bracketing probes: a wave starting mid-query shows in the post
-        // probe, one ending mid-query in the pre probe
-        val postMark = hostmark()
-        minMark = math.min(minMark, math.min(preMark, postMark))
-        Exec(ok, secs, pct, sj, jf, lingered,
-          math.max(preMark, postMark), ext, markRef = minMark,
-          t0 = tStart, t1 = System.nanoTime())
-      }
-      if (inline) {
-        val t0 = System.nanoTime()
-        val out =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-                done(ok = true, (System.nanoTime() - t0) / 1e9) }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name $tag FAILED: ${e.getMessage}")
-            done(ok = false, -1.0)
-          }
-        if (doSweep) sweepSession(spark)
-        return out
-      }
+                fn: (SparkSession, String) => DataFrame): Exec = {
       val group = s"bench-$name-$tag"
-      val pool = java.util.concurrent.Executors.newSingleThreadExecutor(
+      val pool = Executors.newSingleThreadExecutor(
         (r: Runnable) => { val t = new Thread(r, group); t.setDaemon(true); t })
+      val (steal0, jiffies0) = cpuSteal()
       val t0 = System.nanoTime()
-      val task = pool.submit(new java.util.concurrent.Callable[Unit] {
+      val task = pool.submit(new Callable[Unit] {
         def call(): Unit = {
-          spark.sparkContext.setJobGroup(group, group,
-            interruptOnCancel = true)
+          spark.sparkContext.setJobGroup(group, group, interruptOnCancel = true)
+          // noop sink: materializes every output column, which count()
+          // would let Catalyst prune
           try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           finally spark.sparkContext.clearJobGroup()
         }
       })
-      val out =
-        try { task.get(deadlineS, java.util.concurrent.TimeUnit.SECONDS)
-              done(ok = true, (System.nanoTime() - t0) / 1e9) }
+      val secs =
+        try { task.get(DeadlineS, TimeUnit.SECONDS); (System.nanoTime() - t0) / 1e9 }
         catch {
-          case _: java.util.concurrent.TimeoutException =>
+          case _: TimeoutException =>
             spark.sparkContext.cancelJobGroup(group)
-            System.err.println(
-              s"[bench] $name $tag FAILED-SLOW: exceeded ${deadlineS}s deadline")
-            // give the cancelled job a moment to unwind so its tasks do
-            // not overlap the next query's timing; cancelJobGroup kills
-            // RUNNING jobs but not ones the query thread submits next, so
-            // if the grace expires the next measurement is suspect — flag
-            // it (the caller marks the following execution contaminated
-            // and the retry machinery re-measures it)
-            val unwound =
-              try { task.get(15, java.util.concurrent.TimeUnit.SECONDS); true }
-              catch { case _: Throwable => false }
-            if (!unwound) System.err.println(
-              s"[bench] $name $tag still unwinding after 15s grace — " +
-                "next execution marked contaminated")
-            done(ok = false, -2.0, lingered = !unwound)
+            System.err.println(s"[bench] $name $tag FAILED-SLOW: exceeded ${DeadlineS}s")
+            try task.get(GraceS, TimeUnit.SECONDS) catch { case _: Throwable => }
+            -2.0
           case e: Throwable =>
             System.err.println(s"[bench] $name $tag FAILED: " +
               s"${Option(e.getCause).getOrElse(e).getMessage}")
-            done(ok = false, -1.0)
+            -1.0
         }
+      val (steal1, jiffies1) = cpuSteal()
       pool.shutdownNow()
-      if (doSweep) sweepSession(spark) // hermetic: next execution starts clean
-      out
+      sweepSession(spark)
+      val readable = steal0 >= 0 && steal1 >= 0 && jiffies1 > jiffies0
+      val e = Exec(secs >= 0, secs, if (readable) steal1 - steal0 else 0L,
+        if (readable) jiffies1 - jiffies0 else 0L)
+      if (e.ok) System.err.println(
+        f"[bench] $name $tag: $secs%.2f s (host steal ${e.stealPct}%.1f%%)")
+      e
     }
-    // Bounded retry pass (VERDICT r7 task 1): the host provably loads
-    // ~half of all runs (same-code spread 452–1056 s), so one post-sweep
-    // cold re-run of every query that failed, was contaminated by a
-    // lingering deadline kill, or exceeded 3× its recorded clean anchor
-    // decorrelates the headline from the steal window the first pass
-    // happened to land in. Headline cold = min(first, retry); both raw
-    // values land in BENCH_DETAIL ("first" and "retry" maps).
-    val doRetry = !sys.env.get("SPARK_GRAFT_RETRY").contains("0")
-    val anchors = parseAnchors(
-      sys.env.getOrElse("SPARK_GRAFT_ANCHOR", "BENCH_ANCHOR.txt"))
-    if (doRetry && anchors.isEmpty) System.err.println(
-      "[bench] no anchor file — retry passes fire on failures only")
-    // Bounded wait for a CLEAN window before the first sweep and before
-    // each retry execution: the round-10 degradation waves are minutes
-    // long, so a retry fired straight into the wave that inflated the
-    // first pass mostly re-records it (exactly r8's q164 failure mode,
-    // which the final re-retry only partially caps). Probing until the
-    // spin reads < 1.5× the run's best costs ~30 ms per probe; the
-    // budget is shared across the whole run so a permanently-degraded
-    // host cannot stall the driver — once spent, retries fire
-    // immediately as before.
-    var waitBudgetMs = sys.env.get("SPARK_GRAFT_RETRY_WAIT_S")
-      .flatMap(_.toIntOption).getOrElse(300) * 1000L
-    // clean = the single-thread spin reads near the run's best (uniform
-    // slowdown), steal under a brief all-core burst is low (hypervisor
-    // contention — idle-sampled steal misses it, see loadedStealPct),
-    // AND no other guest process is burning CPU (fair-share competition
-    // — invisible to both of the above; sampled over a short idle beat).
-    // The probes cost ~0.5 s, so they run only here, never around queries.
-    val nThreads = cpus.toIntOption.getOrElse(4)
-    // log-once flag: on a host without /proc the gate's external-CPU
-    // criterion is inert (fail-open, by design) — record that in the run
-    // log so an artifact from such a host carries the caveat (r11 ADVICE)
-    var extProbeWarned = false
-    // `capMs` bounds ONE gate invocation without owning the shared
-    // budget (r11 ADVICE): the first-sweep gate and the mid-run re-gate
-    // each pass a cap of half the REMAINING budget, so a degraded
-    // startup can no longer drain all of SPARK_GRAFT_RETRY_WAIT_S
-    // before any query runs and leave every retry to fire immediately
-    // into the same wave (the r8 q164 failure mode the budget exists to
-    // prevent). Per-retry waits stay uncapped — they are many and small.
-    def awaitCleanWindow(capMs: Long = Long.MaxValue): Unit = {
-      var ok = false
-      var spentMs = 0L
-      while (!ok && waitBudgetMs > 0 && spentMs < capMs) {
-        // deduct MEASURED elapsed time per iteration, not a flat
-        // constant: one iteration costs hostmark (seconds on exactly
-        // the degraded host this loop runs on) + the 250 ms loaded
-        // burst (awaitTermination up to 4×) + the idle beat, so flat
-        // 500/3000 ms deductions let wall time overrun the budget
-        // severalfold (round-10 ADVICE)
-        val it0 = System.nanoTime
-        val m = hostmark(); minMark = math.min(minMark, m)
-        val st = loadedStealPct(nThreads, 250)
-        val (b0, t0) = cpuBusy(); val s0 = selfJiffies()
-        Thread.sleep(250)
-        val (b1, t1) = cpuBusy(); val s1 = selfJiffies()
-        val extReadable = b0 >= 0 && b1 >= 0 && s0 >= 0 && s1 >= 0 && t1 > t0
-        if (!extReadable && !extProbeWarned) {
-          extProbeWarned = true
-          System.err.println("[bench] /proc busy/self probes unreadable — " +
-            "the clean-window gate's external-CPU criterion is inert " +
-            "(fail-open) for this run")
-        }
-        val ext =
-          if (!extReadable) 0.0
-          else 100.0 * math.max(0L, (b1 - b0) - (s1 - s0)) / (t1 - t0)
-        ok = m <= 1.5 * minMark && st <= 5.0 && ext <= 10.0
-        if (!ok) Thread.sleep(2500)
-        val itMs = math.max(1L, (System.nanoTime - it0) / 1000000L)
-        waitBudgetMs -= itMs
-        spentMs += itMs
-      }
+    def pair(name: String, fn: (SparkSession, String) => DataFrame,
+             retried: Boolean): Result = {
+      val tag = if (retried) "retry-" else ""
+      val cold = execute(name, tag + "cold", fn)
+      val warm = if (cold.ok) execute(name, tag + "warm", fn) else cold
+      Result(name, cold, warm, retried)
     }
-    // window-level degradation evidence for an execution: slow spin
-    // probes OR external CPU burn above the noise floor (GC/housekeeping
-    // threads of a co-resident process sit well under 10 %). Compared
-    // against the run-best hostmark AS OF that execution (Exec.markRef),
-    // not the end-of-run minimum — see the Exec field note.
-    def windowDegraded(e: Exec): Boolean =
-      (e.markRef > 0 && e.mark > 2.0 * e.markRef) || e.ext > 10.0
-    // every flagged execution's time span, collected during the sweep so
-    // the retry passes (which run after it) can retro-flag executions
-    // that ran NEAR a degraded window but whose own bracketing probes
-    // landed in lulls (r13 task 6 — the official q78/q116/q117 spikes)
-    val degradedWaves = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val waveMarginNs = 60L * 1000000000L
-    def inDegradedWave(e: Exec): Boolean =
-      inWave(e.t0, e.t1, degradedWaves.toSeq, waveMarginNs)
-    // Mid-run clean-window re-gate (VERDICT r11 task 4): called after
-    // every headline-sweep execution; on the 3rd consecutive degraded
-    // window it pauses once on the shared bounded budget, capped at half
-    // of what remains so the retry passes keep a reserve. The budget is
-    // shared and finite, so a permanently-sick host still terminates —
-    // once spent, this is a no-op and the sweep proceeds as before.
-    var consecDegraded = 0
-    var nRegated = 0
-    // Retry-phase executions contribute wave evidence too (round-14
-    // ADVICE): a wave that STARTS during the retry/warm-retry/final
-    // passes must be visible to the final pass's retro nearWave check,
-    // which otherwise compares against the sweep-time list only.
-    // Deliberately does NOT touch the consecDegraded streak — the
-    // mid-run re-gate is a headline-sweep concept, and every retry-phase
-    // execution already sits behind its own awaitCleanWindow wait.
-    def noteWave(e: Exec): Unit =
-      if (windowDegraded(e)) degradedWaves += ((e.t0, e.t1))
-    def noteWindow(e: Exec): Unit = {
-      if (windowDegraded(e)) {
-        consecDegraded += 1
-        degradedWaves += ((e.t0, e.t1))
-      } else consecDegraded = 0
-      if (doRetry && midRunRegateNeeded(consecDegraded)) {
-        System.err.println(s"[bench] $consecDegraded consecutive degraded " +
-          "executions — pausing the sweep for a clean window")
-        val w0 = System.nanoTime
-        awaitCleanWindow(capMs = waitBudgetMs / 2)
-        val waitedS = (System.nanoTime - w0) / 1e9
-        if (waitedS > 1.0) System.err.println(
-          f"[bench] mid-run re-gate waited $waitedS%.1f s for a clean window")
-        nRegated += 1
-        consecDegraded = 0
-      }
-    }
-    // Gate the FIRST cold sweep on a clean window too (VERDICT r10
-    // task 2): the retry passes already waited for a clean window, but
-    // an official run LAUNCHED into a degraded window burned one full
-    // noisy sweep before the retry machinery caught up (BENCH_r10: 39
-    // retries, ~90 s of recoverable noise). Same shared bounded budget,
-    // so a permanently-degraded host still starts within
-    // SPARK_GRAFT_RETRY_WAIT_S.
-    if (doRetry) {
-      val w0 = System.nanoTime
-      // cap: half the budget, so a degraded startup leaves the retry
-      // passes a reserve instead of sending them straight back into the
-      // wave with an exhausted budget (r11 ADVICE)
-      awaitCleanWindow(capMs = waitBudgetMs / 2)
-      val waitedS = (System.nanoTime - w0) / 1e9
-      if (waitedS > 1.0) System.err.println(
-        f"[bench] waited $waitedS%.1f s for a clean window before the first sweep")
-    }
-    val benchStart = System.nanoTime()
-    // lingering deadline-kill from the PREVIOUS execution: the next
-    // measurement (whatever pass it belongs to) may have shared the host
-    // with its unwinding tasks. Threaded through ALL passes below.
-    var lingering = false
-    // `first` is the IMMUTABLE raw first-pass cold (VERDICT r8 task 3 /
-    // ADVICE: min() used to destroy the evidence when a retry won — r8's
-    // q162 true first pass is unrecoverable). `cold` is the current
-    // headline. `coldSuspect` marks a headline whose winning measurement
-    // ran while a killed job lingered; `warmSuspect` likewise for warm.
-    case class QR(name: String,
-                  fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                  first: Exec, cold: Exec, warmFirst: Double, warm: Double,
-                  contaminated: Boolean, coldSuspect: Boolean,
-                  warmSuspect: Boolean)
-    val firstPass = selected.map { case (name, fn) =>
-      val contaminated = lingering
-      val cold = execute(name, "cold", fn)
-      lingering = cold.lingered
-      noteWindow(cold)
-      // run-relative clock + steal share per query: a spike in the
-      // artifact is correlatable with GC logs / host contention directly
-      System.err.println(f"[bench] $name cold: ${cold.secs}%.2f s (at " +
-        f"${(System.nanoTime() - benchStart) / 1e9}%.0f s into the run, " +
-        f"host steal ${cold.steal}%.1f%%, mark ${cold.mark}%.0f/$minMark%.0f ms, " +
-        f"ext ${cold.ext}%.1f%%)")
-      // best (min) warm seconds across repeat-1 re-runs, -1 if none ran
-      // ok; a warm run that follows a lingering execution is suspect
-      var warmSuspect = false
-      val warm = if (!cold.ok) -1.0
-      else (2 to repeat).foldLeft(-1.0) { (best, r) =>
-        if (lingering) warmSuspect = true
-        val w = execute(name, s"warm$r", fn)
-        lingering = w.lingered
-        noteWindow(w)
-        // a failed warm run must not print a plausible-looking timing
-        if (w.ok) System.err.println(
-          f"[bench] $name warm run $r: ${w.secs}%.2f s (cold ${cold.secs}%.2f)")
-        if (!w.ok) best else if (best < 0) w.secs else math.min(best, w.secs)
-      }
-      QR(name, fn, cold, cold, warm, warm, contaminated,
-        coldSuspect = contaminated, warmSuspect = warmSuspect)
-    }
-    val retryRaw = scala.collection.mutable.LinkedHashMap.empty[String, Exec]
-    val afterRetry = firstPass.map { qr =>
-      val overThreshold =
-        retryThreshold(anchors.get(qr.name)).exists(qr.cold.secs > _)
-      val degraded = qr.cold.ok && degradedRetryNeeded(qr.cold.secs,
-        anchors.get(qr.name), windowDegraded(qr.cold),
-        nearWave = inDegradedWave(qr.cold))
-      val needsRetry = doRetry &&
-        (!qr.cold.ok || qr.contaminated || overThreshold || degraded)
-      if (!needsRetry) qr.copy(coldSuspect = false)
+
+    // sorted name order: deterministic run order across code changes
+    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
+    val first = queries.map { case (name, fn) => pair(name, fn, retried = false) }
+    val results = first.zip(queries).map { case (r, (name, fn)) =>
+      if (r.cold.ok && r.warm.ok) r
       else {
-        val why =
-          if (!qr.cold.ok) "failed"
-          else if (qr.contaminated && !overThreshold && !degraded)
-            "contaminated"
-          else if (overThreshold) f"cold ${qr.cold.secs}%.2f s > 3x anchor"
-          else if (windowDegraded(qr.cold))
-            f"cold ${qr.cold.secs}%.2f s in a degraded window " +
-              f"(mark ${qr.cold.mark}%.0f vs min $minMark%.0f ms, " +
-              f"ext ${qr.cold.ext}%.1f%%)"
-          else f"cold ${qr.cold.secs}%.2f s > 1.5x anchor within 60 s " +
-            "of a degraded window"
-        System.err.println(s"[bench] retrying ${qr.name} ($why)")
-        awaitCleanWindow()
-        // a retry launched while the PREVIOUS retry's kill still lingers
-        // is itself suspect — if it wins, the final pass re-measures it
-        val retrySuspect = lingering
-        val re = execute(qr.name, "retry", qr.fn)
-        lingering = re.lingered
-        noteWave(re)
-        retryRaw(qr.name) = re
-        if (re.ok) System.err.println(
-          f"[bench] ${qr.name} retry: ${re.secs}%.2f s (first ${qr.cold.secs}%.2f)")
-        val better = re.ok && (!qr.cold.ok || re.secs < qr.cold.secs)
-        val cold2 = if (better) re.copy(lingered = false) else qr.cold
-        val suspect2 =
-          if (better) retrySuspect
-          else qr.cold.ok && qr.contaminated // kept a contaminated first pass
-        qr.copy(cold = cold2, coldSuspect = suspect2)
+        System.err.println(s"[bench] retrying $name")
+        pair(name, fn, retried = true)
       }
     }
-    // Warm retry pass (VERDICT r8 task 2): one post-sweep warm re-run of
-    // every query whose warm figure is missing, suspect, above the cold
-    // retry bar, or above its own headline cold (steady-state slower than
-    // cold is the BENCH_r08 951.9-s-warm-vs-618.4-s-cold impossibility).
-    // Headline warm = min over all successful warm executions; the raw
-    // pre-retry warm stays in the "warm_first" map.
-    val warmRetryRaw = scala.collection.mutable.LinkedHashMap.empty[String, Exec]
-    val afterWarm =
-      if (repeat < 2) afterRetry
-      else afterRetry.map { qr =>
-        val needs = doRetry && qr.cold.ok && warmRetryNeeded(
-          qr.warm, qr.cold.secs, anchors.get(qr.name),
-          qr.warmSuspect || lingering)
-        if (!needs) qr
-        else {
-          val why =
-            if (qr.warm < 0) "no successful warm pass"
-            else if (qr.warmSuspect) "warm ran behind a lingering kill"
-            else f"warm ${qr.warm}%.2f s vs cold ${qr.cold.secs}%.2f s"
-          System.err.println(s"[bench] warm-retrying ${qr.name} ($why)")
-          awaitCleanWindow()
-          val w = execute(qr.name, "warm-retry", qr.fn)
-          lingering = w.lingered
-          noteWave(w)
-          warmRetryRaw(qr.name) = w
-          if (w.ok) System.err.println(
-            f"[bench] ${qr.name} warm-retry: ${w.secs}%.2f s (first warm ${qr.warm}%.2f)")
-          val warm2 =
-            if (!w.ok) qr.warm
-            else if (qr.warm < 0) w.secs else math.min(qr.warm, w.secs)
-          qr.copy(warm = warm2, warmSuspect = false)
-        }
-      }
-    // Final re-retry pass (VERDICT r8 task 4): a query whose retry ALSO
-    // failed or still exceeded its threshold gets ONE more measurement at
-    // the very end of the run — the furthest decorrelation from the
-    // degraded window the earlier passes shared. r8's q164 kept 81.1 s of
-    // pure contamination (clean: 2.17 s) because its single retry was
-    // deadline-killed in the same window. Bounded: ≤ 1 extra execution
-    // per query, and only for queries the earlier passes already flagged.
-    val retry2Raw = scala.collection.mutable.LinkedHashMap.empty[String, Exec]
-    val results = afterWarm.map { qr =>
-      val stillDegraded = qr.cold.ok && degradedRetryNeeded(qr.cold.secs,
-        anchors.get(qr.name), windowDegraded(qr.cold),
-        nearWave = inDegradedWave(qr.cold))
-      val needs = doRetry && (stillDegraded ||
-        finalRetryNeeded(qr.cold.ok, qr.cold.secs,
-          anchors.get(qr.name), qr.coldSuspect || lingering))
-      if (!needs) qr
-      else {
-        val why =
-          if (!qr.cold.ok) "still failed"
-          else if (qr.coldSuspect) "headline measured under contamination"
-          else if (stillDegraded)
-            f"headline ${qr.cold.secs}%.2f s still from a degraded window"
-          else f"headline ${qr.cold.secs}%.2f s still > 3x anchor"
-        System.err.println(s"[bench] final re-retry ${qr.name} ($why)")
-        awaitCleanWindow()
-        val re = execute(qr.name, "retry2", qr.fn)
-        lingering = re.lingered
-        noteWave(re)
-        retry2Raw(qr.name) = re
-        if (re.ok) System.err.println(
-          f"[bench] ${qr.name} retry2: ${re.secs}%.2f s (headline was ${qr.cold.secs}%.2f)")
-        val better = re.ok && (!qr.cold.ok || re.secs < qr.cold.secs)
-        val cold3 = if (better) re.copy(lingered = false) else qr.cold
-        // a query that only produced a successful cold HERE has no warm
-        // measurement; give it one so the warm total stays complete
-        val warm3 =
-          if (!(better && !qr.cold.ok) || qr.warm >= 0 || repeat < 2) qr.warm
-          else {
-            val w = execute(qr.name, "retry2-warm", qr.fn)
-            lingering = w.lingered
-            noteWave(w)
-            if (w.ok) { warmRetryRaw(qr.name) = w; w.secs } else -1.0
-          }
-        qr.copy(cold = cold3, warm = warm3, coldSuspect = false)
-      }
-    }
-    def fmt(v: Double) = f"$v%.3f"
-    def jmap(vs: Seq[(String, String)]) =
-      vs.map { case (k, v) => s"\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-    def dmap(vs: Seq[(String, Double)]) = jmap(vs.map { case (k, v) => k -> fmt(v) })
-    // a failed query must not vanish from the headline: when any query is
-    // still failed AFTER the retry passes the total is gate-invalid (-1),
-    // not a silently-partial sum (BENCH_r07 under-reported by excluding
-    // its failed-slow query)
-    val nFailed = results.count(!_.cold.ok)
-    val coldSum = results.filter(_.cold.ok).map(_.cold.secs).sum
-    val total = fmt(if (nFailed > 0) -1.0 else coldSum)
-    val warmTotal = fmt(results.map(_.warm).filter(_ >= 0).sum)
-    // the UNRETRIED single-throw total (round-10 ADVICE): the headline
-    // "value" is a min over up to 3 executions for retried queries, so
-    // it is not comparable to pre-round-10 single-throw artifacts;
-    // "first_value" is. When first passes failed, the sum over the
-    // non-failed first throws is published WITH the failed names in
-    // "first_failed" (VERDICT r11 task 3) — the old -1 sentinel
-    // destroyed single-throw comparability on exactly the degraded runs
-    // that need adjudication, while the headline's own -1 rule already
-    // guards the gate. A non-empty first_failed list marks the figure
-    // partial; readers exclude those queries from the comparison run.
-    val firstFailedNames = results.filter(!_.first.ok).map(_.name)
-    val firstValue = fmt(results.filter(_.first.ok).map(_.first.secs).sum)
-    val firstFailed =
-      firstFailedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
-    def clamp(e: Exec): Double = if (e.ok) e.secs else e.secs.min(-1.0)
-    val colds = results.map(qr => qr.name -> clamp(qr.cold))
-    val qsFull = dmap(colds)
-    val firstFull = dmap(results.map(qr => qr.name -> clamp(qr.first)))
-    val warmFull = dmap(results.map(qr => qr.name -> qr.warm))
-    val warmFirstFull = dmap(results.map(qr => qr.name -> qr.warmFirst))
-    val stealFull = dmap(results.map(qr => qr.name -> qr.cold.steal))
-    // the headline execution's window indicator (max of its bracketing
-    // spin probes, ms) — a per-query entry far above hostmark_min proves
-    // from the artifact that the measurement sat in a degraded window
-    val markFull = dmap(results.map(qr => qr.name -> qr.cold.mark))
-    // external CPU share of each headline window (guest co-residents)
-    val extFull = dmap(results.map(qr => qr.name -> qr.cold.ext))
-    val nDegraded = results.count(qr => qr.cold.ok && windowDegraded(qr.cold))
-    val jiffiesFull = jmap(results.map(qr => qr.name -> qr.cold.jiffies.toString))
-    val retryFull = dmap(retryRaw.toSeq.map { case (k, e) => k -> clamp(e) })
-    val retry2Full = dmap(retry2Raw.toSeq.map { case (k, e) => k -> clamp(e) })
-    val warmRetryFull = dmap(warmRetryRaw.toSeq.map { case (k, e) => k -> clamp(e) })
-    // run-level steal share, jiffy-weighted: Σ stealΔ / Σ jiffyΔ over the
-    // HEADLINE cold passes exactly once each — results already carry the
-    // winning exec (first or retry or retry2), so summing retry maps on
-    // top would double-count winners and count losing passes that never
-    // reached the headline (the r8 ADVICE finding)
-    val headlineExecs = results.map(_.cold)
-    val stealJ = headlineExecs.map(_.stealJ).sum
-    val jiffyJ = headlineExecs.map(_.jiffies).sum
-    val stealRun = if (jiffyJ <= 0) -1.0 else 100.0 * stealJ / jiffyJ
-    val counts = s""""n_queries":${results.size},"n_failed":$nFailed,""" +
-      s""""n_retried":${retryRaw.size},"first_value":$firstValue,""" +
-      s""""first_failed":$firstFailed"""
-    val countsDetail = counts +
-      s""","n_warm_retried":${warmRetryRaw.size},"n_retried2":${retry2Raw.size},"n_degraded":$nDegraded,"n_regated":$nRegated,"hostmark_min":${fmt(minMark)}"""
-    val full =
-      s"""{"metric":"total","value":$total,"warm_value":$warmTotal,"unit":"sec",$countsDetail,"steal_pct":${fmt(stealRun)},"queries":$qsFull,"first":$firstFull,"warm":$warmFull,"warm_first":$warmFirstFull,"steal":$stealFull,"hostmark":$markFull,"ext":$extFull,"jiffies":$jiffiesFull,"retry":$retryFull,"retry2":$retry2Full,"warm_retry":$warmRetryFull,"sf":"$sfDir"}"""
-    // The driver harvests only the LAST ~2000 chars of stdout and tries to
-    // parse a JSON line out of it. With 150+ queries the full per-query map
-    // is ~4.5 KB, so a single fat line gets truncated at the front and never
-    // parses (BENCH_r01..r03 all show "parsed": null). So: the complete
-    // detail goes to a file + stderr, and the FINAL stdout line is a compact
-    // JSON — total plus the slowest queries, capped so line + sbt's trailing
-    // "[success] ..." stay inside the tail window.
     try {
       val w = new java.io.PrintWriter("BENCH_DETAIL.json")
-      try w.println(full) finally w.close()
+      try w.println(detailJson(results, sfDir)) finally w.close()
     } catch { case e: Throwable =>
       System.err.println(s"[bench] detail write failed: ${e.getMessage}")
     }
-    System.err.println(full)
-    // VERDICT r19 item 2: the driver's tail window is ~2000 chars and must
-    // contain at least one COMPLETE bare JSON line (build.sbt's
-    // run/outputStrategy strips the "[info] " prefix that broke the parse
-    // in r01–r19). Budget the compact line so that compact line + minimal
-    // line + sbt's trailing "[success] ..." banner (~75 chars) all fit:
-    // 600-char query map + ~420 chars of fixed fields ≈ 1020, leaving
-    // ~900 chars of slack.
-    val budget = 600 // chars for the "queries" map in the stdout line
-    val slowestFirst = colds.sortBy(-_._2)
-      .map { case (k, c) => s"\"" + k + "\":" + fmt(c) }
-    val kept = scala.collection.mutable.ArrayBuffer.empty[String]
-    var used = 0
-    slowestFirst.foreach { s =>
-      if (used + s.length + 1 <= budget) { kept += s; used += s.length + 1 }
-    }
-    val qsTop = kept.mkString("{", ",", "}")
-    // Minimal line first (no query map, ~350 chars): even a parser that
-    // only looks at the first complete JSON line in the tail gets the
-    // totals. Strictly additive — the full per-query data lives in
-    // BENCH_DETAIL.json and on stderr as before.
-    println(
-      s"""{"metric":"total","value":$total,"warm_value":$warmTotal,"unit":"sec",$counts,"steal_pct":${fmt(stealRun)},"sf":"$sfDir","detail":"BENCH_DETAIL.json"}""")
-    // Compact line LAST so a parser that takes the last parseable line
-    // gets the per-query map (what PERF's per_query/scaling tables need).
-    println(
-      s"""{"metric":"total","value":$total,"warm_value":$warmTotal,"unit":"sec",$counts,"n_degraded":$nDegraded,"hostmark_min":${fmt(minMark)},"steal_pct":${fmt(stealRun)},"queries":$qsTop,"sf":"$sfDir","detail":"BENCH_DETAIL.json"}""")
+    println(summaryLine(results, sfDir))
     spark.stop()
   }
 }

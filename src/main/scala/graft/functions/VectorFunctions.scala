@@ -67,13 +67,12 @@ object VectorFunctions {
   /** [[vecSum]]'s exact-integer twin over ARRAY<BIGINT> rows (see
     * [[graft.functions.expressions.VectorSumLongAgg]]): BIGINT adds are
     * associative, so fixed-point vector sums (the q241 Lloyd lattice)
-    * reproduce bit-for-bit under any partitioning. */
+    * reproduce bit-for-bit under any partitioning. The argument must
+    * already be ARRAY<BIGINT>: an ARRAY<DOUBLE> fails analysis rather than
+    * being silently truncated to integers. */
   def vecSumLong(a: Column): Column = {
     import org.apache.spark.sql.GraftSqlBridge.{column, expression}
-    import org.apache.spark.sql.catalyst.expressions.Cast
-    import org.apache.spark.sql.types.{ArrayType, LongType}
-    column(graft.functions.expressions.VectorSumLongAgg(
-      Cast(expression(a), ArrayType(LongType)))
+    column(graft.functions.expressions.VectorSumLongAgg(expression(a))
       .toAggregateExpression())
   }
 

@@ -9,8 +9,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Reference: ALSKafkaConsumer.java:67-70 consumes a topic as a string
   * stream; ALSKafkaProducer.java:29-37 / SGD.java:73-81 publish with
   * `setFlushOnCheckpoint(true)` — at-least-once. Spark's Kafka source/sink
-  * give the same guarantee (at-least-once on the sink; exactly-once
-  * downstream via the ServingStore's idempotent upsert).
+  * give the same guarantee: at-least-once on the sink. Downstream, a
+  * replay is harmless only for [[ModelConsumer]], whose store upsert keeps
+  * the seq-ordered latest value. It is NOT harmless for [[SgdUpdater]]: a
+  * replayed rating batch takes a second SGD step on the store it already
+  * updated.
   *
   * NOTE: requires the `spark-sql-kafka-0-10` connector on the classpath;
   * this container ships without it (verified against the offline coursier
@@ -104,27 +107,12 @@ object KafkaIO {
       .start()
 
   /** End-to-end serve wiring: topic → latest-per-key state → store.
-    * The Kafka offset is the seq, so replayed batches upsert idempotently. */
+    * The Kafka offset is the per-key seq, so a replayed older record loses
+    * to newer state. KafkaIOSpec drives the same [[ModelConsumer.serveTo]]
+    * call on the wire-schema twin. */
   def serveFromKafka(spark: SparkSession, bootstrap: String, topic: String,
                      store: ServingStore.FactorStore,
                      checkpointDir: String): StreamingQuery =
-    serveFromLines(spark, readRecords(spark, bootstrap, topic), store,
-      checkpointDir)
-
-  /** The connector-independent tail of [[serveFromKafka]]: any (value,
-    * offset, …) record stream → latest-per-key → idempotent store upsert.
-    * KafkaIOSpec drives it end-to-end on the wire-schema twin. */
-  def serveFromLines(spark: SparkSession, lines: DataFrame,
-                     store: ServingStore.FactorStore,
-                     checkpointDir: String): StreamingQuery = {
-    val keyed = ModelConsumer.latestPerKey(spark,
-      ModelConsumer.parse(lines, seqCol = Some("offset")))
-    keyed.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[ModelConsumer.KeyedRecord], _: Long) =>
-        ServingStore.upsertBatch(store, batch.toDF())
-      }
-      .start()
-  }
+    ModelConsumer.serveTo(spark, readRecords(spark, bootstrap, topic), store,
+      Some(checkpointDir), seqCol = Some("offset"))
 }

@@ -83,11 +83,14 @@ object ModelConsumer {
   /** Wire a parsed+keyed stream into a store: per micro-batch, upsert the
     * changed keys. Checkpointing + restart supervision come from the
     * streaming engine (`checkpointLocation`), matching the reference's
-    * checkpoint/fixed-delay-restart envelope (ALSKafkaConsumer.java:44-51). */
+    * checkpoint/fixed-delay-restart envelope (ALSKafkaConsumer.java:44-51).
+    * `seqCol` is passed to [[parse]]: a Kafka record stream uses
+    * Some("offset"), so a replayed older offset loses to newer state. */
   def serveTo(spark: SparkSession, lines: DataFrame,
               store: ServingStore.FactorStore,
-              checkpointDir: Option[String] = None): StreamingQuery = {
-    val keyed = latestPerKey(spark, parse(lines))
+              checkpointDir: Option[String] = None,
+              seqCol: Option[String] = None): StreamingQuery = {
+    val keyed = latestPerKey(spark, parse(lines, seqCol))
     val w: DataStreamWriter[KeyedRecord] = keyed.writeStream
       .outputMode(OutputMode.Update)
       .foreachBatch { (batch: Dataset[KeyedRecord], _: Long) =>

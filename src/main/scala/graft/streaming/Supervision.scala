@@ -16,8 +16,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * up to `maxRetries` times. State survives restarts exactly as in the
   * reference because the factory starts from the same
   * `checkpointLocation` — offsets and keyed state recover, and the
-  * ServingStore upsert is idempotent, so replayed batches are harmless
-  * (the at-least-once envelope of SURVEY.md §2.9).
+  * restarted query replays the failed micro-batch (the at-least-once
+  * envelope of SURVEY.md §2.9). That replay is harmless for
+  * [[ModelConsumer]]: its store upsert keeps the seq-ordered latest value,
+  * so applying a batch twice gives the same store. It is NOT harmless for
+  * [[SgdUpdater]]: its step reads the store it writes and ignores the
+  * batch id, so keys already updated by the failed attempt take a second
+  * step.
   *
   * The retry budget is TOTAL, matching Flink's fixed-delay semantics; a
   * clean `stop()` never consumes it.

@@ -7,7 +7,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 
-import graft.streaming.{KafkaIO, ServingStore}
+import graft.streaming.{KafkaIO, ModelConsumer, ServingStore}
 
 /** Analyzer-level coverage of the Kafka edges (SURVEY.md §2.1 S8/S9).
   *
@@ -58,7 +58,7 @@ class KafkaIOSpec extends SparkSpec {
   }
 
   test("serve chain runs end-to-end on a wire-schema twin stream") {
-    // the connector-independent tail of serveFromKafka, driven by a
+    // serveFromKafka's ModelConsumer.serveTo call, driven by a
     // MemoryStream carrying the SAME projected record shape, offsets used
     // as per-key seq: replay of an older offset must lose
     implicit val sqlCtx = spark.sqlContext
@@ -69,8 +69,8 @@ class KafkaIOSpec extends SparkSpec {
     assert(raw.isStreaming)
     val store = ServingStore.factorStore()
     val dir = java.nio.file.Files.createTempDirectory("kafka-twin").toString
-    val q = KafkaIO.serveFromLines(spark, KafkaIO.projectRecords(raw),
-      store, dir)
+    val q = ModelConsumer.serveTo(spark, KafkaIO.projectRecords(raw),
+      store, Some(dir), seqCol = Some("offset"))
     try {
       def rec(s: String, off: Long) = ("k".getBytes(UTF_8), s.getBytes(UTF_8),
         "models", 0, off, new Timestamp(1700000000000L), 0)

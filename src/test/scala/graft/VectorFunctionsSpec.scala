@@ -68,6 +68,17 @@ class VectorFunctionsSpec extends SparkSpec {
     assert(empty.isEmpty)
   }
 
+  test("vecSumLong rejects ARRAY<DOUBLE> instead of truncating it") {
+    import spark.implicits._
+    val df = Seq((0, Array(1.5, 2.5))).toDF("k", "v")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      df.groupBy($"k")
+        .agg(graft.functions.VectorFunctions.vecSumLong($"v").as("s"))
+        .collect()
+    }
+    assert(e.getMessage.contains("ARRAY<BIGINT>"), e.getMessage)
+  }
+
   import spark.implicits._
 
   private def arr(xs: Double*) = array(xs.map(lit): _*)
