@@ -91,6 +91,16 @@ object VectorFunctions {
     when(den === 0.0, lit(null)).otherwise(dot(a, b) / den)
   }
 
+  /** [[cosineOrNull]] from precomputed squared norms (`n2a`, `n2b`: one dot
+    * per pair), rounded to 4 places — the similarity lattice shared by the
+    * retrieval packs, IVF assignment and [[graft.streaming.AnnServe]], so
+    * every score they compare is computed the same way. */
+  def cosineRound4(va: Column, n2a: Column, vb: Column, n2b: Column): Column = {
+    val denom = sqrt(n2a) * sqrt(n2b)
+    round(when(denom === 0.0, lit(null).cast("double"))
+      .otherwise(dot(va, vb) / denom), 4)
+  }
+
   /** DuckDB twin of [[cosineOrNull]] over ALREADY-DOUBLE list columns of
     * length `dim` (callers cast FLOAT[] once in a CTE; list_transform +
     * list_sum preserves the same sequential fold order as the engine's

@@ -72,11 +72,10 @@ object AlsPack extends QueryPack {
         .select(col("user_id"), col("item_id"))
         .filter((col("user_id") + col("item_id")) % 97 === 0)
         .distinct()
-      pairs
-        .join(broadcast(Ratings.userFactors(s, dir, K)), "user_id")
-        .join(broadcast(Ratings.itemFactors(s, dir, K)), "item_id")
+      AlsScoring.predictions(pairs,
+        Ratings.userFactors(s, dir, K), Ratings.itemFactors(s, dir, K))
         .select(col("user_id"), col("item_id"),
-          round(dot(col("uf"), col("itf")), 6).as("prediction"))
+          round(col("prediction"), 6).as("prediction"))
         .orderBy("user_id", "item_id")
     }),
 

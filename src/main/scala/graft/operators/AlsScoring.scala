@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
@@ -15,24 +15,28 @@ import graft.functions.VectorFunctions._
   */
 object AlsScoring {
 
-  /** J2/J5: score every rating with dot(userFactors, itemFactors).
-    * Model tables are broadcast — at 100 TB fact scale the model stays
-    * ~O(users+items) and this remains a map-side join. */
-  def predictions(ratings: DataFrame, userF: DataFrame, itemF: DataFrame): DataFrame =
-    ratings
-      .join(broadcast(userF), "user_id")
-      .join(broadcast(itemF), "item_id")
+  /** J2/J5: score every rating with dot(userFactors, itemFactors) — the one
+    * rating × factors join, shared by the batch queries and the streaming
+    * SGD/MSE loops. Model tables are broadcast — at 100 TB fact scale the
+    * model stays ~O(users+items) and this remains a map-side join.
+    *
+    * Per side: with no mean the join is inner (a rating whose key is absent
+    * is dropped); with a mean it is left-outer and the vector column
+    * (`uf` / `itf`) is coalesced to the mean — the reference's
+    * `orElse(MEAN)` (als-ms/SGD.java:142-147,227, MSE.java:129-158). */
+  def predictions(ratings: DataFrame, userF: DataFrame, itemF: DataFrame,
+                  meanU: Option[Array[Double]] = None,
+                  meanI: Option[Array[Double]] = None): DataFrame = {
+    def side(base: DataFrame, model: DataFrame, key: String, vec: String,
+             mean: Option[Array[Double]]): DataFrame = mean match {
+      case Some(m) => base.join(broadcast(model), Seq(key), "left_outer")
+        .withColumn(vec, coalesce(col(vec), array(m.toSeq.map(lit): _*)))
+      case None => base.join(broadcast(model), key)
+    }
+    side(side(ratings, userF, "user_id", "uf", meanU),
+      itemF, "item_id", "itf", meanI)
       .withColumn("prediction", dot(col("uf"), col("itf")))
-
-  /** Left-outer variant with mean-vector fallback — the reference's
-    * `orElse(MEAN)` semantics (als-ms/SGD.java:142-147,227). */
-  def predictionsWithFallback(ratings: DataFrame, userF: DataFrame,
-                              itemF: DataFrame, meanU: Column, meanI: Column): DataFrame =
-    ratings
-      .join(broadcast(userF), Seq("user_id"), "left_outer")
-      .join(broadcast(itemF), Seq("item_id"), "left_outer")
-      .withColumn("prediction",
-        dot(coalesce(col("uf"), meanU), coalesce(col("itf"), meanI)))
+  }
 
   /** A4: mean squared error of (rating, prediction). MSE.java:52-69.
     * Squared via multiplication (not pow) so each row's error term is

@@ -419,27 +419,36 @@ object AuditPack extends QueryPack {
       // column gets its own pruned single-column scan (parquet reads the
       // same total bytes) + one narrow groupBy(value) from which n, ndv,
       // min, max and the mean all derive. The mean is EXACT-integer: all
-      // four profiled columns are exact multiples of 0.01 (verified at
-      // every SF: max |v*100 − round(v*100)| < 1e-9), so Σ cents is a
+      // four profiled columns are exact multiples of 0.01, so Σ cents is a
       // lossless BIGINT and cents/100.0/n is the true mean to 1 ulp —
       // bit-stable under any partitioning, unlike a float Σ. Oracle
       // hashes unchanged (proof: round6(float avg) == round6(cents avg)
-      // checked engine-side at sf0.001/0.01/0.1 before the switch).
+      // checked engine-side at sf0.001/0.01/0.1 before the switch). The
+      // same aggregate checks the cents property on every distinct value
+      // and raises an error when it fails, rather than report a mean that
+      // silently dropped sub-cent digits. Empty input reports
+      // n_nonnull = 0, as count() does.
       ProfileCols.map { c =>
+        val cents = col("v") * 100
         li.select(col(c).as("v"))
           .groupBy(col("v")).agg(count(lit(1)).as("cnt"))
           .agg(
-            sum(when(col("v").isNotNull, col("cnt")).otherwise(0L)).as("n"),
+            coalesce(sum(when(col("v").isNotNull, col("cnt")).otherwise(0L)),
+              lit(0L)).as("n"),
             count(col("v")).as("ndv"),
             round(min(col("v")), 6).as("min_v"),
             round(max(col("v")), 6).as("max_v"),
             (sum(when(col("v").isNotNull,
-              round(col("v") * 100, 0).cast("long") * col("cnt")))
+              round(cents, 0).cast("long") * col("cnt")))
               .cast("double") / 100.0 /
-              sum(when(col("v").isNotNull, col("cnt")))).as("avg_raw"))
+              sum(when(col("v").isNotNull, col("cnt")))).as("avg_raw"),
+            max(abs(cents - round(cents, 0))).as("cents_off"))
           .select(lit(c).as("col_name"), col("n").as("n_nonnull"),
             col("ndv"), col("min_v"), col("max_v"),
-            round(col("avg_raw"), 6).as("avg_v"))
+            when(col("cents_off") >= 1e-9, raise_error(lit(
+              s"q104_profile: $c holds a value that is not a whole number " +
+                "of cents, so its exact-cents mean would be wrong")))
+              .otherwise(round(col("avg_raw"), 6)).as("avg_v"))
       }.reduce(_ unionAll _)
         .orderBy("col_name")
     }),

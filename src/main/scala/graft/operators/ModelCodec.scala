@@ -54,13 +54,18 @@ object ModelCodec extends QueryPack {
   def svmStateKey(rec: Column): Column =
     concat_ws("-", try_element_at(split(rec, ","), lit(1)), lit("W"))
 
-  /** Null-safe parse of "user,item,rating" lines (the SGD/MSE wire input,
-    * SGD.java:96-110): malformed fields become nulls and the row is
-    * dropped — a poison record must not kill a streaming query. */
-  def parseRatingLines(lines: Column): Seq[Column] = Seq(
-    try_element_at(split(lines, ","), lit(1)).try_cast("long").as("user_id"),
-    try_element_at(split(lines, ","), lit(2)).try_cast("long").as("item_id"),
-    try_element_at(split(lines, ","), lit(3)).try_cast("double").as("rating"))
+  /** "user,item,rating" lines in a `value` column (the SGD/MSE wire input,
+    * SGD.java:96-110) -> (user_id, item_id, rating). Null-safe: a malformed
+    * field parses to null and its row is dropped — a poison record must not
+    * kill a streaming query, nor produce a null state key downstream. */
+  def parseRatings(lines: DataFrame): DataFrame = {
+    def field(i: Int, tpe: String) =
+      try_element_at(split(col("value"), ","), lit(i)).try_cast(tpe)
+    lines.select(field(1, "long").as("user_id"), field(2, "long").as("item_id"),
+        field(3, "double").as("rating"))
+      .filter(col("user_id").isNotNull && col("item_id").isNotNull
+        && col("rating").isNotNull)
+  }
 
   // ---- driver-contract queries -------------------------------------------
 

@@ -1,11 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QueryPack
 import graft.functions.Portable
-import graft.functions.VectorFunctions.{dot, sqNorm, toDoubleArray}
+import graft.functions.VectorFunctions.{cosineRound4, sqNorm, toDoubleArray}
 import graft.sources.Tables
 
 /** Result-set shaping and preference-fitting operators: MMR diversity
@@ -51,15 +51,6 @@ object RerankPack extends QueryPack {
       .filter(col("vec_id") % 50 === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
 
-  /** round-4 cosine between two (vec, n2) column pairs — the exact
-    * composition [[Similarity]] uses, so candidate-vs-candidate penalties
-    * live on the same lattice as the relevance scores. */
-  private def sim4(va: Column, n2a: Column, vb: Column, n2b: Column): Column = {
-    val denom = sqrt(n2a) * sqrt(n2b)
-    round(when(denom === 0.0, lit(null).cast("double"))
-      .otherwise(dot(va, vb) / denom), 4)
-  }
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Maximal-marginal-relevance re-rank: from each query's exact top-C
@@ -100,7 +91,7 @@ object RerankPack extends QueryPack {
         val scored = remaining
           .join(broadcast(sel.drop("id")), Seq("qid"))
           .groupBy(col("qid"), col("id"), col("rel"), col("v"), col("n2"))
-          .agg(max(sim4(col("v"), col("n2"), col("sv"), col("sn2")))
+          .agg(max(cosineRound4(col("v"), col("n2"), col("sv"), col("sn2")))
             .as("pen"))
           .withColumn("mmr", Portable.snap6(
             lit(MmrLambda) * col("rel") - lit(1.0 - MmrLambda) * col("pen")))
@@ -358,7 +349,7 @@ object RerankPack extends QueryPack {
         e.crossJoin(broadcast(cb))
           .select(col("id"), col("v"),
             array_max(transform(col("cs"), c => struct(
-              sim4(col("v"), col("n2"), c.getField("cv"),
+              cosineRound4(col("v"), col("n2"), c.getField("cv"),
                 c.getField("n2c")).as("s"),
               negate(c.getField("cid")).as("m"),
               c.getField("cid").as("cid"))))

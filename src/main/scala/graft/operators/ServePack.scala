@@ -17,7 +17,9 @@ import graft.streaming.{ModelConsumer, SgdUpdater}
   *    exactly this.
   *  - q17: one mini-batch SGD step (SGD.java:160-217 as dataflow) — updated
   *    user vectors after a single gradient step from the deterministic
-  *    factor fixture.
+  *    factor fixture. It calls the same [[graft.streaming.SgdUpdater.step]]
+  *    that [[graft.streaming.SgdUpdater.updateLoop]] runs per micro-batch,
+  *    with no MEAN rows, so both joins stay inner as in the oracle.
   */
 object ServePack extends QueryPack {
 
@@ -47,10 +49,10 @@ object ServePack extends QueryPack {
     // One SGD step on the user side; emit the first two updated components
     // for a deterministic sample of users.
     "q17_sgd_step" -> ((s, dir) => {
-      SgdUpdater.userStep(
-        Ratings.ratings(s, dir),
-        Ratings.userFactors(s, dir, K),
-        Ratings.itemFactors(s, dir, K), lr = Lr)
+      val userF = Ratings.userFactors(s, dir, K)
+      val itemF = Ratings.itemFactors(s, dir, K)
+      val scored = AlsScoring.predictions(Ratings.ratings(s, dir), userF, itemF)
+      SgdUpdater.step(scored, userF, itemF, lr = Lr)._1
         .filter(col("user_id") % 50 === 7)
         .select(col("user_id"),
           round(element_at(col("uf"), 1), 6).as("u1"),

@@ -51,11 +51,8 @@ object Similarity {
   /** Cosine from precomputed sides — one dot per pair. A zero-norm vector
     * has no defined cosine: null (ranked last, never "similar") instead of
     * an ANSI division error killing the scan. */
-  private def pairSim(sa: String, sb: String) = {
-    val denom = sqrt(col(s"n2$sa")) * sqrt(col(s"n2$sb"))
-    round(when(denom === 0.0, lit(null).cast("double"))
-      .otherwise(dot(col(s"vec$sa"), col(s"vec$sb")) / denom), 4)
-  }
+  private def pairSim(sa: String, sb: String) =
+    cosineRound4(col(s"vec$sa"), col(s"n2$sa"), col(s"vec$sb"), col(s"n2$sb"))
 
   /** Exact top-k neighbors per query by cosine similarity. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
@@ -132,11 +129,8 @@ object Similarity {
     require(centroidsLocal.nonEmpty, "need at least one centroid")
     val d = prepped(data, idCol, vecCol, "_d")
     val cands = centroidsLocal.map { case (cid, cvec) =>
-      val cv = lit(cvec)
-      val n2c = cvec.map(x => x * x).sum
-      val denom = sqrt(col("n2_d")) * math.sqrt(n2c)
-      val sim = round(when(denom === 0.0, lit(null).cast("double"))
-        .otherwise(dot(col("vec_d"), cv) / denom), 4)
+      val sim = cosineRound4(col("vec_d"), col("n2_d"),
+        lit(cvec), lit(cvec.map(x => x * x).sum))
       struct(coalesce(sim, lit(-2.0)).as("s"), lit(-cid).as("nid"),
         lit(cid).as("cid"))
     }

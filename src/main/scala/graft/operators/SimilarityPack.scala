@@ -255,10 +255,6 @@ object SimilarityPack extends QueryPack {
         .select(lit(0).as("step"), col("id").as("cid"),
           col("vec").as("cvec"), col("n2").as("cn2"),
           lit(null).cast("double").as("radius"))
-      def sim(cv: org.apache.spark.sql.Column,
-              c2: org.apache.spark.sql.Column) = round(
-        graft.functions.VectorFunctions.dot(col("vec"), cv)
-          / (sqrt(col("n2")) * sqrt(c2)), 4)
       val chosen = (1 until CoresetK).foldLeft(first) { (acc, k) =>
         // the chosen set rides as ONE broadcast row holding a struct
         // array, and the per-row nearest-center max is an array_max over
@@ -272,7 +268,8 @@ object SimilarityPack extends QueryPack {
         val nearest = e.crossJoin(broadcast(centers))
           .select(col("id"), col("vec"), col("n2"),
             array_max(transform(col("cs"),
-              c => sim(c.getField("cvec"), c.getField("cn2")))).as("smax"))
+              c => graft.functions.VectorFunctions.cosineRound4(col("vec"), col("n2"),
+                c.getField("cvec"), c.getField("cn2")))).as("smax"))
         // each 1-row selection is checkpointed EAGERLY: without a
         // checkpoint, step k's plan re-executes the whole prefix chain
         // (acc appears both under `nearest` and in the union); lazy, the

@@ -40,13 +40,11 @@ object AnnServe {
       .select(col("cid"), col("id").as("id_c"),
         graft.functions.VectorFunctions.toDoubleArray(col("vec")).as("vec_c"),
         col("n2").as("n2_c"))
-    val denom = sqrt(col("n2_c")) * sqrt(col("n2_q"))
     val scored = q.join(index, "cid")
       .filter(col("id_c") =!= col("qid"))
       .select(col("qid"), col("id_c").as("id"),
-        round(when(denom === 0.0, lit(null).cast("double"))
-          .otherwise(graft.functions.VectorFunctions.dot(col("vec_c"), col("vec_q")) / denom), 4)
-          .as("sim"))
+        graft.functions.VectorFunctions.cosineRound4(
+          col("vec_c"), col("n2_c"), col("vec_q"), col("n2_q")).as("sim"))
     scored.as[(Long, Long, Option[Double])]
       .groupByKey(_._1)
       .flatMapGroupsWithState[Int, Neighbor](

@@ -7,16 +7,16 @@ package graft.streaming
   * and dot-products; SVMPredict.java:63-85 fetches one weight per feature
   * and accumulates; RangePartitionSVMPredict.java:56-106 amortizes lookups
   * per `featureId/range` bucket. Missing keys are `Optional.empty`
-  * (QueryClientHelper.java:135-137) with an optional mean-vector fallback
-  * (SGD.java:144-147).
+  * (QueryClientHelper.java:135-137); an absent user or item falls back to
+  * that side's served MEAN row (SGD.java:144-147), the same per-side rule
+  * as [[graft.operators.AlsScoring.predictions]] in the SGD and MSE loops.
   *
   * Here the store is in-process, so a "point query" is a map read; the
   * *batch* form of the same semantics is a broadcast join
   * (graft.operators.AlsScoring) — at scale the joins are the hot path and
   * this class is the interactive/serving face.
   */
-final class PredictService(store: ServingStore.FactorStore,
-                           meanVector: Option[Array[Double]] = None) {
+final class PredictService(store: ServingStore.FactorStore) {
 
   private def dot(a: Array[Double], b: Array[Double]): Double = {
     var acc = 0.0
@@ -26,10 +26,11 @@ final class PredictService(store: ServingStore.FactorStore,
     acc
   }
 
-  /** J5: ALS pair prediction. None iff a side is absent and no fallback. */
+  /** J5: ALS pair prediction. None iff a side is absent and that side's
+    * MEAN row is not served. The MEAN row is read only on a miss. */
   def predictPair(userId: Long, itemId: Long): Option[Double] = {
-    val u = store.get(s"$userId-U").orElse(meanVector)
-    val i = store.get(s"$itemId-I").orElse(meanVector)
+    val u = store.get(s"$userId-U").orElse(store.get(ServingStore.MeanU))
+    val i = store.get(s"$itemId-I").orElse(store.get(ServingStore.MeanI))
     for (uv <- u; iv <- i) yield dot(uv, iv)
   }
 

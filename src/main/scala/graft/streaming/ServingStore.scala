@@ -100,6 +100,16 @@ object ServingStore {
     * reference's `ValueState<Tuple2<String,String>>` payload but typed. */
   type FactorStore = ServingStore[String, Array[Double]]
 
+  /** State keys of the served mean vectors (ALSMeanVector.scala:35): the
+    * per-side fallback for a user or item absent from the model, read by
+    * [[PredictService]], [[SgdUpdater]] and [[StreamingEvaluator]]. */
+  val MeanU = "MEAN-U"
+  val MeanI = "MEAN-I"
+
+  /** The store's (user, item) MEAN rows; a side is None when not served. */
+  def means(store: FactorStore): (Option[Array[Double]], Option[Array[Double]]) =
+    (store.get(MeanU), store.get(MeanI))
+
   def factorStore(maxBytes: Long = TrieMapServingStore.DefaultMaxBytes)
       : TrieMapServingStore[String, Array[Double]] =
     new TrieMapServingStore[String, Array[Double]](maxBytes)

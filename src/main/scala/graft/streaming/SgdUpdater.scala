@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.VectorFunctions._
+import graft.operators.{AlsScoring, ModelCodec}
 
 /** Online matrix-factorization SGD over the served model (SURVEY.md §2.9,
   * §7.2 step 5).
@@ -16,10 +17,14 @@ import graft.functions.VectorFunctions._
   * which feeds the consumer's state: a feedback loop.
   *
   * Spark re-design: per-record RPC+update becomes a *mini-batch* gradient
-  * step as pure dataflow — each micro-batch joins against a snapshot of the
-  * model, aggregates per-key gradients (one partial-agg shuffle per side),
-  * and upserts the updated vectors into the [[ServingStore]], closing the
-  * same loop at micro-batch granularity. Gradients within a batch are
+  * step as pure dataflow. [[step]] is the one implementation: the batch
+  * query q17 calls it on a scored DataFrame, and [[updateLoop]] calls it on
+  * each micro-batch scored against a snapshot of the store — the streaming
+  * loop is the batch step run incrementally. Scoring is
+  * [[graft.operators.AlsScoring.predictions]] with the store's MEAN rows as
+  * the per-side fallback; each side's gradient is one partial-agg shuffle,
+  * and the updated vectors are upserted into the [[ServingStore]], closing
+  * the same loop at micro-batch granularity. Gradients within a batch are
   * computed from the same snapshot (the reference tolerates stale reads the
   * same way — SURVEY.md §7.4).
   *
@@ -29,113 +34,62 @@ import graft.functions.VectorFunctions._
   */
 object SgdUpdater {
 
-  /** One mini-batch SGD step for the USER side: returns updated
-    * (user_id, uf). Aggregates Σ err·itf per user — partial map-side sums,
-    * one shuffle keyed by user — then applies the axpy update. */
-  def userStep(ratings: DataFrame, userF: DataFrame, itemF: DataFrame,
-               lr: Double, lambda: Double = 0.0,
-               meanU: Option[Array[Double]] = None,
-               meanI: Option[Array[Double]] = None): DataFrame =
-    gradStep(ratings, userF, itemF, lr, lambda,
-      keyCol = "user_id", vecCol = "uf", otherVecCol = "itf", meanU, meanI)
-
-  /** Symmetric step for the ITEM side: returns updated (item_id, itf). */
-  def itemStep(ratings: DataFrame, userF: DataFrame, itemF: DataFrame,
-               lr: Double, lambda: Double = 0.0,
-               meanU: Option[Array[Double]] = None,
-               meanI: Option[Array[Double]] = None): DataFrame =
-    gradStep(ratings, userF, itemF, lr, lambda,
-      keyCol = "item_id", vecCol = "itf", otherVecCol = "uf", meanU, meanI)
-
-  private def meanCol(m: Option[Array[Double]]) =
-    m.map(v => array(v.toSeq.map(lit): _*))
-
-  /** The scored batch: ratings joined with both factor sides + err. With
-    * mean vectors present, missing keys fall back to the served MEAN rows
-    * instead of dropping the rating — the reference's orElse(MEAN)
-    * (SGD.java:142-147,227); without them the joins stay inner. */
-  def scoredBatch(ratings: DataFrame, userF: DataFrame, itemF: DataFrame,
-                  meanU: Option[Array[Double]],
-                  meanI: Option[Array[Double]]): DataFrame = {
-    def side(df: DataFrame, key: String, vec: String,
-             mean: Option[Array[Double]])(base: DataFrame): DataFrame =
-      mean match {
-        case Some(m) => base.join(broadcast(df), Seq(key), "left_outer")
-          .withColumn(vec, coalesce(col(vec), array(m.toSeq.map(lit): _*)))
-        case None => base.join(broadcast(df), key)
+  /** One mini-batch SGD step on both sides: returns the updated
+    * (user_id, uf) and (item_id, itf). `scored` is
+    * `AlsScoring.predictions(ratings, userF, itemF, meanU, meanI)` with the
+    * same model tables and means. A key that is rated but absent from the
+    * model steps from its side's mean (cold-start onboarding,
+    * SGD.java:219-234); with no mean the side's join is inner, so only keys
+    * both rated and modelled are returned. */
+  def step(scored: DataFrame, userF: DataFrame, itemF: DataFrame,
+           lr: Double, lambda: Double = 0.0,
+           meanU: Option[Array[Double]] = None,
+           meanI: Option[Array[Double]] = None): (DataFrame, DataFrame) = {
+    val err = col("rating") - col("prediction")
+    def side(keyCol: String, vecCol: String, otherVecCol: String,
+             cur: DataFrame, mean: Option[Array[Double]]): DataFrame = {
+      // Σ err·other per key in ONE aggregation: the graft_vecsum
+      // TypedImperativeAggregate keeps a mutable k-dim buffer per key with
+      // map-side combine — no posexplode row blow-up, no second shuffle.
+      val grads = scored
+        .select(col(keyCol), scale(col(otherVecCol), err).as("g"))
+        .groupBy(col(keyCol))
+        .agg(vecSum(col("g")).as("grad"))
+      // u' = u + lr*(grad − λ·u)
+      val joined = mean match {
+        case Some(m) => grads.join(broadcast(cur), Seq(keyCol), "left_outer")
+          .withColumn(vecCol, coalesce(col(vecCol), array(m.toSeq.map(lit): _*)))
+        case None => cur.join(grads, keyCol)
       }
-    side(itemF, "item_id", "itf", meanI)(
-      side(userF, "user_id", "uf", meanU)(ratings))
-      .withColumn("err", col("rating") - dot(col("uf"), col("itf")))
-  }
-
-  private def gradStep(ratings: DataFrame, userF: DataFrame, itemF: DataFrame,
-                       lr: Double, lambda: Double,
-                       keyCol: String, vecCol: String, otherVecCol: String,
-                       meanU: Option[Array[Double]],
-                       meanI: Option[Array[Double]]): DataFrame =
-    gradFromScored(scoredBatch(ratings, userF, itemF, meanU, meanI),
-      userF, itemF, lr, lambda, keyCol, vecCol, otherVecCol,
-      if (keyCol == "user_id") meanU else meanI)
-
-  /** Gradient + update from an already-scored batch (so the two sides can
-    * share one scored join — see [[updateLoop]]). */
-  private def gradFromScored(scored: DataFrame, userF: DataFrame,
-                             itemF: DataFrame, lr: Double, lambda: Double,
-                             keyCol: String, vecCol: String, otherVecCol: String,
-                             thisMean: Option[Array[Double]]): DataFrame = {
-    // Σ err·other per key in ONE aggregation: the graft_vecsum
-    // TypedImperativeAggregate keeps a mutable k-dim buffer per key with
-    // map-side combine — no posexplode row blow-up, no second shuffle.
-    val grads = scored
-      .select(col(keyCol), scale(col(otherVecCol), col("err")).as("g"))
-      .groupBy(col(keyCol))
-      .agg(vecSum(col("g")).as("grad"))
-    // u' = u + lr*(grad − λ·u); a key absent from the model starts from the
-    // MEAN vector (cold-start onboarding, SGD.java:219-234)
-    val cur = if (keyCol == "user_id") userF else itemF
-    val joined = meanCol(thisMean) match {
-      case Some(m) => grads.join(broadcast(cur), Seq(keyCol), "left_outer")
-        .withColumn(vecCol, coalesce(col(vecCol), m))
-      case None => cur.join(grads, keyCol)
+      joined.select(col(keyCol),
+        zip_with(col(vecCol), col("grad"),
+          (u, g) => u + lit(lr) * (g - lit(lambda) * u)).as(vecCol))
     }
-    joined.select(col(keyCol),
-      zip_with(col(vecCol), col("grad"),
-        (u, g) => u + lit(lr) * (g - lit(lambda) * u)).as(vecCol))
+    (side("user_id", "uf", "itf", userF, meanU),
+      side("item_id", "itf", "uf", itemF, meanI))
   }
 
   /** Wire a rating-record stream into the feedback loop: each micro-batch
-    * reads the store snapshot, takes one SGD step on both sides, and
-    * upserts updated vectors back under their "id-U"/"id-I" state keys. */
+    * reads the store snapshot, takes one [[step]], and upserts updated
+    * vectors back under their "id-U"/"id-I" state keys. */
   def updateLoop(spark: SparkSession, ratingLines: DataFrame,
                  store: ServingStore.FactorStore,
                  lr: Double, lambda: Double = 0.0,
                  checkpointDir: Option[String] = None): StreamingQuery = {
     val w = ratingLines.writeStream
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val s = batch.sparkSession
-        // null-safe parse + drop malformed rows: a poison record must not
-        // produce a null state key (TrieMap.put(null) would kill the query)
-        val ratings = batch
-          .select(graft.operators.ModelCodec.parseRatingLines(col("value")): _*)
-          .filter(col("user_id").isNotNull && col("item_id").isNotNull
-            && col("rating").isNotNull)
-        // served MEAN rows (ALSMeanVector output) drive the missing-key
-        // fallback; they are excluded from the factor tables themselves
-        val meanU = store.get("MEAN-U")
-        val meanI = store.get("MEAN-I")
-        val (userF, itemF) = ServingStore.factorFrames(s, store)
+        val ratings = ModelCodec.parseRatings(batch)
+        val (meanU, meanI) = ServingStore.means(store)
+        val (userF, itemF) = ServingStore.factorFrames(batch.sparkSession, store)
         // one scored join per batch, shared by both gradient sides
-        val scored = scoredBatch(ratings, userF, itemF, meanU, meanI)
+        val scored = AlsScoring.predictions(ratings, userF, itemF, meanU, meanI)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          val newU = gradFromScored(scored, userF, itemF, lr, lambda,
-            "user_id", "uf", "itf", meanU)
+          val (newU, newI) = step(scored, userF, itemF, lr, lambda, meanU, meanI)
+          ServingStore.upsertBatch(store, newU
             .select(concat(col("user_id"), lit("-U")).as("key"), col("uf").as("factors"))
-          val newI = gradFromScored(scored, userF, itemF, lr, lambda,
-            "item_id", "itf", "uf", meanI)
-            .select(concat(col("item_id"), lit("-I")).as("key"), col("itf").as("factors"))
-          ServingStore.upsertBatch(store, newU.unionAll(newI))
+            .unionAll(newI
+              .select(concat(col("item_id"), lit("-I")).as("key"), col("itf").as("factors"))))
         } finally scored.unpersist()
       }
     checkpointDir.fold(w)(d => w.option("checkpointLocation", d)).start()

@@ -1,18 +1,20 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.AlsScoring
+import graft.operators.{AlsScoring, ModelCodec}
 
 /** Continuous model-quality evaluation: the streaming face of the MSE job
   * (als-ms/MSE.java:26-83 runs it as a batch job against served state; here
   * each rating micro-batch is scored against the CURRENT store snapshot and
   * appends one (batch_id, mse, n) row to the metrics sink).
   *
-  * Missing user/item keys fall back to the served MEAN rows when present —
-  * the same orElse(MEAN) the batch evaluator applies (MSE.java:129-158). */
+  * Scoring is the same [[AlsScoring.predictions]] call [[SgdUpdater]]
+  * trains on: a missing user or item key falls back to that side's served
+  * MEAN row (MSE.java:129-158), and a rating is dropped only when a side is
+  * absent and that side's MEAN row is not served — so the evaluator counts
+  * exactly the ratings SGD steps on. */
 object StreamingEvaluator {
 
   /** Per-batch MSE rows are delivered to `onResult` (batchId, mse, count).
@@ -22,21 +24,13 @@ object StreamingEvaluator {
                 onResult: (Long, Double, Long) => Unit): StreamingQuery =
     ratingLines.writeStream
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val s = batch.sparkSession
         // malformed rows are dropped BEFORE scoring so the reported (mse, n)
         // are computed over the same row set
-        val ratings = batch
-          .select(graft.operators.ModelCodec.parseRatingLines(col("value")): _*)
-          .filter(col("user_id").isNotNull && col("item_id").isNotNull
-            && col("rating").isNotNull)
-        val (userF, itemF) = ServingStore.factorFrames(s, store)
-        val preds = (store.get("MEAN-U"), store.get("MEAN-I")) match {
-          case (Some(mu), Some(mi)) =>
-            AlsScoring.predictionsWithFallback(ratings, userF, itemF,
-              array(mu.toSeq.map(lit): _*), array(mi.toSeq.map(lit): _*))
-          case _ => AlsScoring.predictions(ratings, userF, itemF)
-        }
-        val row = AlsScoring.mse(preds).collect()(0)
+        val ratings = ModelCodec.parseRatings(batch)
+        val (meanU, meanI) = ServingStore.means(store)
+        val (userF, itemF) = ServingStore.factorFrames(batch.sparkSession, store)
+        val row = AlsScoring.mse(
+          AlsScoring.predictions(ratings, userF, itemF, meanU, meanI)).collect()(0)
         if (!row.isNullAt(0)) onResult(batchId, row.getDouble(0), row.getLong(1))
       }
       .start()

@@ -43,6 +43,43 @@ class AuditSpec extends SparkSpec {
     }
   }
 
+  /** A scratch dataset dir whose lineitem is `rows` of the real lineitem
+    * (same parquet schema); q104 reads nothing else. */
+  private def withLineitem(rows: org.apache.spark.sql.DataFrame)(
+      body: String => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("q104").toFile
+    try {
+      rows.write.parquet(s"$dir/lineitem.parquet")
+      body(dir.toString)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
+
+  test("q104 over an empty lineitem reports n_nonnull = 0 per column") {
+    val li = spark.read.parquet(s"$sf0/lineitem.parquet")
+    withLineitem(li.limit(0)) { dir =>
+      val p = SparkEntry.queries("q104_profile")(spark, dir).collect()
+      assert(p.length === graft.operators.AuditPack.ProfileCols.size)
+      p.foreach { r =>
+        assert(r.getAs[Long]("n_nonnull") === 0L)
+        assert(r.getAs[Long]("ndv") === 0L)
+        assert(r.isNullAt(r.fieldIndex("avg_v")))
+      }
+    }
+  }
+
+  test("q104 fails loudly when a value is not a whole number of cents") {
+    val li = spark.read.parquet(s"$sf0/lineitem.parquet")
+    val offGrid = li.limit(5)
+      .withColumn("l_discount", col("l_discount") + lit(0.001))
+    withLineitem(offGrid) { dir =>
+      val e = intercept[Exception] {
+        SparkEntry.queries("q104_profile")(spark, dir).collect()
+      }
+      assert(e.getMessage.contains("l_discount"))
+      assert(e.getMessage.contains("whole number of cents"))
+    }
+  }
+
   test("q107 MAD outliers: nonnegative spread, outliers are a strict minority") {
     SparkEntry.queries("q107_mad_outliers")(spark, sf0).collect().foreach { r =>
       assert(r.getAs[Double]("mad") >= 0.0)

@@ -53,9 +53,24 @@ class StreamingServeSpec extends SparkSpec {
     store.put("3-I", Array(0.5, 0.25))
     val svc = new PredictService(store)
     assert(svc.predictPair(7, 3).get === 1.0 * 0.5 + 2.0 * 0.25)
+    // the fallback is per side: a served MEAN-I covers absent items only
+    store.put(ServingStore.MeanI, Array(1.0, 1.0))
+    assert(svc.predictPair(7, 99).get === 3.0) // 1*1 + 2*1
+    assert(svc.predictPair(42, 3).isEmpty) // no MEAN-U served
+    store.put(ServingStore.MeanU, Array(2.0, 4.0))
+    assert(svc.predictPair(42, 3).get === 2.0 * 0.5 + 4.0 * 0.25)
+    assert(svc.predictPair(42, 99).get === 2.0 * 1.0 + 4.0 * 1.0)
+    assert(svc.predictPair(7, 3).get === 1.0 * 0.5 + 2.0 * 0.25) // served keys win
+  }
+
+  test("predict service: no MEAN row served, an absent side gives None") {
+    val store = ServingStore.factorStore()
+    store.put("7-U", Array(1.0, 2.0))
+    store.put("3-I", Array(0.5, 0.25))
+    val svc = new PredictService(store)
     assert(svc.predictPair(7, 99).isEmpty) // UnknownKeyOrNamespace -> empty
-    val withMean = new PredictService(store, meanVector = Some(Array(1.0, 1.0)))
-    assert(withMean.predictPair(7, 99).get === 3.0) // 1*1 + 2*1
+    assert(svc.predictPair(42, 3).isEmpty)
+    assert(svc.predictPair(42, 99).isEmpty)
   }
 
   test("predict service: sparse SVM accumulation skips absent features") {
@@ -84,8 +99,8 @@ class StreamingServeSpec extends SparkSpec {
   test("SGD with MEAN fallback onboards a user missing from the model") {
     implicit val sqlCtx = spark.sqlContext
     val store = ServingStore.factorStore()
-    store.put("MEAN-U", Array(0.5, 0.5))
-    store.put("MEAN-I", Array(0.5, 0.5))
+    store.put(ServingStore.MeanU, Array(0.5, 0.5))
+    store.put(ServingStore.MeanI, Array(0.5, 0.5))
     store.put("7-I", Array(1.0, 2.0)) // item exists; user 42 does not
     val in = MemoryStream[String]
     val q = SgdUpdater.updateLoop(spark, in.toDF(), store, lr = 0.1)
@@ -107,8 +122,8 @@ class StreamingServeSpec extends SparkSpec {
     val store = ServingStore.factorStore()
     store.put("1-U", Array(1.0, 0.0))
     store.put("7-I", Array(2.0, 0.0))
-    store.put("MEAN-U", Array(0.5, 0.5))
-    store.put("MEAN-I", Array(0.5, 0.5))
+    store.put(ServingStore.MeanU, Array(0.5, 0.5))
+    store.put(ServingStore.MeanI, Array(0.5, 0.5))
     val results = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Long)]
     val in = MemoryStream[String]
     val q = StreamingEvaluator.mseStream(spark, in.toDF(), store,
@@ -123,11 +138,74 @@ class StreamingServeSpec extends SparkSpec {
     assert(math.abs(mse - 1.0) < 1e-9)
   }
 
+  test("streaming evaluator falls back per side: MEAN-U served, MEAN-I not") {
+    implicit val sqlCtx = spark.sqlContext
+    val store = ServingStore.factorStore()
+    store.put("1-U", Array(1.0, 0.0))
+    store.put("7-I", Array(2.0, 0.0))
+    store.put(ServingStore.MeanU, Array(0.5, 0.5))
+    val results = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Long)]
+    val in = MemoryStream[String]
+    val q = StreamingEvaluator.mseStream(spark, in.toDF(), store,
+      (b, m, n) => results.synchronized { results += ((b, m, n)) })
+    try {
+      // unknown user 99, known item: MEAN-U·7-I = 1.0, err 1.0 — counted;
+      // known user, unknown item 88 with no MEAN-I: dropped, as SGD drops it
+      in.addData("99,7,2.0", "1,88,3.0")
+      q.processAllAvailable()
+    } finally q.stop()
+    val (_, mse, n) = results.synchronized(results.head)
+    assert(n === 1L)
+    assert(math.abs(mse - 1.0) < 1e-9)
+  }
+
+  test("SgdUpdater.step on a DataFrame equals one updateLoop micro-batch") {
+    implicit val sqlCtx = spark.sqlContext
+    def seeded(): TrieMapServingStore[String, Array[Double]] = {
+      val st = ServingStore.factorStore()
+      st.put("1-U", Array(0.5, 0.25)); st.put("2-U", Array(-0.75, 1.0))
+      st.put("7-I", Array(1.0, 2.0)); st.put("8-I", Array(0.125, -0.5))
+      st.put(ServingStore.MeanU, Array(0.5, 0.5))
+      st.put(ServingStore.MeanI, Array(0.25, 0.75))
+      st
+    }
+    // known pairs, an unknown user (42), an unknown item (9), both unknown
+    val lines = Seq("1,7,4.0", "2,7,3.0", "1,8,1.0", "42,7,5.0", "2,9,2.0",
+      "42,9,1.0", "1,7,2.0")
+    val (lr, lambda) = (0.1, 0.01)
+
+    val store = seeded()
+    val in = MemoryStream[String]
+    val q = SgdUpdater.updateLoop(spark, in.toDF(), store, lr, lambda)
+    try {
+      in.addData(lines)
+      q.processAllAvailable()
+    } finally q.stop()
+
+    val model = seeded()
+    val (meanU, meanI) = ServingStore.means(model)
+    val (userF, itemF) = ServingStore.factorFrames(spark, model)
+    val scored = AlsScoring.predictions(
+      graft.operators.ModelCodec.parseRatings(lines.toDF("value")),
+      userF, itemF, meanU, meanI)
+    val (newU, newI) = SgdUpdater.step(scored, userF, itemF, lr, lambda, meanU, meanI)
+    val batch = newU.as[(Long, Array[Double])].collect().map { case (id, v) => s"$id-U" -> v } ++
+      newI.as[(Long, Array[Double])].collect().map { case (id, v) => s"$id-I" -> v }
+    assert(batch.map(_._1).toSet ===
+      Set("1-U", "2-U", "42-U", "7-I", "8-I", "9-I"))
+    def bits(v: Array[Double]) = v.toSeq.map(java.lang.Double.doubleToLongBits)
+    batch.foreach { case (key, v) =>
+      assert(bits(store.get(key).get) === bits(v), s"key $key")
+      assert(bits(v) !== bits(model.get(key).getOrElse(Array.empty[Double])), s"key $key moved")
+    }
+    assert(store.size === batch.length + 2) // + the two MEAN rows
+  }
+
   test("poison records do not kill the serve or SGD queries") {
     implicit val sqlCtx = spark.sqlContext
     val store = ServingStore.factorStore()
-    store.put("MEAN-U", Array(0.5, 0.5))
-    store.put("MEAN-I", Array(0.5, 0.5))
+    store.put(ServingStore.MeanU, Array(0.5, 0.5))
+    store.put(ServingStore.MeanI, Array(0.5, 0.5))
     val in = MemoryStream[String]
     val q = ModelConsumer.serveTo(spark, in.toDF(), store)
     try {
@@ -164,13 +242,7 @@ class StreamingServeSpec extends SparkSpec {
     itf.foreach(r => store.put(s"${r.getLong(0)}-I", r.getSeq[Double](1).toArray))
 
     def mseNow(): Double = {
-      val snap = ServingStore.snapshotDF(spark, store)
-      val u = snap.filter(col("key").endsWith("-U"))
-        .select(split(col("key"), "-").getItem(0).cast("long").as("user_id"),
-          col("factors").as("uf"))
-      val i = snap.filter(col("key").endsWith("-I"))
-        .select(split(col("key"), "-").getItem(0).cast("long").as("item_id"),
-          col("factors").as("itf"))
+      val (u, i) = ServingStore.factorFrames(spark, store)
       AlsScoring.mse(AlsScoring.predictions(Ratings.ratings(spark, sf0), u, i))
         .collect()(0).getDouble(0)
     }
