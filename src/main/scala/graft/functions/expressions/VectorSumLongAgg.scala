@@ -18,7 +18,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   *
   * Same conventions as [[VectorSumAgg]]: null rows are ignored, a row
   * containing any null element is skipped whole, ragged lengths grow the
-  * buffer (never truncate), empty groups yield null.
+  * buffer (never truncate), empty groups yield null. Overflow raises
+  * (`Math.addExact` in update and merge), as ANSI `sum` does — no wrap.
   */
 case class VectorSumLongAgg(
     child: Expression,
@@ -56,7 +57,7 @@ case class VectorSumLongAgg(
       val out = if (n > buffer.length) java.util.Arrays.copyOf(buffer, n)
                 else buffer
       var i = 0
-      while (i < n) { out(i) += arr.getLong(i); i += 1 }
+      while (i < n) { out(i) = Math.addExact(out(i), arr.getLong(i)); i += 1 }
       out
     }
   }
@@ -66,7 +67,7 @@ case class VectorSumLongAgg(
     if (b2 == null) return b1
     val (long, short) = if (b1.length >= b2.length) (b1, b2) else (b2, b1)
     var i = 0
-    while (i < short.length) { long(i) += short(i); i += 1 }
+    while (i < short.length) { long(i) = Math.addExact(long(i), short(i)); i += 1 }
     long
   }
 

@@ -12,8 +12,10 @@ import graft.functions.{Portable, TextFunctions => T}
   * Scale design (the part that matters at 100 TB):
   *  - exact dedup is one shuffle on a 128-bit content hash — never on the
   *    raw text;
-  *  - minhash signatures are computed with ONE aggregation producing all H
-  *    minima (no H passes over the shingles);
+  *  - a minhash signature is ROW-LOCAL: one expression over the
+  *    document's distinct shingle set hashes each shingle once and takes
+  *    all H minima (no groupBy, no shuffle) — the same kernel serves the
+  *    batch operators and the streaming screen;
   *  - LSH band-bucket join touches only candidate pairs, so the quadratic
   *    verification work is bounded by bucket collisions, not n²;
   *  - everything is expressions + relational ops — no driver-side state.
@@ -53,9 +55,22 @@ object Dedup {
     * the global dedup then shuffles only row-locally-deduped rows. */
   def shingles(docs: DataFrame, n: Int,
                id: String = "doc_id", text: String = "text"): DataFrame =
-    graft.plans.Spread(docs)
-      .select(col(id),
-        explode(array_distinct(T.wordNgrams(T.tokens(col(text)), n))).as("sh"))
+    shingleRows(shingleSets(docs, n, id, text), id)
+
+  /** The distinct word-`n`-gram shingle set of one text, ARRAY<STRING>. */
+  def shingleSet(text: Column, n: Int): Column =
+    array_distinct(T.wordNgrams(T.tokens(text), n))
+
+  /** One row per document: (id, shs = [[shingleSet]]). The MinHash
+    * pipelines checkpoint THIS table once — the signature reads the array,
+    * the Jaccard verify reads its [[shingleRows]] explode. */
+  def shingleSets(docs: DataFrame, n: Int,
+                  id: String = "doc_id", text: String = "text"): DataFrame =
+    graft.plans.Spread(docs).select(col(id), shingleSet(col(text), n).as("shs"))
+
+  /** (id, shs) → the exploded (id, sh) table. */
+  def shingleRows(sets: DataFrame, id: String = "doc_id"): DataFrame =
+    sets.select(col(id), explode(col("shs")).as("sh"))
 
   /** Shared-item counts for every (a < b) pair of id values — the
     * source-overlap matrix shape. Semantically the item self-join
@@ -77,30 +92,49 @@ object Dedup {
       .groupBy(col("_p.a").as("src_a"), col("_p.b").as("src_b"))
       .agg(count(lit(1)).as("n_shared"))
 
-  /** MinHash signature per document: one aggregation computing all
-    * `numHashes` minima over the universal hash family Portable.permute.
-    * The md5-based base hash is materialized once per shingle, not once per
-    * hash function — the aggregation permutes a ready LONG. */
-  def minhashSignatures(sh: DataFrame, numHashes: Int, id: String = "doc_id"): DataFrame =
-    sh.select(col(id), Portable.hash32m(col("sh")).as("h"))
-      .groupBy(col(id))
-      .agg(
-        min(Portable.permute(col("h"), 1)).as("m1"),
-        (2 to numHashes).map(i => min(Portable.permute(col("h"), i)).as(s"m$i")): _*)
+  /** THE MinHash kernel, row-local (batch and streaming share it): the
+    * ARRAY<BIGINT> signature of a distinct shingle set over the hash family
+    * Portable.permute, null for an empty set. Each shingle's md5 hash runs
+    * ONCE — a one-element `transform` binds the hashed array (the Column
+    * API's let) and the `numHashes` minima permute ready LONGs. */
+  def minhash(shingleSet: Column, numHashes: Int): Column = {
+    val hashed = transform(shingleSet, s => Portable.hash32m(s))
+    element_at(transform(array(hashed), hs => when(size(hs) > 0,
+      array((1 to numHashes).map(i =>
+        array_min(transform(hs, h => Portable.permute(h, i)))): _*))), 1)
+  }
 
-  /** LSH band keys: `bands` rows per doc, key = concatenated signature
-    * slice. Docs sharing any band key are candidate duplicates. One pass
-    * over the signatures (posexplode), not one scan per band — a union of
-    * per-band selects would recompute the whole signature pipeline `bands`
-    * times. */
+  /** (id, shs) → (id, sig), dropping documents with no shingle — they have
+    * nothing to collide on, and null signatures would all meet in one
+    * empty-key band bucket. */
+  def signatures(sets: DataFrame, numHashes: Int, id: String = "doc_id"): DataFrame =
+    sets.select(col(id), minhash(col("shs"), numHashes).as("sig"))
+      .filter(col("sig").isNotNull)
+
+  /** Aggregate: element-wise min of signatures — the sketch of the union
+    * of their shingle sets (min is associative, so sketches merge). */
+  def minhashMerge(sig: Column, numHashes: Int): Column =
+    array((0 until numHashes).map(i => min(sig(i))): _*)
+
+  /** Number of positions where two signatures agree (BIGINT) — `/ H` is
+    * the MinHash estimate of their Jaccard. */
+  def sigAgreement(a: Column, b: Column): Column =
+    size(filter(zip_with(a, b, (x, y) => x === y), m => m)).cast("long")
+
+  /** LSH band keys: `bands` rows per signature, (id, sig, band, bkey) with
+    * key = the band's `numHashes / bands` minima joined by ':'. Docs
+    * sharing any band key are candidate duplicates. One posexplode, not one
+    * scan per band — a union of per-band selects would recompute the whole
+    * signature pipeline `bands` times. */
   def lshBands(sigs: DataFrame, numHashes: Int, bands: Int,
                id: String = "doc_id"): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val r = numHashes / bands
     val bandKeys = (0 until bands).map { b =>
-      concat_ws(":", (1 to r).map(j => col(s"m${b * r + j}")): _*)
+      concat_ws(":", (0 until r).map(j => col("sig")(b * r + j)): _*)
     }
-    sigs.select(col(id), posexplode(array(bandKeys: _*)).as(Seq("band", "bkey")))
+    sigs.select(col(id), col("sig"),
+      posexplode(array(bandKeys: _*)).as(Seq("band", "bkey")))
   }
 
   /** Candidate pairs (a < b) sharing at least one LSH band bucket. */
@@ -188,8 +222,8 @@ object Dedup {
 
   /** [[allPairsJaccard]] over a shingle table the CALLER already
     * materialized (checkpoint/cache): no second checkpoint. q116 shares
-    * one shingle checkpoint across this, the MinHash signatures, and the
-    * audit's count aggregates — re-checkpointing it here cost one full
+    * one shingle-set checkpoint across this, the MinHash signatures, and
+    * the audit's count aggregates — re-checkpointing it here cost one full
     * extra pass over the shingle blocks. */
   def allPairsJaccardOn(sh: DataFrame, id: String = "doc_id"): DataFrame = {
     val counts = sh.groupBy(col(id)).agg(count(lit(1)).as("n_sh"))
@@ -245,10 +279,10 @@ object Dedup {
                       numHashes: Int = 16, bands: Int = 4,
                       threshold: Double = 0.5, id: String = "doc_id",
                       text: String = "text"): DataFrame = {
-    val shB = shingles(base, shingleN, id, text).localCheckpoint()
-    val shD = shingles(delta, shingleN, id, text).localCheckpoint()
-    val bandsAll = lshBands(minhashSignatures(shB.unionAll(shD), numHashes, id),
-      numHashes, bands, id).localCheckpoint()
+    val sets = shingleSets(base, shingleN, id, text).localCheckpoint()
+      .unionAll(shingleSets(delta, shingleN, id, text).localCheckpoint())
+    val bandsAll = lshBands(signatures(sets, numHashes, id), numHashes, bands, id)
+      .drop("sig").localCheckpoint()
     // no broadcast hint: a day's delta can itself be huge — AQE picks
     val deltaIds = delta.select(col(id)).localCheckpoint()
     val bandsD = bandsAll.join(deltaIds, Seq(id), "left_semi")
@@ -259,7 +293,7 @@ object Dedup {
       .select(least(col("doc_x"), col("doc_y")).as("doc_a"),
         greatest(col("doc_x"), col("doc_y")).as("doc_b"))
       .distinct()
-    jaccard(cand, shB.unionAll(shD), id).filter(col("jaccard") >= threshold)
+    jaccard(cand, shingleRows(sets, id), id).filter(col("jaccard") >= threshold)
   }
 
   /** Full MinHash+LSH near-dup pipeline: candidates from LSH buckets,
@@ -267,18 +301,13 @@ object Dedup {
   def minhashLsh(docs: DataFrame, shingleN: Int = 3, numHashes: Int = 16,
                  bands: Int = 4, threshold: Double = 0.5,
                  id: String = "doc_id", text: String = "text"): DataFrame = {
-    // EAGER local checkpoint: the shingle table (tokenize + n-grams +
-    // row-local array_distinct — a heavy map, no dedup shuffle since the
-    // r19 shingles change) feeds the signature aggregation AND all three
-    // references inside the jaccard verify; without it each reference
-    // recomputes the pipeline. Eager, so the independent consumer stages
-    // read materialized blocks instead of racing to compute the shared
-    // RDD concurrently. At production scale this is the materialize-
-    // intermediate tradeoff — the shingle table is ~n-gram-times the
-    // corpus, so point a long pipeline at reliable storage instead.
-    val sh = shingles(docs, shingleN, id, text).localCheckpoint()
-    val cand = lshCandidates(lshBands(minhashSignatures(sh, numHashes, id), numHashes, bands, id), id)
-    jaccard(cand, sh, id).filter(col("jaccard") >= threshold)
+    // EAGER local checkpoint: the shingle-set table (the heavy tokenize +
+    // n-gram map) feeds the signatures AND the three references inside the
+    // jaccard verify; eager, so those stages read blocks instead of racing
+    // to compute the shared RDD concurrently.
+    val sets = shingleSets(docs, shingleN, id, text).localCheckpoint()
+    val cand = lshCandidates(lshBands(signatures(sets, numHashes, id), numHashes, bands, id), id)
+    jaccard(cand, shingleRows(sets, id), id).filter(col("jaccard") >= threshold)
   }
 
   /** Per-document SimHash over `bits` bits of the token hashes (with

@@ -31,6 +31,25 @@ object DedupPack extends QueryPack {
        |UNION ALL
        |SELECT doc_id + $CopyOffset AS doc_id, text FROM documents WHERE doc_id % $mod = 0""".stripMargin
 
+  /** Per LSH candidate pair of the q31 frame, signature agreement beside
+    * the exact Jaccard: (doc_a, doc_b, n_shared, jaccard, n_agree) — the
+    * input of the q180 estimate audit and the q191 sweep. */
+  private def agreeVsExact(s: SparkSession, dir: String, numHashes: Int): DataFrame = {
+    val sets = Dedup.shingleSets(withCopies(s, dir, mod = 2), 3)
+      .localCheckpoint() // signatures + exact-verify share the scan
+    val sigs = Dedup.signatures(sets, numHashes)
+      .localCheckpoint() // bands + both agreement sides share it
+    val cand = Dedup.lshCandidates(Dedup.lshBands(sigs, numHashes, 4))
+    val est = cand
+      .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("siga")), "doc_a")
+      .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sigb")), "doc_b")
+      .select(col("doc_a"), col("doc_b"),
+        Dedup.sigAgreement(col("siga"), col("sigb")).as("n_agree"))
+    Dedup.jaccard(cand, Dedup.shingleRows(sets))
+      .select(col("doc_a"), col("doc_b"), col("n_shared"), col("jaccard"))
+      .join(est, Seq("doc_a", "doc_b"))
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Exact dedup: hash-groupBy on normalized content.
@@ -88,12 +107,13 @@ object DedupPack extends QueryPack {
       // independent stages of one job — a lazy checkpoint lets them race
       // to compute the shared shingle/candidate pipeline concurrently
       // (duplicating the Σ df² self-join) instead of reading blocks
-      val sh = Dedup.shingles(withCopies(s, dir, mod = 2), 3)
+      val sets = Dedup.shingleSets(withCopies(s, dir, mod = 2), 3)
         .localCheckpoint() // four consumers below share one pipeline
       val cand = Dedup.lshCandidates(
-        Dedup.lshBands(Dedup.minhashSignatures(sh, 16), 16, 4))
+        Dedup.lshBands(Dedup.signatures(sets, 16), 16, 4))
         .localCheckpoint() // consumed by n_cand AND the verify join
-      val exact = Dedup.allPairsJaccardOn(sh).filter(col("jaccard") >= 0.5)
+      val exact = Dedup.allPairsJaccardOn(Dedup.shingleRows(sets))
+        .filter(col("jaccard") >= 0.5)
         .select("doc_a", "doc_b").localCheckpoint()
       // verified-LSH pairs = candidates whose exact Jaccard clears the
       // threshold, and the exact table already holds EVERY pair that
@@ -120,30 +140,11 @@ object DedupPack extends QueryPack {
     // 100 TB, so its error distribution decides whether 16 hashes are
     // enough or the verify join stays mandatory. n_agree is an integer,
     // both ratios are snapped from identically-shaped doubles — exact
-    // cross-engine. Cost: candidates × 16 column compares (signatures are
-    // 16 longs/doc, no shingle blow-up on the estimate side).
+    // cross-engine. Cost: candidates × one 16-long array compare (no
+    // shingle blow-up on the estimate side).
     "q180_minhash_estimate" -> ((s, dir) => {
       val H = 16
-      val sh = Dedup.shingles(withCopies(s, dir, mod = 2), 3)
-        .localCheckpoint() // signatures + exact-verify share the scan
-      val sigs = Dedup.minhashSignatures(sh, H)
-        .localCheckpoint() // bands + both agreement sides share it
-      val cand = Dedup.lshCandidates(Dedup.lshBands(sigs, H, 4))
-      // signatures ride as ONE array column per side instead of 16 loose
-      // longs each: same bytes through the joins, but the join projections
-      // carry 2 attributes instead of 34 and the agreement count is one
-      // zip_with instead of a 16-way when-sum — a markedly narrower plan
-      // for the same integer result (cold-side codegen cost, guide §1.2)
-      val packed = array((1 to H).map(i => col(s"m$i")): _*)
-      val sa = sigs.select(col("doc_id").as("doc_a"), packed.as("siga"))
-      val sb = sigs.select(col("doc_id").as("doc_b"), packed.as("sigb"))
-      val agree = size(filter(
-        zip_with(col("siga"), col("sigb"), (x, y) => x === y), b => b))
-      val est = cand.join(sa, "doc_a").join(sb, "doc_b")
-        .select(col("doc_a"), col("doc_b"), agree.cast("long").as("n_agree"))
-      Dedup.jaccard(cand, sh)
-        .select(col("doc_a"), col("doc_b"), col("n_shared"), col("jaccard"))
-        .join(est, Seq("doc_a", "doc_b"))
+      agreeVsExact(s, dir, H)
         .select(col("doc_a"), col("doc_b"), col("n_agree"),
           Portable.snap6(col("n_agree").cast("double") / H).as("est_jaccard"),
           col("n_shared"),
@@ -163,21 +164,7 @@ object DedupPack extends QueryPack {
     // ratios snapped, empty cells NULL in both engines.
     "q191_minhash_pr" -> ((s, dir) => {
       val H = 16
-      val sh = Dedup.shingles(withCopies(s, dir, mod = 2), 3)
-        .localCheckpoint()
-      val sigs = Dedup.minhashSignatures(sh, H).localCheckpoint()
-      val cand = Dedup.lshCandidates(Dedup.lshBands(sigs, H, 4))
-      // array-packed signature agreement — same shape as q180 (see there)
-      val packed = array((1 to H).map(i => col(s"m$i")): _*)
-      val sa = sigs.select(col("doc_id").as("doc_a"), packed.as("siga"))
-      val sb = sigs.select(col("doc_id").as("doc_b"), packed.as("sigb"))
-      val agree = size(filter(
-        zip_with(col("siga"), col("sigb"), (x, y) => x === y), b => b))
-      val est = cand.join(sa, "doc_a").join(sb, "doc_b")
-        .select(col("doc_a"), col("doc_b"), agree.cast("long").as("n_agree"))
-      val pairs = Dedup.jaccard(cand, sh)
-        .select(col("doc_a"), col("doc_b"), col("jaccard"))
-        .join(est, Seq("doc_a", "doc_b"))
+      val pairs = agreeVsExact(s, dir, H)
         .select((col("n_agree").cast("double") / H).as("est"),
           (col("jaccard") >= 0.5).as("actual"))
       pairs
@@ -202,27 +189,28 @@ object DedupPack extends QueryPack {
     // SOURCE (min over the source's whole 5-gram shingle set) estimates
     // every pairwise source Jaccard from sketch agreement alone —
     // q117's exact matrix needs the shared-shingle self-join, while the
-    // sketch path touches each shingle once and compares 16 longs per
-    // source pair. That mergeability (min is associative) is what lets
-    // a 100 TB pipeline keep per-shard sketches and fold them at the
-    // end without re-reading data. The exact Jaccard rides along as the
-    // accuracy audit (abs_err is what you accept for the cheap path).
+    // sketch path compares 16 longs per source pair. The sketch IS the
+    // merge: the element-wise min of the source's per-document row
+    // signatures (min is associative), which is what lets a 100 TB
+    // pipeline keep per-shard sketches and fold them at the end without
+    // re-reading data. The exact Jaccard rides along as the accuracy
+    // audit (abs_err is what you accept for the cheap path).
     "q185_source_sketch" -> ((s, dir) => {
       val H = 16
-      val sh = Dedup.shingles(
+      val sets = Dedup.shingleSets(
           Tables.table(s, dir, "documents").select(col("source"), col("text")),
           5, id = "source")
-        .distinct() // ids repeat per source — shingles() dedups per ROW
-        .localCheckpoint() // sketch + counts + exact-verify share it
-      val sigs = Dedup.minhashSignatures(sh, H, id = "source")
-      val sa = sigs.select(col("source").as("src_a") +:
-        (1 to H).map(i => col(s"m$i").as(s"a$i")): _*)
-      val sb = sigs.select(col("source").as("src_b") +:
-        (1 to H).map(i => col(s"m$i").as(s"b$i")): _*)
-      val agree = (1 to H).map(i =>
-        when(col(s"a$i") === col(s"b$i"), 1).otherwise(0)).reduce(_ + _)
-      val est = sa.join(sb, col("src_a") < col("src_b"))
-        .select(col("src_a"), col("src_b"), agree.cast("long").as("n_agree"))
+        .localCheckpoint() // sketch + exact-verify share the tokenize
+      val sh = Dedup.shingleRows(sets, "source")
+        .distinct() // ids repeat per source — shingleSets() dedups per ROW
+        .localCheckpoint() // counts + pair counts share it
+      val sigs = Dedup.signatures(sets, H, "source")
+        .groupBy("source").agg(Dedup.minhashMerge(col("sig"), H).as("sig"))
+      val est = sigs.select(col("source").as("src_a"), col("sig").as("siga"))
+        .join(sigs.select(col("source").as("src_b"), col("sig").as("sigb")),
+          col("src_a") < col("src_b"))
+        .select(col("src_a"), col("src_b"),
+          Dedup.sigAgreement(col("siga"), col("sigb")).as("n_agree"))
       val counts = sh.groupBy("source").agg(count(lit(1)).as("n_sh"))
       // set-expansion pair counting (Dedup.sharedPairCounts): the K²
       // source pairs combine map-side instead of shuffling Σ df² rows

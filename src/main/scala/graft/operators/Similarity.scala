@@ -54,6 +54,14 @@ object Similarity {
   private def pairSim(sa: String, sb: String) =
     cosineRound4(col(s"vec$sa"), col(s"n2$sa"), col(s"vec$sb"), col(s"n2$sb"))
 
+  /** Per-query top-k of scored (qid, id, sim, …) rows, ranked (sim DESC,
+    * id ASC) into a 1-based `rank` column — the one ranking window every
+    * search operator here ends in. */
+  def topK(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("id"))
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+  }
+
   /** Exact top-k neighbors per query by cosine similarity. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val c = spread(prepped(corpus, "id", "vec", "_c"))
@@ -62,8 +70,7 @@ object Similarity {
       .filter(col("id_c") =!= col("id_q"))
       .select(col("id_q").as("qid"), col("id_c").as("id"),
         pairSim("_c", "_q").as("sim"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topK(scored, k)
   }
 
   /** Hard-negative mining for contrastive training: per query, the top-k
@@ -89,8 +96,7 @@ object Similarity {
       .filter(col("id_c") =!= col("id_q") && col("lbl_c") =!= col("lbl_q"))
       .select(col("id_q").as("qid"), col("id_c").as("id"),
         pairSim("_c", "_q").as("sim"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topK(scored, k)
   }
 
   /** Assign each row to its highest-cosine centroid: (id, vec, cid).
@@ -118,24 +124,31 @@ object Similarity {
         col("best.n2_d").as("n2"), col("best.id_k").as("cid"))
   }
 
+  /** The nearest centroid's `cid` for one row (vec, n2 = Σv²), scanning an
+    * ARRAY<STRUCT<cid, cvec, n2>>: `array_max` over per-centroid
+    * (sim, -cid, cid) structs — no aggregation, no shuffle. Tie/null
+    * semantics match [[assign]]: (rounded sim DESC, cid ASC), zero-norm
+    * rows fall to the last-ranked centroid via the -2.0 floor. */
+  def nearestCentroid(vec: Column, n2: Column, centroids: Column): Column =
+    array_max(transform(centroids, c => struct(
+      coalesce(cosineRound4(vec, n2, c.getField("cvec"), c.getField("n2")),
+        lit(-2.0)).as("s"),
+      negate(c.getField("cid")).as("nid"), c.getField("cid").as("cid"))))
+      .getField("cid")
+
   /** Scan-stage centroid assignment for STREAMING/serve paths: centroids
-    * ride the plan as a literal array (there are few — the IVF codebook),
-    * and the argmax is `array_max` over per-centroid (sim, -cid, cid)
-    * structs — no aggregation, no shuffle, legal in any streaming plan.
-    * Tie/null semantics match [[assign]]: (rounded sim DESC, cid ASC),
-    * zero-norm rows fall to the last-ranked centroid via the -2.0 floor. */
+    * ride the plan as a literal array (there are few — the IVF codebook)
+    * into [[nearestCentroid]] — legal in any streaming plan. */
   def assignScan(data: DataFrame, centroidsLocal: Seq[(Long, Array[Double])],
                  idCol: String, vecCol: String): DataFrame = {
     require(centroidsLocal.nonEmpty, "need at least one centroid")
-    val d = prepped(data, idCol, vecCol, "_d")
-    val cands = centroidsLocal.map { case (cid, cvec) =>
-      val sim = cosineRound4(col("vec_d"), col("n2_d"),
-        lit(cvec), lit(cvec.map(x => x * x).sum))
-      struct(coalesce(sim, lit(-2.0)).as("s"), lit(-cid).as("nid"),
-        lit(cid).as("cid"))
-    }
-    d.select(col("id_d").as(idCol), col("vec_d").as(vecCol), col("n2_d").as("n2"),
-      array_max(array(cands: _*)).getField("cid").as("cid"))
+    val cs = array(centroidsLocal.map { case (cid, cvec) =>
+      struct(lit(cid).as("cid"), lit(cvec).as("cvec"),
+        lit(cvec.map(x => x * x).sum).as("n2"))
+    }: _*)
+    prepped(data, idCol, vecCol, "_d").select(col("id_d").as(idCol),
+      col("vec_d").as(vecCol), col("n2_d").as("n2"),
+      nearestCentroid(col("vec_d"), col("n2_d"), cs).as("cid"))
   }
 
   /** IVF top-k: search only the query's centroid bucket. Trades recall for
@@ -155,8 +168,7 @@ object Similarity {
       .filter(col("id_c") =!= col("id_q"))
       .select(col("id_q").as("qid"), col("id_c").as("id"),
         pairSim("_c", "_q").as("sim"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topK(scored, k)
   }
 
   /** Multi-probe IVF search — THE recall/latency knob of an IVF index:
@@ -170,9 +182,7 @@ object Similarity {
   def ivfTopKMultiProbe(corpus: DataFrame, queries: DataFrame,
                         centroids: DataFrame, k: Int, nprobe: Int): DataFrame = {
     val scored = ivfMultiProbeScored(corpus, queries, centroids, nprobe)
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("id"))
-    scored.select(col("qid"), col("id"), col("sim"))
-      .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topK(scored.select(col("qid"), col("id"), col("sim")), k)
   }
 
   /** Multi-probe IVF scoring WITHOUT the final top-k cut: every candidate
@@ -232,8 +242,7 @@ object Similarity {
       .filter(col("id_c") =!= col("id_q") && col("lbl_c") =!= col("lbl_q"))
       .select(col("id_q").as("qid"), col("id_c").as("id"),
         pairSim("_c", "_q").as("sim"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topK(scored, k)
   }
 
   /** Train IVF centroids with k-means (seeded) — real centroids instead of
@@ -291,8 +300,7 @@ object Similarity {
       .filter(col("id_c") =!= col("id_q"))
       .select(col("id_q").as("qid"), col("id_c").as("id"),
         pairSim("_c", "_q").as("sim"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topK(scored, k)
   }
 
   /** ANN via spark.ml BucketedRandomProjectionLSH: hash vectors into
@@ -337,8 +345,7 @@ object Similarity {
       // a pair colliding in several tables appears once per table; partial
       // aggregation dedups map-side, and the exchange carries 3 scalars
       .groupBy(col("qid"), col("id")).agg(first(col("sim")).as("sim"))
-    val w = Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("id"))
-    pairs.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topK(pairs, k)
   }
 
   /** All pairs (a < b) with cosine ≥ threshold by brute force — the O(n²)

@@ -210,12 +210,8 @@ object SimilarityPack extends QueryPack {
           queriesDf(s, dir), centroids(s, dir), NprobeSweep.max)
         .localCheckpoint(true) // shared by all probe levels (eager: the
         // per-level broadcast jobs race a lazy pin)
-      val wk = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("qid")).orderBy(col("sim").desc, col("id"))
       NprobeSweep.map { np =>
-        val approx = scored.filter(col("probe_rank") <= np)
-          .withColumn("rank", row_number().over(wk))
-          .filter(col("rank") <= k)
+        val approx = Similarity.topK(scored.filter(col("probe_rank") <= np), k)
           .select(col("qid"), col("id"))
         val hits = ex.join(approx, Seq("qid", "id"))
           .agg(count(lit(1)).as("n_hit"))

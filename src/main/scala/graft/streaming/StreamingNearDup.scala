@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.functions.{Portable, TextFunctions => T}
+import graft.operators.Dedup
 
 /** Streaming MinHash+LSH near-duplicate detection — the online face of
   * `Dedup.minhashLsh` for continuous crawl ingestion, where each arriving
@@ -12,12 +12,10 @@ import graft.functions.{Portable, TextFunctions => T}
   * re-scanning the corpus.
   *
   * Scale design:
-  *  - The MinHash signature is computed STATELESSLY per row:
-  *    `array_min(transform(shingles, s -> permute(hash(s), i)))` per hash
-  *    function. A min over the shingle multiset equals the min over the
-  *    distinct set, so this produces bit-identical signatures to the
-  *    batch `Dedup.minhashSignatures` groupBy — with zero shuffle and no
-  *    state (StreamingNearDupSpec asserts the parity).
+  *  - Signatures and band keys are computed STATELESSLY per row by the
+  *    batch kernels (`Dedup.minhash`, `Dedup.lshBands`), so a document
+  *    gets the same bands here as in `Dedup.minhashLsh` — with zero
+  *    shuffle and no state (StreamingNearDupSpec pins both).
   *  - Only the band-bucket grouping is stateful: docs sharing a band key
   *    meet in a `flatMapGroupsWithState` group whose state holds the
   *    (doc_id, signature) pairs seen in that bucket. An arriving doc
@@ -38,16 +36,13 @@ object StreamingNearDup {
                        bucket_capped: Boolean)
   case class BucketState(members: List[(Long, Array[Long])], capped: Boolean)
 
-  /** Per-row MinHash signature as an ARRAY<BIGINT> column — stateless twin
-    * of `Dedup.minhashSignatures` (same hash family, same values). */
-  def signature(text: org.apache.spark.sql.Column, shingleN: Int,
-                numHashes: Int): org.apache.spark.sql.Column = {
-    val sh = T.wordNgrams(T.tokens(text), shingleN)
-    val sigs = (1 to numHashes).map { i =>
-      array_min(transform(sh, s => Portable.permute(Portable.hash32m(s), i)))
-    }
-    array(sigs: _*)
-  }
+  /** docs (doc_id, text) → (doc_id, sig, band, bkey), row-local. Documents
+    * too short for one shingle have no signature and get no band row. */
+  def bandRows(docs: DataFrame, shingleN: Int, numHashes: Int,
+               bands: Int): DataFrame =
+    Dedup.lshBands(Dedup.signatures(docs.select(col("doc_id"),
+      Dedup.shingleSet(col("text"), shingleN).as("shs")), numHashes),
+      numHashes, bands)
 
   /** docs stream (doc_id LONG, text STRING) → candidate pairs
     * (doc_a, doc_b, est_jaccard, bucket_capped), ordered numerically:
@@ -59,30 +54,15 @@ object StreamingNearDup {
   def lshCandidates(docs: DataFrame, shingleN: Int = 3, numHashes: Int = 16,
                     bands: Int = 4, maxBucketSize: Int = 64,
                     idleTimeout: Option[String] = Some("1 hour")): Dataset[Candidate] = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val r = numHashes / bands
     val spark = docs.sparkSession
     import spark.implicits._
-
-    val withSig = docs.select(col("doc_id"),
-      signature(col("text"), shingleN, numHashes).as("sig"))
-      // a doc too short for one shingle has a null signature; without this
-      // filter every such doc would share the all-null band key and meet
-      // in one degenerate mega-bucket
-      .filter(element_at(col("sig"), 1).isNotNull)
-    val bandRows = withSig
-      .select(col("doc_id"), col("sig"), posexplode(
-        array((0 until bands).map { b =>
-          concat_ws(":", (0 until r).map(j => element_at(col("sig"), b * r + j + 1)): _*)
-        }: _*)).as(Seq("band", "bkey")))
-      .as[BandRow]
 
     // the processing-time timeout keeps the engine scheduling wake-up
     // batches; tests that drive with processAllAvailable() pass None
     // (NoTimeout) — production ingest keeps the default eviction
     val timeoutConf = idleTimeout.map(_ => GroupStateTimeout.ProcessingTimeTimeout())
       .getOrElse(GroupStateTimeout.NoTimeout())
-    bandRows
+    bandRows(docs, shingleN, numHashes, bands).as[BandRow]
       .groupByKey(row => (row.band, row.bkey))
       .flatMapGroupsWithState[BucketState, Candidate](
         OutputMode.Append(), timeoutConf) {

@@ -28,6 +28,34 @@ class DedupSpec extends SparkSpec {
     assert(copies === nDocs, s"expected $nDocs copy pairs, found $copies")
   }
 
+  test("a doc shorter than shingleN gets no band row and no candidate, batch or stream") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.streaming.StreamingNearDup
+    val text = "the quick brown fox jumps over the lazy dog"
+    val rows = Seq((1L, text), (2L, text), (3L, "too short"), (4L, "too short"))
+    val docs = rows.toDF("doc_id", "text")
+    // two identical short docs: with a null signature they would share the
+    // empty band key and pair up
+    val batchBands = Dedup.lshBands(Dedup.signatures(Dedup.shingleSets(docs, 3), 16), 16, 4)
+    assert(batchBands.select("doc_id").as[Long].collect().toSet === Set(1L, 2L))
+    assert(StreamingNearDup.bandRows(docs, 3, 16, 4)
+      .select("doc_id").as[Long].collect().toSet === Set(1L, 2L))
+    val pairs = Dedup.minhashLsh(docs, shingleN = 3, numHashes = 16, bands = 4,
+      threshold = 0.0).select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
+    assert(pairs === Set((1L, 2L)))
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[(Long, String)]
+    val q = StreamingNearDup.lshCandidates(in.toDF().toDF("doc_id", "text"),
+        shingleN = 3, idleTimeout = None)
+      .writeStream.format("memory").queryName("neardup_short_batch").start()
+    try {
+      in.addData(rows: _*)
+      q.processAllAvailable()
+      assert(spark.table("neardup_short_batch").select("doc_a", "doc_b")
+        .as[(Long, Long)].collect().toSet === Set((1L, 2L)))
+    } finally q.stop()
+  }
+
   test("simhash of identical docs is identical, hamming 0") {
     val docs = Seq((1L, "a b c d e f"), (2L, "a b c d e f"), (3L, "x y z q w e"))
       .toDF("doc_id", "text")

@@ -172,27 +172,25 @@ class StatOpsSpec extends SparkSpec {
   }
 
   test("q185: per-source sketches equal sketches of per-shard merges") {
-    // mergeability: min over a source's shingles == min over the mins of
-    // any disjoint shard split — recompute one source's signature from
-    // two doc_id-parity shards and compare against the operator's path
+    // mergeability: the kernel over a source's whole shingle set == the
+    // element-wise min of any disjoint shard split's sketches — fold each
+    // doc_id-parity shard with q185's merge and compare
+    import graft.operators.Dedup
     val docs = Tables.table(spark, sf0, "documents")
       .select(col("source"), col("doc_id"), col("text"))
-    val sh = graft.operators.Dedup.shingles(
-      docs.select(col("source"), col("text")), 5, id = "source")
-    val full = graft.operators.Dedup
-      .minhashSignatures(sh, 4, id = "source")
-      .select(col("source"), col("m1"), col("m2"), col("m3"), col("m4"))
-      .as[(String, Long, Long, Long, Long)].collect()
-      .map { case (s, a, b, c, d) => s -> Seq(a, b, c, d) }.toMap
+    def sets(d: org.apache.spark.sql.DataFrame) =
+      Dedup.shingleSets(d.select(col("source"), col("text")), 5, id = "source")
+    def collected(sigs: org.apache.spark.sql.DataFrame) =
+      sigs.as[(String, Array[Long])].collect().map { case (s, g) => s -> g.toSeq }.toMap
+    val full = collected(sets(docs).groupBy(col("source"))
+      .agg(array_distinct(flatten(collect_list(col("shs")))).as("shs"))
+      .select(col("source"), Dedup.minhash(col("shs"), 4).as("sig"))
+      .filter(col("sig").isNotNull))
     val shardSigs = Seq(0, 1).map { par =>
-      val shard = graft.operators.Dedup.shingles(
-        docs.filter(col("doc_id") % 2 === par)
-          .select(col("source"), col("text")), 5, id = "source")
-      graft.operators.Dedup.minhashSignatures(shard, 4, id = "source")
-        .select(col("source"), col("m1"), col("m2"), col("m3"), col("m4"))
-        .as[(String, Long, Long, Long, Long)].collect()
-        .map { case (s, a, b, c, d) => s -> Seq(a, b, c, d) }.toMap
+      collected(Dedup.signatures(sets(docs.filter(col("doc_id") % 2 === par)), 4, "source")
+        .groupBy(col("source")).agg(Dedup.minhashMerge(col("sig"), 4).as("sig")))
     }
+    assert(full.nonEmpty)
     full.foreach { case (src, sig) =>
       val merged = shardSigs.flatMap(_.get(src))
         .reduce((x, y) => x.zip(y).map(t => math.min(t._1, t._2)))

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.functions.Portable
 import graft.operators.Dedup
 import graft.sources.Tables
 import graft.streaming.StreamingNearDup
@@ -11,24 +12,27 @@ class StreamingNearDupSpec extends SparkSpec {
   import spark.implicits._
 
   test("stateless per-row signature is bit-identical to the batch groupBy signature") {
+    // the groupBy side is a reference written here: explode, then one MIN
+    // per hash function, grouped per document
     val docs = Tables.table(spark, sf0, "documents")
-      .select(col("doc_id"), col("text")).limit(50)
-    val streamShaped = docs
-      .select(col("doc_id"), StreamingNearDup.signature(col("text"), 3, 16).as("sig"))
+      .select(col("doc_id"), col("text")).filter(col("doc_id") < 50)
+      .unionAll(Seq((-1L, "too short")).toDF("doc_id", "text"))
+    val rowLocal = Dedup.signatures(Dedup.shingleSets(docs, 3), 16)
       .as[(Long, Array[Long])].collect().toMap
-    val batch = Dedup.minhashSignatures(Dedup.shingles(docs, 3), 16)
-    val batchSigs = batch.select(col("doc_id"),
-      array((1 to 16).map(i => col(s"m$i")): _*).as("sig"))
+    val h = Portable.hash32m(col("sh"))
+    val reference = Dedup.shingles(docs, 3).groupBy(col("doc_id"))
+      .agg(array((1 to 16).map(i => min(Portable.permute(h, i))): _*).as("sig"))
       .as[(Long, Array[Long])].collect().toMap
-    assert(batchSigs.nonEmpty)
-    batchSigs.foreach { case (id, sig) =>
-      assert(streamShaped(id).toSeq === sig.toSeq, s"signature diverges for doc $id")
+    assert(reference.size > 1 && !reference.contains(-1L))
+    assert(rowLocal.keySet === reference.keySet)
+    reference.foreach { case (id, sig) =>
+      assert(rowLocal(id).toSeq === sig.toSeq, s"signature diverges for doc $id")
     }
   }
 
   test("signature/band pipeline shuffles nothing: no Exchange in the per-row plan") {
     // VERDICT r19 task 8: the streaming path must INHERIT the batch
-    // shingle optimization's no-dedup-shuffle property. signature() is
+    // shingle optimization's no-dedup-shuffle property. The kernel is
     // row-local by construction (array_min over the shingle array), so
     // the whole doc → signature → band-rows prefix must plan without a
     // single Exchange — this pins that, so a future edit that reintroduces
@@ -37,17 +41,8 @@ class StreamingNearDupSpec extends SparkSpec {
       .select(col("doc_id"), col("text"))
       .filter(col("doc_id") < 50) // NOT limit(): GlobalLimit plans its own
       //                             SinglePartition exchange — test noise
-    val bands = 4
-    val r = 16 / bands
-    val bandRows = docs
-      .select(col("doc_id"),
-        StreamingNearDup.signature(col("text"), 3, 16).as("sig"))
-      .filter(element_at(col("sig"), 1).isNotNull)
-      .select(col("doc_id"), posexplode(
-        array((0 until bands).map { b =>
-          concat_ws(":", (0 until r).map(j =>
-            element_at(col("sig"), b * r + j + 1)): _*)
-        }: _*)).as(Seq("band", "bkey")))
+    val bandRows = StreamingNearDup.bandRows(docs, shingleN = 3, numHashes = 16,
+      bands = 4)
     val physical = bandRows.queryExecution.executedPlan.toString
     assert(!physical.contains("Exchange"),
       s"streaming near-dup prefix gained a shuffle:\n$physical")

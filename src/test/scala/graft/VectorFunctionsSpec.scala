@@ -68,6 +68,20 @@ class VectorFunctionsSpec extends SparkSpec {
     assert(empty.isEmpty)
   }
 
+  test("vecSumLong raises on BIGINT overflow in update and in merge, never wraps") {
+    import spark.implicits._
+    val near = spark.sparkContext
+      .parallelize(Seq((0, Array(Long.MaxValue - 1L)), (0, Array(2L))), 2).toDF("k", "v")
+    def sumOf(df: org.apache.spark.sql.DataFrame) = df.groupBy($"k")
+      .agg(graft.functions.VectorFunctions.vecSumLong($"v").as("s")).collect()
+    // one partition: both rows meet in update; two: two partials meet in merge
+    Seq(near.coalesce(1), near).foreach { df =>
+      val e = intercept[Exception](sumOf(df))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException]), e.toString)
+    }
+  }
+
   test("vecSumLong rejects ARRAY<DOUBLE> instead of truncating it") {
     import spark.implicits._
     val df = Seq((0, Array(1.5, 2.5))).toDF("k", "v")
