@@ -99,17 +99,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // AQE's default 1 MB coalesce floor is sized for cluster-scale
-      // shuffles; at sf0.1 it coalesced CPU-dense post-shuffle stages
-      // (BM25 weighting, shingle joins) to 1-2 tasks
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DriverSession()
     // Untimed session warm-up: analyzer/optimizer rules, shuffle + noop
     // sink, codegen plumbing and the parquet read/write stack, via a
     // throwaway file. It touches no test table, so each query's file

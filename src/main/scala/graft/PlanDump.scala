@@ -1,27 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 import java.nio.file.{Files, Paths}
 
 /** Measurement tool (optimization rounds): dump `explain("formatted")` for
-  * the named declared queries to one text file each — the plan evidence the
-  * judge reads against plans/rNN/<query>_{before,after}.txt. Same session
-  * shape as [[Bench]]/[[Verify]] so the captured plan is the one the bench
-  * runs (AQE final plans can still differ at runtime; this is the static
-  * plan the guide's checklist reads: join strategy, Exchange count,
+  * the named declared queries to one text file each — the plan evidence
+  * read against plans/rNN/<query>_{before,after}.txt. The session is
+  * [[DriverSession]], shared with [[Bench]]/[[Verify]], so the captured
+  * plan is the one the bench runs (AQE final plans can still differ at
+  * runtime; this is the static plan: join strategy, Exchange count,
   * PushedFilters/ReadSchema, codegen spans). */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, namesCsv) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = DriverSession()
     new java.io.File(outDir).mkdirs()
     val names = namesCsv.split(",").map(_.trim).filter(_.nonEmpty)
     names.foreach { prefix =>

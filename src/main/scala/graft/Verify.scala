@@ -1,24 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // same host-scale AQE floor as Bench (see the comment there):
-      // results are partitioning-independent, this only widens
-      // CPU-dense post-shuffle stages that AQE would coalesce to 1-2
-      // tasks at sf0.01 data sizes
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DriverSession()
     new java.io.File(outDir).mkdirs()
     // Dev convenience: GRAFT_VERIFY_ONLY=q125,q126 runs just those queries
     // (prefix match). The driver sets no env, so it always runs everything.

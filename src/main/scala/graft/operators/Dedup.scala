@@ -147,20 +147,48 @@ object Dedup {
       .distinct()
   }
 
+  /** Per-set sizes (id, n_sh) of an exploded (id, sh) table. */
+  def setSizes(sh: DataFrame, id: String = "doc_id"): DataFrame =
+    sh.groupBy(col(id)).agg(count(lit(1)).as("n_sh"))
+
+  /** THE set-overlap join: pair rows (a, b, n_shared, …) ⋈ the per-side
+    * set sizes, appending n_a and n_b from `sizes` (id, n_sh). Every
+    * Jaccard, containment and overlap ratio here is n_shared read against
+    * these two columns. */
+  def withSetSizes(shared: DataFrame, sizes: DataFrame, id: String = "doc_id",
+                   a: String = "doc_a", b: String = "doc_b"): DataFrame =
+    shared
+      .join(sizes.select(col(id).as(a), col("n_sh").as("n_a")), a)
+      .join(sizes.select(col(id).as(b), col("n_sh").as("n_b")), b)
+
+  /** |A∩B| / |A∪B| over [[withSetSizes]]' n_shared, n_a, n_b (DOUBLE). */
+  def jaccardRatio: Column =
+    col("n_shared").cast("double") / (col("n_a") + col("n_b") - col("n_shared"))
+
+  /** Shared-item counts (doc_a < doc_b, n_shared) of every pair of sets
+    * that share at least one item: the self-equi-join on the shingle. */
+  private def sharedCounts(sh: DataFrame, id: String): DataFrame =
+    sh.select(col(id).as("doc_a"), col("sh"))
+      .join(sh.select(col(id).as("doc_b"), col("sh")), "sh")
+      .filter(col("doc_a") < col("doc_b"))
+      .groupBy(col("doc_a"), col("doc_b"))
+      .agg(count(lit(1)).as("n_shared"))
+
   /** Exact Jaccard over distinct shingle sets for given (doc_a, doc_b)
     * pairs: |A∩B| via equi-join on the shingle, sizes via per-doc counts. */
-  def jaccard(pairs: DataFrame, sh: DataFrame, id: String = "doc_id"): DataFrame = {
-    val counts = sh.groupBy(col(id)).agg(count(lit(1)).as("n_sh"))
+  def jaccard(pairs: DataFrame, sh: DataFrame, id: String = "doc_id"): DataFrame =
+    jaccardSized(pairs, sh, setSizes(sh, id), id)
+
+  /** [[jaccard]] with the per-doc `sizes` supplied by a caller that
+    * already needs them. */
+  private def jaccardSized(pairs: DataFrame, sh: DataFrame, sizes: DataFrame,
+                           id: String): DataFrame = {
     val shared = pairs
       .join(sh.select(col(id).as("doc_a"), col("sh")), "doc_a")
       .join(sh.select(col(id).as("doc_b"), col("sh")), Seq("doc_b", "sh"))
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("n_shared"))
-    shared
-      .join(counts.select(col(id).as("doc_a"), col("n_sh").as("n_a")), "doc_a")
-      .join(counts.select(col(id).as("doc_b"), col("n_sh").as("n_b")), "doc_b")
-      .withColumn("jaccard",
-        col("n_shared").cast("double") / (col("n_a") + col("n_b") - col("n_shared")))
+    withSetSizes(shared, sizes, id).withColumn("jaccard", jaccardRatio)
   }
 
   /** Threshold Jaccard self-join via PREFIX FILTERING (Chaudhuri et al.
@@ -183,7 +211,7 @@ object Dedup {
     require(threshold > 0 && threshold <= 1, "threshold must be in (0, 1]")
     import org.apache.spark.sql.expressions.Window
     val sh = shIn.localCheckpoint()
-    val counts = sh.groupBy(col(id)).agg(count(lit(1)).as("n_sh"))
+    val counts = setSizes(sh, id)
     val dfreq = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
     val w = Window.partitionBy(col(id)).orderBy(col("df"), col("sh"))
     val prefixes = sh.join(dfreq, "sh")
@@ -196,16 +224,7 @@ object Dedup {
       .join(prefixes.select(col(id).as("doc_b"), col("sh")), "sh")
       .filter(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b").distinct()
-    val inter = cand
-      .join(sh.select(col(id).as("doc_a"), col("sh")), "doc_a")
-      .join(sh.select(col(id).as("doc_b"), col("sh")), Seq("doc_b", "sh"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_shared"))
-    inter
-      .join(counts.select(col(id).as("doc_a"), col("n_sh").as("n_a")), "doc_a")
-      .join(counts.select(col(id).as("doc_b"), col("n_sh").as("n_b")), "doc_b")
-      .withColumn("jaccard", col("n_shared").cast("double")
-        / (col("n_a") + col("n_b") - col("n_shared")))
-      .filter(col("jaccard") >= threshold)
+    jaccardSized(cand, sh, counts, id).filter(col("jaccard") >= threshold)
   }
 
   /** All-pairs exact Jaccard WITHOUT materializing the pair cross product:
@@ -225,19 +244,9 @@ object Dedup {
     * one shingle-set checkpoint across this, the MinHash signatures, and
     * the audit's count aggregates — re-checkpointing it here cost one full
     * extra pass over the shingle blocks. */
-  def allPairsJaccardOn(sh: DataFrame, id: String = "doc_id"): DataFrame = {
-    val counts = sh.groupBy(col(id)).agg(count(lit(1)).as("n_sh"))
-    val shared = sh.select(col(id).as("doc_a"), col("sh"))
-      .join(sh.select(col(id).as("doc_b"), col("sh")), "sh")
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("n_shared"))
-    shared
-      .join(counts.select(col(id).as("doc_a"), col("n_sh").as("n_a")), "doc_a")
-      .join(counts.select(col(id).as("doc_b"), col("n_sh").as("n_b")), "doc_b")
-      .withColumn("jaccard",
-        col("n_shared").cast("double") / (col("n_a") + col("n_b") - col("n_shared")))
-  }
+  def allPairsJaccardOn(sh: DataFrame, id: String = "doc_id"): DataFrame =
+    withSetSizes(sharedCounts(sh, id), setSizes(sh, id), id)
+      .withColumn("jaccard", jaccardRatio)
 
   /** All-pairs asymmetric shingle CONTAINMENT — |A∩B| / |A| and / |B| —
     * the excerpt/quote detector Jaccard misses: a 13-token excerpt of a
@@ -248,15 +257,7 @@ object Dedup {
     * > 0 filters anyway. */
   def allPairsContainment(shIn: DataFrame, id: String = "doc_id"): DataFrame = {
     val sh = shIn.localCheckpoint()
-    val counts = sh.groupBy(col(id)).agg(count(lit(1)).as("n_sh"))
-    val shared = sh.select(col(id).as("doc_a"), col("sh"))
-      .join(sh.select(col(id).as("doc_b"), col("sh")), "sh")
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("n_shared"))
-    shared
-      .join(counts.select(col(id).as("doc_a"), col("n_sh").as("n_a")), "doc_a")
-      .join(counts.select(col(id).as("doc_b"), col("n_sh").as("n_b")), "doc_b")
+    withSetSizes(sharedCounts(sh, id), setSizes(sh, id), id)
       .withColumn("containment_a", col("n_shared").cast("double") / col("n_a"))
       .withColumn("containment_b", col("n_shared").cast("double") / col("n_b"))
   }

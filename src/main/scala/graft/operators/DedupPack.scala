@@ -211,18 +211,14 @@ object DedupPack extends QueryPack {
           col("src_a") < col("src_b"))
         .select(col("src_a"), col("src_b"),
           Dedup.sigAgreement(col("siga"), col("sigb")).as("n_agree"))
-      val counts = sh.groupBy("source").agg(count(lit(1)).as("n_sh"))
       // set-expansion pair counting (Dedup.sharedPairCounts): the K²
       // source pairs combine map-side instead of shuffling Σ df² rows
       val shared = Dedup.sharedPairCounts(sh)
-      val exact = col("n_shared").cast("double") /
-        (col("n_a") + col("n_b") - col("n_shared"))
-      est.join(shared, Seq("src_a", "src_b"), "left")
-        .na.fill(0L, Seq("n_shared"))
-        .join(counts.select(col("source").as("src_a"), col("n_sh").as("n_a")),
-          "src_a")
-        .join(counts.select(col("source").as("src_b"), col("n_sh").as("n_b")),
-          "src_b")
+      val exact = Dedup.jaccardRatio
+      Dedup.withSetSizes(
+          est.join(shared, Seq("src_a", "src_b"), "left")
+            .na.fill(0L, Seq("n_shared")),
+          Dedup.setSizes(sh, "source"), "source", "src_a", "src_b")
         .select(col("src_a"), col("src_b"), col("n_agree"),
           Portable.snap6(col("n_agree").cast("double") / H).as("est_jaccard"),
           Portable.snap6(exact).as("exact_jaccard"),
@@ -243,11 +239,8 @@ object DedupPack extends QueryPack {
       val sh = Dedup.shingles(docs, 5, id = "source")
         .distinct() // ids repeat per source — shingles() dedups per ROW
         .localCheckpoint()
-      val counts = sh.groupBy("source").agg(count(lit(1)).as("n_sh"))
-      val pairs = Dedup.sharedPairCounts(sh)
-      pairs
-        .join(counts.select(col("source").as("src_a"), col("n_sh").as("n_a")), "src_a")
-        .join(counts.select(col("source").as("src_b"), col("n_sh").as("n_b")), "src_b")
+      Dedup.withSetSizes(Dedup.sharedPairCounts(sh), Dedup.setSizes(sh, "source"),
+          "source", "src_a", "src_b")
         .select(col("src_a"), col("src_b"), col("n_shared"), col("n_a"), col("n_b"),
           round(col("n_shared").cast("double") / least(col("n_a"), col("n_b")), 6)
             .as("overlap"))

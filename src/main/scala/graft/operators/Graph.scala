@@ -17,12 +17,10 @@ import org.apache.spark.sql.functions._
   *    classic cross-engine flake in iterative jobs, never enters the
   *    computation. The sub-nano floor loss per edge is bounded by
   *    iters * max_indegree ulps — irrelevant at 1e9 resolution.
-  *  - **Lineage truncation.** Each iteration's plan embeds the previous
-  *    one; after a few dozen iterations the plan tree (and its codegen)
-  *    dominates runtime and a lost executor replays the whole chain. With
-  *    `checkpointEvery > 0`, every k-th rank table is localCheckpoint-ed,
-  *    cutting the lineage to one iteration. Tests and the oracle-checked
-  *    contract query run with checkpointing off so the plan stays pure.
+  *  - **Pinned invariants.** The loop-invariant tables (edges, node set,
+  *    degrees) are localCheckpoint-ed once, eagerly, and the per-round
+  *    frames of HITS and BFS roll (eager checkpoint + release of the
+  *    round they supersede), so every round reads cached blocks.
   */
 object Graph {
 
@@ -42,11 +40,8 @@ object Graph {
     * all equi-joins on the node id. The node set and out-degree table are
     * computed once, outside the loop. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iters: Int, dampingPct: Int = 85,
-               checkpointEvery: Int = 0,
-               materialize: Boolean = true): DataFrame =
-    pageRankImpl(edges, srcCol, dstCol, iters, dampingPct,
-      checkpointEvery, materialize, seeds = Nil)
+               iters: Int, dampingPct: Int = 85): DataFrame =
+    pageRankImpl(edges, srcCol, dstCol, iters, dampingPct, seeds = Nil)
 
   /** Personalized PageRank: the teleport mass lands ONLY on the seed set
     * (uniformly), so ranks measure proximity to the seeds instead of
@@ -55,12 +50,9 @@ object Graph {
     * non-seed nodes start (and teleport) at zero. */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
                            seeds: Seq[Long], iters: Int,
-                           dampingPct: Int = 85,
-                           checkpointEvery: Int = 0,
-                           materialize: Boolean = true): DataFrame = {
+                           dampingPct: Int = 85): DataFrame = {
     require(seeds.nonEmpty, "personalized PageRank needs a seed set")
-    pageRankImpl(edges, srcCol, dstCol, iters, dampingPct,
-      checkpointEvery, materialize, seeds)
+    pageRankImpl(edges, srcCol, dstCol, iters, dampingPct, seeds)
   }
 
   /** Fixed-point unit for HITS scores: smaller than [[Unit]] because the
@@ -94,15 +86,13 @@ object Graph {
     * node — all shuffles on node ids, same as pageRank; the symmetrized
     * edge set is checkpointed once outside the loop. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-                       iters: Int, materialize: Boolean = true): DataFrame = {
+                       iters: Int): DataFrame = {
     require(iters >= 1)
-    def pin(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint() else df
     val dir = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val und = pin(dir
+    val und = dir
       .union(dir.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct())
-    val nodes = pin(und.select(col("src").as("v")).distinct())
+      .distinct().localCheckpoint()
+    val nodes = und.select(col("src").as("v")).distinct().localCheckpoint()
     var labels = nodes.select(col("v"), col("v").as("lab"))
     for (_ <- 1 to iters) {
       val counts = und.join(labels, und("dst") === labels("v"))
@@ -119,13 +109,12 @@ object Graph {
   }
 
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-           iters: Int, materialize: Boolean = true): DataFrame = {
+           iters: Int): DataFrame = {
     require(iters >= 1)
-    def pin(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint() else df
-    val e = pin(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    val nodes = pin(e.select(col("src").as("v"))
-      .union(e.select(col("dst").as("v"))).distinct())
+    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .localCheckpoint()
+    val nodes = e.select(col("src").as("v"))
+      .union(e.select(col("dst").as("v"))).distinct().localCheckpoint()
     var hubs = nodes.select(col("v"), lit(HitsUnit).as("h"))
     var auths = nodes.select(col("v"), lit(0L).as("a"))
     for (_ <- 1 to iters) {
@@ -137,8 +126,7 @@ object Graph {
       // join. roll() releases the superseded round's blocks as each new
       // frame lands, so a long session pins O(1) tables, not O(iters).
       def step(plan: DataFrame, dead: DataFrame*): DataFrame =
-        if (materialize) graft.plans.Checkpoints.roll(plan, dead: _*)
-        else plan
+        graft.plans.Checkpoints.roll(plan, dead: _*)
       val prevHubs = hubs
       val prevAuths = auths
       // only the normalized score tables are checkpointed (one eager job
@@ -164,7 +152,7 @@ object Graph {
     }
     // the edge table is dead once the final scores are materialized; the
     // node table still backs the returned join, so it stays
-    if (materialize) graft.plans.Checkpoints.release(e)
+    graft.plans.Checkpoints.release(e)
     nodes.join(hubs, "v").join(auths, "v")
       .select(col("v"), col("h").as("hub_fp"), col("a").as("auth_fp"),
         round(col("h").cast("double") / HitsUnit.toDouble, 6).as("hub"),
@@ -173,8 +161,6 @@ object Graph {
 
   private def pageRankImpl(edges: DataFrame, srcCol: String, dstCol: String,
                            iters: Int, dampingPct: Int,
-                           checkpointEvery: Int,
-                           materialize: Boolean,
                            seeds: Seq[Long]): DataFrame = {
     require(iters >= 1 && dampingPct >= 0 && dampingPct <= 100)
     // The loop-invariant tables (edges, node set, out-degrees) are
@@ -188,22 +174,21 @@ object Graph {
     // race to compute the same RDD concurrently, which is what a lazy
     // pin allows. The blocks release with the RDD when the query's
     // references drop.
-    def pin(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint() else df
-    val e = pin(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    val nodes = pin(e.select(col("src").as("v"))
-      .union(e.select(col("dst").as("v"))).distinct())
+    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .localCheckpoint()
+    val nodes = e.select(col("src").as("v"))
+      .union(e.select(col("dst").as("v"))).distinct().localCheckpoint()
     val nRow = broadcast(nodes.agg(count(lit(1)).as("n")))
     val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
     // the degree join is LOOP-INVARIANT: materialize (src, dst, deg) once
     // instead of re-joining deg inside every iteration — each round then
     // pays exactly one join (ranks) + one aggregation, the Pregel floor
-    val eDeg = pin(e.join(deg, "src")
-      .select(col("src"), col("dst"), col("deg")))
+    val eDeg = e.join(deg, "src")
+      .select(col("src"), col("dst"), col("deg")).localCheckpoint()
     // e's last consumer is eDeg's checkpoint job (nodes pinned above, deg
     // folded into eDeg) — release it or the run pins TWO |E|-sized tables
     // for every iteration (r19 ADVICE)
-    if (materialize) graft.plans.Checkpoints.release(e)
+    graft.plans.Checkpoints.release(e)
     // base teleport share (1-d)/n, in fixed point, floor division. The
     // numerator is precomputed in Scala: spelled as `15 * 1000000000` it
     // would be INT32 arithmetic in both engines (silent wrap in Spark's
@@ -223,8 +208,7 @@ object Graph {
       else when(isSeed, lit(Unit / seeds.size)).otherwise(0L)
     var ranks = nodes.crossJoin(nRow)
       .select(col("v"), init.as("r"))
-    var prevCp: DataFrame = null // last every-k checkpoint, superseded below
-    for (i <- 1 to iters) {
+    for (_ <- 1 to iters) {
       val contrib = eDeg.join(ranks, eDeg("src") === ranks("v"))
         .select(col("dst").as("v"), expr("r DIV deg").as("c"))
       val inbound = contrib.groupBy("v").agg(sum(col("c")).as("in_fp"))
@@ -232,14 +216,6 @@ object Graph {
         .crossJoin(nRow)
         .select(col("v"),
           (base + expr(s"($dampingPct * coalesce(in_fp, CAST(0 AS BIGINT))) DIV 100")).as("r"))
-      if (checkpointEvery > 0 && i % checkpointEvery == 0) {
-        // roll: eager checkpoint + release the checkpoint it supersedes —
-        // without the release a long session pins one rank table per k
-        // rounds for the life of the SparkContext
-        ranks = graft.plans.Checkpoints.roll(ranks,
-          Option(prevCp).toSeq: _*)
-        prevCp = ranks
-      }
     }
     ranks.select(col("v"), col("r").as("rank_fp"),
       round(col("r").cast("double") / Unit.toDouble, 6).as("rank"))
@@ -264,15 +240,13 @@ object Graph {
     * table feeds the next round AND the final projection, and unpinned
     * plans re-derive the whole upstream per reference. */
   def bfs(edges: DataFrame, srcCol: String, dstCol: String,
-          seeds: Seq[Long], maxHops: Int, unreachable: Int = 99,
-          materialize: Boolean = true): DataFrame = {
+          seeds: Seq[Long], maxHops: Int, unreachable: Int = 99): DataFrame = {
     require(seeds.nonEmpty, "BFS needs a seed set")
     require(maxHops >= 1 && maxHops < unreachable)
-    def pin(df: DataFrame): DataFrame =
-      if (materialize) df.localCheckpoint() else df
-    val e = pin(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    val nodes = pin(e.select(col("src").as("v"))
-      .union(e.select(col("dst").as("v"))).distinct())
+    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+      .localCheckpoint()
+    val nodes = e.select(col("src").as("v"))
+      .union(e.select(col("dst").as("v"))).distinct().localCheckpoint()
     var dist = nodes.select(col("v"),
       when(col("v").isInCollection(seeds), 0)
         .otherwise(unreachable).as("d"))
@@ -284,13 +258,12 @@ object Graph {
         .groupBy("v").agg(min(col("d")).as("d"))
       // roll: eager checkpoint + release of hop k-1's blocks (pinned
       // lazily, they would otherwise accumulate one table per hop)
-      dist = if (materialize) graft.plans.Checkpoints.roll(next, dist)
-             else next
+      dist = graft.plans.Checkpoints.roll(next, dist)
     }
     // only the final hop's table backs the returned frame; the edge and
     // node invariants are dead once it is materialized
-    if (materialize) { graft.plans.Checkpoints.release(e)
-                       graft.plans.Checkpoints.release(nodes) }
+    graft.plans.Checkpoints.release(e)
+    graft.plans.Checkpoints.release(nodes)
     dist.select(col("v"), col("d").cast("int").as("d"))
   }
 }

@@ -46,46 +46,72 @@ object PQ {
   private def subDists(x: Column, c: Column, m: Int): Column =
     graft.functions.VectorFunctions.pqSubDists(x, c, m)
 
-  /** Encode a corpus (id, vec ARRAY<DOUBLE>) against a codebook
+  /** The columns of `df` other than `except`: per-row values (an IVF
+    * bucket `cid`) that ride through encode, LUT and code explode. */
+  private def carried(df: DataFrame, except: Set[String]): Seq[Column] =
+    df.columns.toSeq.filterNot(except).map(col)
+
+  /** Encode a corpus (id, vec ARRAY<DOUBLE>, …) against a codebook
     * (code INT, cvec ARRAY<DOUBLE>): one row per id with code columns
-    * c0..c{m-1}. One broadcast join + one aggregation. */
+    * c0..c{m-1}, plus every other corpus column (a per-id value such as
+    * the IVF `cid`), carried as a grouping key. One broadcast join + one
+    * aggregation. */
   def encode(corpus: DataFrame, codebook: DataFrame, m: Int, dim: Int): DataFrame = {
     require(dim % m == 0, s"m=$m must divide dim=$dim")
+    val keys = carried(corpus, Set("vec"))
     val joined = corpus.crossJoin(broadcast(codebook))
     val argmins = (0 until m).map(mi =>
       min_by(col("code"), struct(col(s"_d$mi"), col("code"))).as(s"c$mi"))
     joined
-      .select(col("id"), col("code"),
-        subDists(col("vec"), col("cvec"), m).as("_pd"))
-      .select(col("id") +: col("code") +:
-        (0 until m).map(mi => col("_pd").getItem(mi).as(s"_d$mi")): _*)
-      .groupBy(col("id"))
+      .select(keys ++ Seq(col("code"),
+        subDists(col("vec"), col("cvec"), m).as("_pd")): _*)
+      .select(keys ++ (col("code") +:
+        (0 until m).map(mi => col("_pd").getItem(mi).as(s"_d$mi"))): _*)
+      .groupBy(keys: _*)
       .agg(argmins.head, argmins.tail: _*)
   }
 
-  /** LUT rows (qid, mi, code, d): per-subspace query→codeword distance,
-    * rounded to 6 and fixed-point so the m-way ADC sum is exact in any
-    * order. */
+  /** LUT rows (qid, …, mi, code, d): per-subspace query→codeword
+    * distance, rounded to 6 and fixed-point so the m-way ADC sum is exact
+    * in any order; the query's other columns ride along. */
   private def lutOf(queries: DataFrame, codebook: DataFrame,
                     m: Int): DataFrame = {
+    val keys = carried(queries, Set("qvec"))
     val lutCols = (0 until m).map(mi =>
       struct(lit(mi).as("mi"),
         round(col("_pd").getItem(mi), 6)
           .cast("decimal(18,6)").as("d")).as(s"_s$mi"))
     queries.crossJoin(broadcast(codebook))
-      .select(col("qid"), col("code"),
-        subDists(col("qvec"), col("cvec"), m).as("_pd"))
-      .select(col("qid") +: col("code") +: lutCols: _*)
-      .select(col("qid"), col("code"), explode(array((0 until m).map(mi => col(s"_s$mi")): _*)).as("_e"))
-      .select(col("qid"), col("_e.mi").as("mi"), col("code"), col("_e.d").as("d"))
+      .select(keys ++ Seq(col("code"),
+        subDists(col("qvec"), col("cvec"), m).as("_pd")): _*)
+      .select(keys ++ (col("code") +: lutCols): _*)
+      .select(keys ++ Seq(col("code"),
+        explode(array((0 until m).map(mi => col(s"_s$mi")): _*)).as("_e")): _*)
+      .select(keys ++ Seq(col("_e.mi").as("mi"), col("code"),
+        col("_e.d").as("d")): _*)
   }
 
-  /** Exploded code rows (id, mi, code) from an [[encode]] output. */
-  private def codesOf(encoded: DataFrame, m: Int): DataFrame =
-    encoded.select(col("id"),
+  /** Exploded code rows (id, …, mi, code) from an [[encode]] output. */
+  private def codesOf(encoded: DataFrame, m: Int): DataFrame = {
+    val keys = carried(encoded, (0 until m).map(mi => s"c$mi").toSet)
+    encoded.select(keys :+
         explode(array((0 until m).map(mi =>
-          struct(lit(mi).as("mi"), col(s"c$mi").as("code"))): _*)).as("_e"))
-      .select(col("id"), col("_e.mi").as("mi"), col("_e.code").as("code"))
+          struct(lit(mi).as("mi"), col(s"c$mi").as("code"))): _*)).as("_e"): _*)
+      .select(keys ++ Seq(col("_e.mi").as("mi"), col("_e.code").as("code")): _*)
+  }
+
+  /** Per-(query, candidate) ADC sum over the codes ⋈ LUT join on `on`,
+    * ranked to the top k. */
+  private def adcRanked(encoded: DataFrame, codebook: DataFrame,
+                        queries: DataFrame, m: Int, dim: Int, k: Int,
+                        on: Seq[String]): DataFrame = {
+    require(dim % m == 0, s"m=$m must divide dim=$dim")
+    require(k >= 1, "k must be >= 1")
+    val adc = codesOf(encoded, m).join(lutOf(queries, codebook, m), on)
+      .groupBy(col("qid"), col("id"))
+      .agg(sum(col("d")).as("adc_dist"))
+    rankTopK(adc, k)
+  }
 
   private def rankTopK(adc: DataFrame, k: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -98,41 +124,22 @@ object PQ {
     * corpus. Returns (qid, rank, id, adc_dist) with rank 1..k by
     * (distance, id). */
   def adcTopK(encoded: DataFrame, codebook: DataFrame, queries: DataFrame,
-              m: Int, dim: Int, k: Int): DataFrame = {
-    require(dim % m == 0, s"m=$m must divide dim=$dim")
-    require(k >= 1, "k must be >= 1")
-    val adc = codesOf(encoded, m).join(lutOf(queries, codebook, m), Seq("mi", "code"))
-      .groupBy(col("qid"), col("id"))
-      .agg(sum(col("d")).as("adc_dist"))
-    rankTopK(adc, k)
-  }
+              m: Int, dim: Int, k: Int): DataFrame =
+    adcRanked(encoded, codebook, queries, m, dim, k, Seq("mi", "code"))
 
   /** The full IVF-PQ search: ADC restricted to each query's IVF bucket.
-    * `corpusBuckets` (id, cid) and `queryBuckets` (qid, cid) come from
-    * [[Similarity.assign]]; the candidate join carries the bucket id as
-    * an EXTRA equi-key, so only same-bucket (query, candidate) pairs are
-    * ever scored AND the join shards by bucket — at billion scale this is
-    * the |corpus|/|buckets| candidate reduction of q36 stacked on q81's
-    * 16x memory compression, the standard IVF-PQ layout (Jégou et al.).
-    * Buckets may use a different metric than ADC (cosine assignment over
-    * normalized vectors pairs fine with L2 scoring). */
+    * `encoded` is the [[encode]] of an assigned corpus (id, vec, cid) and
+    * `queries` are assigned (qid, qvec, cid), both via
+    * [[Similarity.assign]] projected to those columns — the bucket id rides
+    * through encode and the LUT, so no bucket table is joined back. The
+    * candidate join carries it as an EXTRA equi-key, so only same-bucket
+    * (query, candidate) pairs are ever scored AND the join shards by
+    * bucket — at billion scale this is the |corpus|/|buckets| candidate
+    * reduction of q36 stacked on q81's 16x memory compression, the
+    * standard IVF-PQ layout (Jégou et al.). Buckets may use a different
+    * metric than ADC (cosine assignment over normalized vectors pairs
+    * fine with L2 scoring). */
   def adcTopKBucketed(encoded: DataFrame, codebook: DataFrame,
-                      queries: DataFrame, m: Int, dim: Int, k: Int,
-                      corpusBuckets: DataFrame,
-                      queryBuckets: DataFrame): DataFrame = {
-    require(dim % m == 0, s"m=$m must divide dim=$dim")
-    require(k >= 1, "k must be >= 1")
-    // project the bucket frames down to (key, cid) HERE: Similarity.assign
-    // returns the full vectors too, and joining them verbatim would drag
-    // every uncompressed vector through the ADC shuffle — the exact cost
-    // this operator exists to avoid
-    val codesB = codesOf(encoded, m)
-      .join(corpusBuckets.select(col("id"), col("cid")), "id")
-    val lutB = lutOf(queries, codebook, m)
-      .join(queryBuckets.select(col("qid"), col("cid")), "qid")
-    val adc = codesB.join(lutB, Seq("mi", "code", "cid"))
-      .groupBy(col("qid"), col("id"))
-      .agg(sum(col("d")).as("adc_dist"))
-    rankTopK(adc, k)
-  }
+                      queries: DataFrame, m: Int, dim: Int, k: Int): DataFrame =
+    adcRanked(encoded, codebook, queries, m, dim, k, Seq("mi", "code", "cid"))
 }

@@ -338,8 +338,8 @@ object RerankPack extends QueryPack {
       // (sim desc, cid asc) winner, but no corpus-sized exchange whose
       // hash keys included the 64-double vector (the old crossJoin×K +
       // groupBy(id, v) shuffled the whole corpus per Lloyd round)
-      val cb = cent.agg(collect_list(struct(col("cid"),
-        col("cv").as("cvec"), sqNorm(col("cv")).as("n2"))).as("cs"))
+      val cb = Similarity.centroidRow(
+        cent.select(col("cid"), col("cv").as("cvec")))
       // roll: each round's frames land EAGERLY and release the round they
       // supersede — lazy per-round checkpoints pinned rounds × corpus
       // blocks for the session lifetime (the BENCH_r06 leak) and let the

@@ -33,13 +33,16 @@ import graft.functions.VectorFunctions._
   */
 object Similarity {
 
-  /** Project (id, vec, …) → (id, vec cast to ARRAY<DOUBLE>, n2 = Σv²),
-    * renaming to avoid collisions after self-joins. */
+  /** Project (id, vec, …) → (id, vec cast to ARRAY<DOUBLE>, n2 = Σv², …),
+    * renaming the three to `<name><suffix>` to avoid collisions after
+    * self-joins. Every other column rides along unchanged (a label, say). */
   private def prepped(df: DataFrame, idCol: String, vecCol: String,
-                      suffix: String): DataFrame =
-    df.select(col(idCol).as(s"id$suffix"),
-      toDoubleArray(col(vecCol)).as(s"vec$suffix"),
-      sqNorm(toDoubleArray(col(vecCol))).as(s"n2$suffix"))
+                      suffix: String): DataFrame = {
+    val v = toDoubleArray(col(vecCol))
+    df.select(Seq(col(idCol).as(s"id$suffix"), v.as(s"vec$suffix"),
+        sqNorm(v).as(s"n2$suffix")) ++
+      df.columns.filterNot(c => c == idCol || c == vecCol).map(col): _*)
+  }
 
   /** Spread a narrow scan across the session's cores before a FLOP-bound
     * broadcast cross join — BroadcastNestedLoopJoin inherits the STREAM
@@ -54,6 +57,16 @@ object Similarity {
   private def pairSim(sa: String, sb: String) =
     cosineRound4(col(s"vec$sa"), col(s"n2$sa"), col(s"vec$sb"), col(s"n2$sb"))
 
+  /** THE candidate scorer of every search operator here: paired corpus
+    * (`_c`) and query (`_q`) [[prepped]] rows → (qid, id, sim, extra…),
+    * dropping self-pairs and pairs failing `keep` (hard negatives pass
+    * their label mismatch). */
+  private def score(pairs: DataFrame, keep: Column = lit(true),
+                    extra: Seq[Column] = Nil): DataFrame =
+    pairs.filter(col("id_c") =!= col("id_q") && keep)
+      .select(Seq(col("id_q").as("qid"), col("id_c").as("id"),
+        pairSim("_c", "_q").as("sim")) ++ extra: _*)
+
   /** Per-query top-k of scored (qid, id, sim, …) rows, ranked (sim DESC,
     * id ASC) into a 1-based `rank` column — the one ranking window every
     * search operator here ends in. */
@@ -66,11 +79,7 @@ object Similarity {
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val c = spread(prepped(corpus, "id", "vec", "_c"))
     val q = prepped(queries, "qid", "qvec", "_q")
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("id_c") =!= col("id_q"))
-      .select(col("id_q").as("qid"), col("id_c").as("id"),
-        pairSim("_c", "_q").as("sim"))
-    topK(scored, k)
+    topK(score(c.crossJoin(broadcast(q))), k)
   }
 
   /** Hard-negative mining for contrastive training: per query, the top-k
@@ -84,51 +93,27 @@ object Similarity {
     * operator) exactly like the ANN queries; this exact form is also the
     * recall oracle for that swap. */
   def hardNegatives(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val c = corpus.select(col("id").as("id_c"),
-      toDoubleArray(col("vec")).as("vec_c"),
-      sqNorm(toDoubleArray(col("vec"))).as("n2_c"),
-      col("label").as("lbl_c"))
-    val q = queries.select(col("qid").as("id_q"),
-      toDoubleArray(col("qvec")).as("vec_q"),
-      sqNorm(toDoubleArray(col("qvec"))).as("n2_q"),
-      col("qlabel").as("lbl_q"))
-    val scored = spread(c).crossJoin(broadcast(q))
-      .filter(col("id_c") =!= col("id_q") && col("lbl_c") =!= col("lbl_q"))
-      .select(col("id_q").as("qid"), col("id_c").as("id"),
-        pairSim("_c", "_q").as("sim"))
-    topK(scored, k)
+    val c = spread(prepped(corpus, "id", "vec", "_c"))
+    val q = prepped(queries, "qid", "qvec", "_q")
+    topK(score(c.crossJoin(broadcast(q)), col("label") =!= col("qlabel")), k)
   }
 
-  /** Assign each row to its highest-cosine centroid: (id, vec, cid).
-    *
-    * Argmax as `max_by` aggregation, not a row_number window: the window
-    * form shuffles ALL |rows| × |centroids| scored pairs to sort each
-    * partition; `max_by` partial-aggregates map-side, so only one
-    * candidate per (row, task) crosses the wire — the difference between
-    * shuffling k× the corpus and shuffling the corpus once at 100 TB.
-    * Ties break exactly like the previous ORDER BY (sim DESC, cid ASC):
-    * the ordering struct is (sim, -cid), nulls pinned below every real
-    * cosine (a zero-norm vector has sim null → assigned the last-ranked
-    * centroid, never "closest"). */
-  def assign(data: DataFrame, centroids: DataFrame,
-             idCol: String, vecCol: String): DataFrame = {
-    val d = spread(prepped(data, idCol, vecCol, "_d"))
-    val c = prepped(centroids, "cid", "cvec", "_k")
-    d.crossJoin(broadcast(c))
-      .groupBy(col("id_d"))
-      .agg(max_by(
-        struct(col("vec_d"), col("n2_d"), col("id_k")),
-        struct(coalesce(pairSim("_d", "_k"), lit(-2.0)).as("s"),
-          (-col("id_k")).as("nid"))).as("best"))
-      .select(col("id_d").as(idCol), col("best.vec_d").as(vecCol),
-        col("best.n2_d").as("n2"), col("best.id_k").as("cid"))
+  /** The K centroids (cid, cvec) folded into ONE row, `cs` =
+    * ARRAY<STRUCT<cid, cvec ARRAY<DOUBLE>, n2>>: the broadcast operand of
+    * [[nearestCentroid]], shared by [[assign]] and the k-means Lloyd
+    * round. */
+  def centroidRow(centroids: DataFrame): DataFrame = {
+    val v = toDoubleArray(col("cvec"))
+    centroids.agg(collect_list(
+      struct(col("cid"), v.as("cvec"), sqNorm(v).as("n2"))).as("cs"))
   }
 
   /** The nearest centroid's `cid` for one row (vec, n2 = Σv²), scanning an
     * ARRAY<STRUCT<cid, cvec, n2>>: `array_max` over per-centroid
-    * (sim, -cid, cid) structs — no aggregation, no shuffle. Tie/null
-    * semantics match [[assign]]: (rounded sim DESC, cid ASC), zero-norm
-    * rows fall to the last-ranked centroid via the -2.0 floor. */
+    * (sim, -cid, cid) structs — no aggregation, no shuffle. Ties break on
+    * (rounded sim DESC, cid ASC); a zero-norm or null vector has sim null
+    * for every centroid and falls to the smallest cid via the -2.0 floor
+    * (never "closest"). An empty array gives a null cid. */
   def nearestCentroid(vec: Column, n2: Column, centroids: Column): Column =
     array_max(transform(centroids, c => struct(
       coalesce(cosineRound4(vec, n2, c.getField("cvec"), c.getField("n2")),
@@ -136,9 +121,34 @@ object Similarity {
       negate(c.getField("cid")).as("nid"), c.getField("cid").as("cid"))))
       .getField("cid")
 
-  /** Scan-stage centroid assignment for STREAMING/serve paths: centroids
-    * ride the plan as a literal array (there are few — the IVF codebook)
-    * into [[nearestCentroid]] — legal in any streaming plan. */
+  /** [[prepped]] rows bucketed: each row of `df` gains its nearest
+    * centroid's `cid`. Row-local — the centroids ride as ONE broadcast
+    * [[centroidRow]], so no corpus-sized exchange, and every carried
+    * column (a label) travels through the assignment. */
+  private def buckets(df: DataFrame, centroids: DataFrame, idCol: String,
+                      vecCol: String, suffix: String): DataFrame =
+    spread(prepped(df, idCol, vecCol, suffix))
+      .crossJoin(broadcast(centroidRow(centroids)))
+      .withColumn("cid", nearestCentroid(col(s"vec$suffix"),
+        col(s"n2$suffix"), col("cs")))
+      .drop("cs")
+
+  private def unsuffixed(df: DataFrame, idCol: String, vecCol: String) =
+    df.withColumnsRenamed(
+      Map("id_d" -> idCol, "vec_d" -> vecCol, "n2_d" -> "n2"))
+
+  /** Assign each row to its highest-cosine centroid: (id, vec ARRAY<DOUBLE>,
+    * n2, …, cid), one output row per input row, every other input column
+    * carried between n2 and cid. Tie and null semantics are
+    * [[nearestCentroid]]'s. */
+  def assign(data: DataFrame, centroids: DataFrame,
+             idCol: String, vecCol: String): DataFrame =
+    unsuffixed(buckets(data, centroids, idCol, vecCol, "_d"), idCol, vecCol)
+
+  /** Scan-stage centroid assignment for STREAMING/serve paths: the same
+    * row-local [[nearestCentroid]] as [[assign]], with the centroids riding
+    * the plan as a literal array (there are few — the IVF codebook), so
+    * no join at all — legal in any streaming plan. */
   def assignScan(data: DataFrame, centroidsLocal: Seq[(Long, Array[Double])],
                  idCol: String, vecCol: String): DataFrame = {
     require(centroidsLocal.nonEmpty, "need at least one centroid")
@@ -146,29 +156,20 @@ object Similarity {
       struct(lit(cid).as("cid"), lit(cvec).as("cvec"),
         lit(cvec.map(x => x * x).sum).as("n2"))
     }: _*)
-    prepped(data, idCol, vecCol, "_d").select(col("id_d").as(idCol),
-      col("vec_d").as(vecCol), col("n2_d").as("n2"),
-      nearestCentroid(col("vec_d"), col("n2_d"), cs).as("cid"))
+    unsuffixed(prepped(data, idCol, vecCol, "_d").withColumn("cid",
+      nearestCentroid(col("vec_d"), col("n2_d"), cs)), idCol, vecCol)
   }
 
   /** IVF top-k: search only the query's centroid bucket. Trades recall for
     * a |corpus|/|buckets| reduction in scored pairs. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
               k: Int): DataFrame = {
-    val corpusB = assign(corpus, centroids, "id", "vec")
-      .select(col("cid"), col("id").as("id_c"), col("vec").as("vec_c"),
-        col("n2").as("n2_c"))
-    val queriesB = assign(queries, centroids, "qid", "qvec")
-      .select(col("cid"), col("qid").as("id_q"), col("qvec").as("vec_q"),
-        col("n2").as("n2_q"))
+    val corpusB = buckets(corpus, centroids, "id", "vec", "_c")
+    val queriesB = buckets(queries, centroids, "qid", "qvec", "_q")
     // query side is always ≪ corpus: broadcast it so the corpus never
-    // shuffles on cid (post-window stats are unknown to Catalyst, which
-    // would otherwise pick a sort-merge join)
-    val scored = broadcast(queriesB).join(corpusB, "cid")
-      .filter(col("id_c") =!= col("id_q"))
-      .select(col("id_q").as("qid"), col("id_c").as("id"),
-        pairSim("_c", "_q").as("sim"))
-    topK(scored, k)
+    // shuffles on cid (the assigned side's stats are unknown to Catalyst,
+    // which would otherwise pick a sort-merge join)
+    topK(score(broadcast(queriesB).join(corpusB, "cid")), k)
   }
 
   /** Multi-probe IVF search — THE recall/latency knob of an IVF index:
@@ -197,9 +198,7 @@ object Similarity {
   def ivfMultiProbeScored(corpus: DataFrame, queries: DataFrame,
                           centroids: DataFrame, nprobe: Int): DataFrame = {
     require(nprobe >= 1, "nprobe must be >= 1")
-    val corpusB = assign(corpus, centroids, "id", "vec")
-      .select(col("cid"), col("id").as("id_c"), col("vec").as("vec_c"),
-        col("n2").as("n2_c"))
+    val corpusB = buckets(corpus, centroids, "id", "vec", "_c")
     val q = prepped(queries, "qid", "qvec", "_q")
     val c = prepped(centroids, "cid", "cvec", "_k")
     // the probe ranking window partitions by query id over a broadcast-
@@ -211,44 +210,29 @@ object Similarity {
       .filter(col("rn") <= nprobe)
       .select(col("id_q"), col("vec_q"), col("n2_q"),
         col("id_k").as("cid"), col("rn").as("probe_rank"))
-    broadcast(probes).join(corpusB, "cid")
-      .filter(col("id_c") =!= col("id_q"))
-      .select(col("id_q").as("qid"), col("id_c").as("id"),
-        pairSim("_c", "_q").as("sim"), col("probe_rank"))
+    score(broadcast(probes).join(corpusB, "cid"),
+      extra = Seq(col("probe_rank")))
   }
 
   /** The 100 TB path for [[hardNegatives]]: search only the query's IVF
     * bucket (the q36 layout) and exclude same-label members there — the
     * label column simply travels with the index rows, so the bucket scan
     * costs the same as plain IVF search. Inputs: corpus (id, vec, label),
-    * queries (qid, qvec, qlabel), centroids (cid, cvec). Labels are
-    * re-joined after assignment here; a materialized index
-    * ([[ivfWriteIndex]]-style) would store them alongside cid. */
+    * queries (qid, qvec, qlabel), centroids (cid, cvec). Assignment is
+    * row-local, so the labels ride through it beside cid — exactly what
+    * an [[ivfWrite]] index of a labeled corpus stores. */
   def ivfHardNegatives(corpus: DataFrame, queries: DataFrame,
                        centroids: DataFrame, k: Int): DataFrame = {
-    val corpusB = assign(corpus.select(col("id"), col("vec")),
-        centroids, "id", "vec")
-      .select(col("cid"), col("id").as("id_c"), col("vec").as("vec_c"),
-        col("n2").as("n2_c"))
-      .join(corpus.select(col("id").as("id_c"), col("label").as("lbl_c")),
-        "id_c")
-    val queriesB = assign(queries.select(col("qid"), col("qvec")),
-        centroids, "qid", "qvec")
-      .select(col("cid"), col("qid").as("id_q"), col("qvec").as("vec_q"),
-        col("n2").as("n2_q"))
-      .join(queries.select(col("qid").as("id_q"), col("qlabel").as("lbl_q")),
-        "id_q")
-    val scored = broadcast(queriesB).join(corpusB, "cid")
-      .filter(col("id_c") =!= col("id_q") && col("lbl_c") =!= col("lbl_q"))
-      .select(col("id_q").as("qid"), col("id_c").as("id"),
-        pairSim("_c", "_q").as("sim"))
-    topK(scored, k)
+    val corpusB = buckets(corpus, centroids, "id", "vec", "_c")
+    val queriesB = buckets(queries, centroids, "qid", "qvec", "_q")
+    topK(score(broadcast(queriesB).join(corpusB, "cid"),
+      col("label") =!= col("qlabel")), k)
   }
 
   /** Train IVF centroids with k-means (seeded) — real centroids instead of
     * arbitrary sample vectors; returns (cid, cvec) in the [[assign]]
     * contract. At 100 TB the fit runs on a sample; assignment of the full
-    * corpus stays a broadcast crossJoin + argmax. */
+    * corpus stays row-local against the broadcast centroid row. */
   def trainCentroids(corpus: DataFrame, k: Int, seed: Long = 42L,
                      maxIter: Int = 20): DataFrame = {
     import org.apache.spark.ml.clustering.KMeans
@@ -293,14 +277,8 @@ object Similarity {
     val corpusB = spark.read.parquet(path)
       .select(col("cid"), col("id").as("id_c"),
         toDoubleArray(col("vec")).as("vec_c"), col("n2").as("n2_c"))
-    val queriesB = assign(queries, centroids, "qid", "qvec")
-      .select(col("cid"), col("qid").as("id_q"),
-        toDoubleArray(col("qvec")).as("vec_q"), col("n2").as("n2_q"))
-    val scored = corpusB.join(broadcast(queriesB), "cid")
-      .filter(col("id_c") =!= col("id_q"))
-      .select(col("id_q").as("qid"), col("id_c").as("id"),
-        pairSim("_c", "_q").as("sim"))
-    topK(scored, k)
+    val queriesB = buckets(queries, centroids, "qid", "qvec", "_q")
+    topK(score(corpusB.join(broadcast(queriesB), "cid")), k)
   }
 
   /** ANN via spark.ml BucketedRandomProjectionLSH: hash vectors into
@@ -338,10 +316,7 @@ object Similarity {
           posexplode(col("hashes")).as(Seq("table", "_h")))
         .withColumn("bucket", vector_to_array(col("_h")).getItem(0))
         .drop("_h")
-    val pairs = banded(c, "_c").join(banded(q, "_q"), Seq("table", "bucket"))
-      .filter(col("id_c") =!= col("id_q"))
-      .select(col("id_q").as("qid"), col("id_c").as("id"),
-        pairSim("_c", "_q").as("sim"))
+    val pairs = score(banded(c, "_c").join(banded(q, "_q"), Seq("table", "bucket")))
       // a pair colliding in several tables appears once per table; partial
       // aggregation dedups map-side, and the exchange carries 3 scalars
       .groupBy(col("qid"), col("id")).agg(first(col("sim")).as("sim"))

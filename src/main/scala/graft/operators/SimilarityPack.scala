@@ -368,8 +368,8 @@ object SimilarityPack extends QueryPack {
     // hash order — the selection step that keeps a corpus subset spread
     // across semantic clusters instead of letting one dense cluster
     // dominate (the balance half of SemDeDup-style curation).
-    // Scale shape: assignment is the q36 broadcast max_by (one shuffle of
-    // the corpus); the quota is a rank-limit window (WindowGroupLimit —
+    // Scale shape: assignment is the q36 row-local argmax against one
+    // broadcast centroid row (the corpus never shuffles for it); the quota is a rank-limit window (WindowGroupLimit —
     // per-task top-m heaps before the exchange, plan-asserted for the
     // same shape in SelectionSpec).
     // PCA dimensionality reduction (64 -> 8) ahead of ANN — the standard
@@ -479,13 +479,14 @@ object SimilarityPack extends QueryPack {
       val qs = all.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("qid"), toDoubleArray(col("embedding")).as("qvec"))
       val cents = centroids(s, dir)
+      // the bucket id rides through encode's grouping and the LUT: no
+      // (id, cid) table is joined back onto the codes
       val corpB = Similarity.assign(corp, cents, "id", "vec")
-        .select(col("id"), col("cid"))
+        .select(col("id"), col("vec"), col("cid"))
       val qB = Similarity.assign(qs, cents, "qid", "qvec")
-        .select(col("qid"), col("cid"))
-      val enc = PQ.encode(corp, codebook, m = PqM, dim = Dim)
-      PQ.adcTopKBucketed(enc, codebook, qs, m = PqM, dim = Dim, k = 3,
-          corpusBuckets = corpB, queryBuckets = qB)
+        .select(col("qid"), col("qvec"), col("cid"))
+      val enc = PQ.encode(corpB, codebook, m = PqM, dim = Dim)
+      PQ.adcTopKBucketed(enc, codebook, qB, m = PqM, dim = Dim, k = 3)
         .select(col("qid"), col("rank"), col("id").as("neighbor_id"),
           round(col("adc_dist").cast("double"), 6).as("adc_dist"))
         .orderBy("qid", "rank")

@@ -28,15 +28,6 @@ class GraphVectorSpec extends SparkSpec {
     r.filter(_._1 != 1L).foreach(s => assert(hub > s._3))
   }
 
-  test("pageRank: checkpointed lineage produces the identical fixed point") {
-    val e = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L)).toDF("src", "dst")
-    val plain = Graph.pageRank(e, "src", "dst", iters = 6)
-      .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
-    val ck = Graph.pageRank(e, "src", "dst", iters = 6, checkpointEvery = 2)
-      .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
-    assert(plain === ck)
-  }
-
   test("pageRank property: positive bounded ranks on random graphs") {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed

@@ -63,7 +63,7 @@ class MiningSpec extends SparkSpec {
     )
     val seeds = Seq(0L, 1L)
     val got = Graph.bfs(edges.toDF("src", "dst"), "src", "dst",
-        seeds, maxHops = 6, materialize = false)
+        seeds, maxHops = 6)
       .as[(Long, Int)].collect().toMap
     // reference BFS
     val adj = edges.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
@@ -85,8 +85,7 @@ class MiningSpec extends SparkSpec {
   test("bfs caps distances at the unreachable sentinel") {
     // a chain longer than maxHops: nodes past the budget stay at 99
     val edges = (0L until 10L).map(i => i -> (i + 1)).toDF("src", "dst")
-    val got = Graph.bfs(edges, "src", "dst", Seq(0L), maxHops = 3,
-        materialize = false)
+    val got = Graph.bfs(edges, "src", "dst", Seq(0L), maxHops = 3)
       .as[(Long, Int)].collect().toMap
     assert(got(3L) === 3 && got(4L) === 99 && got(10L) === 99)
   }

@@ -34,12 +34,12 @@ class PQSpec extends SparkSpec {
       (10L, Seq(0.1, 0.1, 0.1, 0.1)), (11L, Seq(0.9, 0.9, 0.9, 0.9)),
       (20L, Seq(5.1, 5.1, 5.1, 5.1)), (21L, Seq(4.9, 4.9, 4.9, 4.9))
     ).toDF("id", "vec")
-    val enc = PQ.encode(corpus, codebook, m = 2, dim = dim)
     val queries = Seq((100L, Seq(0.0, 0.0, 0.0, 0.0))).toDF("qid", "qvec")
-    val corpB = Seq((10L, 1L), (11L, 1L), (20L, 2L), (21L, 2L)).toDF("id", "cid")
-    val qB = Seq((100L, 1L)).toDF("qid", "cid")
-    val got = PQ.adcTopKBucketed(enc, codebook, queries, m = 2, dim = dim,
-        k = 4, corpB, qB)
+    // bucket ids ride on the corpus (through encode) and on the queries
+    val corpB = corpus.withColumn("cid", when(col("id") < 20L, 1L).otherwise(2L))
+    val enc = PQ.encode(corpus, codebook, m = 2, dim = dim)
+    val got = PQ.adcTopKBucketed(PQ.encode(corpB, codebook, m = 2, dim = dim),
+        codebook, queries.withColumn("cid", lit(1L)), m = 2, dim = dim, k = 4)
       .select("qid", "rank", "id").as[(Long, Int, Long)].collect().toSeq.sorted
     // bucket 2's candidates (20, 21) must never appear, even with k=4
     assert(got === Seq((100L, 1, 10L), (100L, 2, 11L)))

@@ -37,6 +37,47 @@ class SimilaritySpec extends SparkSpec {
     assert(ivf.map(_._1) === bf.map(_._1), "every query answered")
   }
 
+  test("row-local assign equals the crossJoin + max_by reference, zero-norm row and exact ties included") {
+    import graft.functions.VectorFunctions.{cosineRound4, sqNorm, toDoubleArray}
+    import org.apache.spark.sql.DataFrame
+    // the corpus-sized form assign replaced: every (row, centroid) pair
+    // scored, argmax per row by max_by over (sim, -cid) after a groupBy(id)
+    def reference(data: DataFrame, cents: DataFrame, idCol: String,
+                  vecCol: String): DataFrame = {
+      def prep(df: DataFrame, i: String, v: String, sfx: String) =
+        df.select(col(i).as(s"id$sfx"), toDoubleArray(col(v)).as(s"vec$sfx"),
+          sqNorm(toDoubleArray(col(v))).as(s"n2$sfx"))
+      prep(data, idCol, vecCol, "_d").crossJoin(broadcast(prep(cents, "cid", "cvec", "_k")))
+        .groupBy(col("id_d"))
+        .agg(max_by(
+          struct(col("vec_d"), col("n2_d"), col("id_k")),
+          struct(coalesce(cosineRound4(col("vec_d"), col("n2_d"), col("vec_k"),
+            col("n2_k")), lit(-2.0)).as("s"), (-col("id_k")).as("nid"))).as("best"))
+        .select(col("id_d").as(idCol), col("best.vec_d").as(vecCol),
+          col("best.n2_d").as("n2"), col("best.id_k").as("cid"))
+    }
+    def rows(df: DataFrame) = df.select(col("id"), col("vec"), col("n2"), col("cid"))
+      .as[(Long, Seq[Double], Double, Long)].collect().toSet
+    // cids 5 and 2 point the same way (an exact tie for every row near
+    // (1, 0)); (1, 1) ties 2 against 7 at the rounded sim; (0, 0) has no
+    // cosine at all and must fall to the smallest cid
+    val cents = Seq((5L, Seq(2.0, 0.0)), (2L, Seq(1.0, 0.0)), (7L, Seq(0.0, 1.0)),
+      (9L, Seq(-1.0, -1.0))).toDF("cid", "cvec")
+    val data = Seq((1L, Seq(1.0, 0.1), "a"), (2L, Seq(1.0, 1.0), "b"),
+      (3L, Seq(0.0, 0.0), "c"), (4L, Seq(0.1, 3.0), "d"),
+      (5L, Seq(-2.0, -1.5), "e")).toDF("id", "vec", "label")
+    val got = Similarity.assign(data, cents, "id", "vec")
+    assert(rows(got) === rows(reference(data, cents, "id", "vec")))
+    assert(got.select("id", "cid").as[(Long, Long)].collect().toMap ===
+      Map(1L -> 2L, 2L -> 2L, 3L -> 2L, 4L -> 7L, 5L -> 9L))
+    // row-local: one row per input row, carried columns ride along
+    assert(got.select("id", "label").as[(Long, String)].collect().toSet ===
+      Set(1L -> "a", 2L -> "b", 3L -> "c", 4L -> "d", 5L -> "e"))
+    // and on the real FLOAT embeddings against the 8-centroid codebook
+    assert(rows(Similarity.assign(corpus, centroids, "id", "vec")) ===
+      rows(reference(corpus, centroids, "id", "vec")))
+  }
+
   test("LSH ANN achieves high rank-1 recall vs brute force") {
     val corpus = Tables.table(spark, sf0, "embeddings")
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
