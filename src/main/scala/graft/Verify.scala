@@ -7,13 +7,7 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = DriverSession()
     new java.io.File(outDir).mkdirs()
-    // Dev convenience: GRAFT_VERIFY_ONLY=q125,q126 runs just those queries
-    // (prefix match). The driver sets no env, so it always runs everything.
-    val only = sys.env.get("GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    def selected(name: String): Boolean =
-      only.forall(_.exists(name.startsWith))
-    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
+    SparkEntry.queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

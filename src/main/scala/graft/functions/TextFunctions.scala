@@ -54,14 +54,6 @@ object TextFunctions {
   def lcsLen(a: Column, b: Column): Column =
     column(expressions.LcsLen(expression(a), expression(b)))
 
-  /** Character n-gram shingles of the raw string. */
-  def charShingles(text: Column, n: Int): Column =
-    when(length(text) >= n,
-      transform(
-        sequence(lit(1), length(text) - (n - 1)),
-        i => text.substr(i, lit(n))))
-      .otherwise(array().cast("array<string>"))
-
   /** Deflate compression ratio (compressed/raw bytes) — the corpus quality
     * signal behind "too repetitive / binary junk" filters; see
     * [[graft.functions.expressions.DeflateRatio]]. */

@@ -54,7 +54,9 @@ object VectorFunctions {
   /** Element-wise sum AGGREGATE over ARRAY<DOUBLE> rows — one mutable
     * buffer per group with map-side combine (see
     * [[graft.functions.expressions.VectorSumAgg]]); replaces
-    * posexplode→per-pos-sum→re-assemble and its extra shuffle. */
+    * posexplode→per-pos-sum→re-assemble and its extra shuffle. Callers:
+    * the SGD gradient ([[graft.streaming.SgdUpdater]]) and
+    * [[graft.operators.Training.meanVector]] (the MEAN rows, q04). */
   def vecSum(a: Column): Column = {
     import org.apache.spark.sql.GraftSqlBridge.{column, expression}
     import org.apache.spark.sql.catalyst.expressions.Cast
@@ -66,8 +68,10 @@ object VectorFunctions {
 
   /** [[vecSum]]'s exact-integer twin over ARRAY<BIGINT> rows (see
     * [[graft.functions.expressions.VectorSumLongAgg]]): BIGINT adds are
-    * associative, so fixed-point vector sums (the q241 Lloyd lattice)
-    * reproduce bit-for-bit under any partitioning. The argument must
+    * associative, so fixed-point vector sums reproduce bit-for-bit under
+    * any partitioning. Callers: the q241 Lloyd round, q109's pooled means,
+    * q214's per-dimension sums and the q166/q228 label centroids
+    * ([[graft.operators.VectorPack.labelCentroids]]). The argument must
     * already be ARRAY<BIGINT>: an ARRAY<DOUBLE> fails analysis rather than
     * being silently truncated to integers. */
   def vecSumLong(a: Column): Column = {

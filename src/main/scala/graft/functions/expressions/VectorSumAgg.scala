@@ -22,6 +22,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   *
   * Null rows are ignored; the first non-null row fixes the length (all
   * engine vectors are fixed-length per model). Empty groups yield null.
+  *
+  * Callers (through `VectorFunctions.vecSum`): the SGD gradient sum in
+  * `SgdUpdater` and `Training.meanVector`, which `Training.meanExport`
+  * publishes as the MEAN rows and q04 lays out per dimension.
   */
 case class VectorSumAgg(
     child: Expression,

@@ -20,6 +20,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * containing any null element is skipped whole, ragged lengths grow the
   * buffer (never truncate), empty groups yield null. Overflow raises
   * (`Math.addExact` in update and merge), as ANSI `sum` does — no wrap.
+  *
+  * Callers (through `VectorFunctions.vecSumLong`): the q241/q242 k-means
+  * Lloyd round, q109's pooled means, q214's per-dimension sums and
+  * `VectorPack.labelCentroids` (the q166 and q228 class centroids).
   */
 case class VectorSumLongAgg(
     child: Expression,

@@ -29,13 +29,14 @@ object AlsPack extends QueryPack {
         .select(round(col("mse"), 6).as("mse"), col("n"))
     }),
 
-    // A1: global element-wise vector mean (ALSMeanVector.scala:31-34) via
-    // posexplode -> per-position avg; partial aggregation map-side.
+    // A1: global element-wise vector mean (ALSMeanVector.scala:31-34) —
+    // Training.meanVector's one row, laid out as one (dim, mean_f) row per
+    // element.
     "q04_mean_vector" -> ((s, dir) => {
-      Ratings.userFactors(s, dir, K)
-        .select(posexplode(col("uf")).as(Seq("pos", "f")))
-        .groupBy((col("pos") + 1).as("dim"))
-        .agg(round(avg(col("f")), 6).as("mean_f"))
+      Training.meanVector(
+          Ratings.userFactors(s, dir, K).select(col("uf").as("factors")))
+        .select(posexplode(col("mean_vector")).as(Seq("pos", "f")))
+        .select((col("pos") + 1).as("dim"), round(col("f"), 6).as("mean_f"))
         .orderBy("dim")
     }),
 

@@ -51,29 +51,6 @@ object Temporal {
       .drop("_v")
   }
 
-  /** Complete (key, day_idx, cents) daily activity grid: day_idx counts
-    * from the GLOBAL min day, every key gets every day in [0, D), absent
-    * days are zero (a series, unlike [[gapFill]]'s last-observation
-    * semantics for metrics). The zero-filled grid is what correlation /
-    * distance math needs — missing days are real zeros of activity. */
-  def dailySeries(events: DataFrame, keyCol: String, tsCol: String,
-                  centsCol: Column): DataFrame = {
-    val b = events.select(col(keyCol).as("k"),
-      (unix_timestamp(date_trunc("day", col(tsCol))) / lit(86400L))
-        .cast("long").as("d"),
-      centsCol.cast("long").as("c"))
-    val agg = b.groupBy("k", "d").agg(sum("c").as("c"))
-    val bounds = b.agg(min("d").as("d0"), max("d").as("d1"))
-    val grid = b.select("k").distinct().crossJoin(bounds)
-      .select(col("k"),
-        explode(sequence(lit(0L), col("d1") - col("d0"))).as("day_idx"),
-        col("d0"))
-    grid.join(agg, grid("k") === agg("k") &&
-        grid("day_idx") + grid("d0") === agg("d"), "left")
-      .select(grid("k").as("key"), col("day_idx"),
-        coalesce(col("c"), lit(0L)).as("cents"))
-  }
-
   /** SAX-style coarse signature of a daily series: split the D days into
     * `segments` equal spans, emit one bit per span — 1 iff the span's
     * sum × segments ≥ the series total (above-average activity). Pure

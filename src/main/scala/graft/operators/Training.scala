@@ -7,6 +7,8 @@ import org.apache.spark.ml.recommendation.{ALS, ALSModel}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorFunctions.vecSum
+
 /** Batch model training (SURVEY.md §7.2 step 3, §2.10 ML estimators).
   *
   * Reference jobs:
@@ -73,15 +75,19 @@ object Training {
     enc(userF, "user_id", "uf", "U").unionAll(enc(itemF, "item_id", "itf", "I"))
   }
 
-  /** ALSMeanVector parity: element-wise mean over all factor vectors —
-    * posexplode + per-position avg (partial map-side agg), re-assembled in
-    * position order. */
+  /** ALSMeanVector parity: element-wise mean over all factor vectors — one
+    * aggregate of `vecSum` and the row count (map-side partials), each sum
+    * then divided by the count, so every element has `avg`'s bits. Vectors
+    * of unequal length raise: a per-row count is only a per-element count
+    * when every vector has the same length. */
   def meanVector(factors: DataFrame): DataFrame =
     factors
-      .select(posexplode(col("factors")).as(Seq("pos", "f")))
-      .groupBy(col("pos")).agg(avg(col("f")).as("mean_f"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("mean_f")))),
-        e => e.getField("mean_f")).as("mean_vector"))
+      .agg(vecSum(col("factors")).as("s"), count(col("factors")).as("n"),
+        min(size(col("factors"))).as("k_min"),
+        max(size(col("factors"))).as("k_max"))
+      .select(when(col("k_min") =!= col("k_max"),
+          raise_error(lit("meanVector: factor vectors differ in length")))
+        .otherwise(transform(col("s"), x => x / col("n"))).as("mean_vector"))
 
   /** The mean rows in wire format — "MEAN,U,…" / "MEAN,I,…", the exact
     * export of ALSMeanVector.scala:35 that SGD's fallback consumes. */

@@ -38,6 +38,21 @@ object VectorPack extends QueryPack {
     Tables.table(s, dir, "embeddings")
       .select(col("vec_id"), VectorFunctions.toDoubleArray(col("embedding")).as("v"))
 
+  /** Per-label embedding sums in 1e-6 fixed point, (label, cv, n): each
+    * element is floored to a micro-long, summed per label by ONE `vecSumLong`
+    * (BIGINT adds are associative, so the sums are identical under any
+    * shuffle partitioning) next to the label's row count. Cosine is
+    * scale-invariant, so the sum vector `cv` stands in for the centroid
+    * with no division step — the q166 and q228 centroids. */
+  private[graft] def labelCentroids(s: SparkSession, dir: String): DataFrame =
+    Tables.table(s, dir, "embeddings")
+      .groupBy("label")
+      .agg(VectorFunctions.vecSumLong(transform(col("embedding"),
+          x => floor(x.cast("double") * lit(1e6)).cast("long"))).as("sv"),
+        count(lit(1)).as("n"))
+      .select(col("label"),
+        transform(col("sv"), v => v.cast("double")).as("cv"), col("n"))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ColBERT-style late interaction: score(q, d) = Σ_{qv ∈ q} max_{dv ∈ d}
@@ -76,22 +91,20 @@ object VectorPack extends QueryPack {
     // (fixed-point integer sums — see PoolScale), L2-normalize, truncate
     // to the 16-dim matryoshka prefix, re-normalize. Output: group, fan-in,
     // full-vector norm, first 4 components of the final truncated unit
-    // vector. The explode shuffles (group, dim) pairs, never raw text or
-    // full vectors twice; one aggregation + one per-group reassembly.
+    // vector. One aggregation per group: the element-wise fixed-point sum
+    // (`vecSumLong`) beside the row count. The mean divides by the ROW
+    // count, so vectors of unequal length in one group raise.
     "q109_vec_pool" -> ((s, dir) => {
-      val x = emb(s, dir)
-        .select((col("vec_id") % PoolGroups).as("g"),
-          posexplode(col("v")).as(Seq("i0", "xv")))
-        .select(col("g"), (col("i0") + 1).as("i"),
-          round(col("xv") * lit(PoolScale), 0).cast("long").as("sv"))
-      val m = x.groupBy("g", "i")
-        .agg(sum(col("sv")).as("ssum"), count(lit(1)).as("n"))
-        .withColumn("mv",
-          col("ssum").cast("double") / (col("n").cast("double") * lit(PoolScale)))
-      val arr = m.groupBy("g")
-        .agg(max(col("n")).as("n_vecs"),
-          array_sort(collect_list(struct(col("i"), col("mv")))).as("pairs"))
-        .withColumn("mvec", transform(col("pairs"), p => p.getField("mv")))
+      val arr = emb(s, dir)
+        .groupBy((col("vec_id") % PoolGroups).as("g"))
+        .agg(VectorFunctions.vecSumLong(transform(col("v"),
+            x => round(x * lit(PoolScale), 0).cast("long"))).as("ssum"),
+          count(lit(1)).as("n_vecs"),
+          min(size(col("v"))).as("k_min"), max(size(col("v"))).as("k_max"))
+        .withColumn("mvec", when(col("k_min") =!= col("k_max"),
+            raise_error(lit("q109_vec_pool: vectors in a group differ in length")))
+          .otherwise(transform(col("ssum"), v => v.cast("double") /
+            (col("n_vecs").cast("double") * lit(PoolScale)))))
       // squared-norm sums in 1e-12 fixed point: each mv is deterministic
       // (exact integer division), but Spark folds the array in index order
       // while the SQL twin sums GROUP BY rows in arbitrary order — snapping
@@ -113,16 +126,6 @@ object VectorPack extends QueryPack {
         .orderBy("g")
     }),
 
-    // Pairwise similarity of per-class embedding centroids — the
-    // class-collapse / embedding-drift audit: two labels whose centroids
-    // sit near cosine 1 are indistinguishable to the encoder (or the
-    // labels are duplicated). Component sums are 1e-6 fixed-point longs
-    // (associative — identical under any shuffle partitioning; the q109
-    // trick), and cosine is scale-invariant, so the SUM vectors stand in
-    // for the means with no division step at all. The pairwise stage
-    // operates on |labels| rows — a class vocabulary, bounded by
-    // construction, so the < self-join is a broadcast of K rows however
-    // big the corpus that produced them.
     // Confident-learning label-noise audit (Cleanlab-style): estimate
     // which (noisy label → true class) confusions the labeled corpus
     // contains, WITHOUT clean labels. Self-confidence thresholds
@@ -138,15 +141,7 @@ object VectorPack extends QueryPack {
     // scoring is scan-stage, thresholds one tiny agg, argmax a map-side
     // max_by — the corpus shuffles once, on vec_id.
     "q228_label_noise" -> ((s, dir) => {
-      val cells = Tables.table(s, dir, "embeddings")
-        .select(col("label"), posexplode(col("embedding")).as(Seq("i0", "x")))
-        .select(col("label"), col("i0"),
-          floor(col("x").cast("double") * lit(1e6)).cast("long").as("q"))
-      val cent = cells.groupBy("label", "i0").agg(sum(col("q")).as("sv"))
-        .groupBy("label")
-        .agg(transform(array_sort(collect_list(struct(col("i0"), col("sv")))),
-          p => p.getField("sv").cast("double")).as("cv"))
-        .select(col("label").as("j"), col("cv"))
+      val cent = labelCentroids(s, dir).select(col("label").as("j"), col("cv"))
       val rows = Tables.table(s, dir, "embeddings")
         .select(col("vec_id"), col("label").as("noisy"),
           VectorFunctions.toDoubleArray(col("embedding")).as("v"))
@@ -165,18 +160,15 @@ object VectorPack extends QueryPack {
         .orderBy("noisy_label", "pred_label")
     }),
 
+    // Pairwise similarity of per-class embedding centroids — the
+    // class-collapse / embedding-drift audit: two labels whose centroids
+    // sit near cosine 1 are indistinguishable to the encoder (or the
+    // labels are duplicated). The centroids are [[labelCentroids]]'
+    // fixed-point sums. The pairwise stage operates on |labels| rows — a
+    // class vocabulary, bounded by construction, so the < self-join is a
+    // broadcast of K rows however big the corpus that produced them.
     "q166_class_centroids" -> ((s, dir) => {
-      val cells = Tables.table(s, dir, "embeddings")
-        .select(col("label"), posexplode(col("embedding")).as(Seq("i0", "x")))
-        .select(col("label"), (col("i0") + 1).as("i"),
-          floor(col("x").cast("double") * lit(1e6)).cast("long").as("q"))
-      val sums = cells.groupBy("label", "i").agg(sum(col("q")).as("sv"))
-      val n = Tables.table(s, dir, "embeddings")
-        .groupBy("label").agg(count(lit(1)).as("n"))
-      val cent = sums.groupBy("label")
-        .agg(transform(array_sort(collect_list(struct(col("i"), col("sv")))),
-          p => p.getField("sv").cast("double")).as("cv"))
-        .join(n, "label")
+      val cent = labelCentroids(s, dir)
       val a = cent.select(col("label").as("label_a"), col("cv").as("va"),
         col("n").as("n_a"))
       val b = cent.select(col("label").as("label_b"), col("cv").as("vb"),
@@ -191,37 +183,32 @@ object VectorPack extends QueryPack {
     // Per-class semantic diversity WITHOUT pair enumeration: the mean
     // pairwise squared L2 distance collapses to the closed form
     // E‖x−y‖² = 2·(E‖x‖² − ‖E x‖²) — one aggregation pass computes the
-    // number the naive O(n²) self-join would, so the cost at 100 TB is a
-    // posexplode shuffle on (label, dim), never candidate pairs. All
-    // sums ride fixed-point integers (per-row ‖x‖² in 1e-12 units,
-    // per-dim component sums in 1e-7 units; the squared component sums
-    // exceed 64-bit so they widen to DECIMAL(38) / HUGEINT), making the
-    // result bit-identical across engines and shuffle orders. The
-    // collapse detector: diversity near 0 means the class's embeddings
-    // have degenerated to a point.
+    // number the naive O(n²) self-join would, so the cost at 100 TB is one
+    // per-label aggregation, never candidate pairs. All sums ride
+    // fixed-point integers (per-row ‖x‖² in 1e-12 units, per-dim
+    // component sums in 1e-7 units; the squared component sums exceed
+    // 64-bit so they widen to DECIMAL(38) / HUGEINT), making the result
+    // bit-identical across engines and shuffle orders. The collapse
+    // detector: diversity near 0 means the class's embeddings have
+    // degenerated to a point.
     "q214_semantic_diversity" -> ((s, dir) => {
-      val e = Tables.table(s, dir, "embeddings")
       val P = graft.functions.Portable
-      // per-row ‖x‖² in 1e-12 fixed point (micro² units)
-      val row2 = e.select(col("label"),
-        aggregate(col("embedding"), lit(0L), (a, x) =>
-          a + round(x.cast("double") * x.cast("double") * lit(1e12), 0)
-            .cast("long")).as("s2"))
+      def dec(c: Column): Column = c.cast("decimal(38,0)")
+      Tables.table(s, dir, "embeddings")
         .groupBy("label")
-        // per-row s2 fits a long; the corpus-sized SUM widens to DECIMAL
+        // per-row ‖x‖² in 1e-12 fixed point (micro² units) fits a long;
+        // the corpus-sized SUM widens to DECIMAL
         .agg(count(lit(1)).as("n"),
-          sum(col("s2").cast("decimal(38,0)")).as("s2sum"))
-      // per-dim component sums in 1e-7 units, then Σ_i (Σ_rows sv)²
-      val dsum = e
-        .select(col("label"), posexplode(col("embedding")).as(Seq("i0", "x")))
-        .select(col("label"), col("i0"),
-          round(col("x").cast("double") * lit(PoolScale), 0)
-            .cast("long").as("sv"))
-        .groupBy("label", "i0").agg(sum(col("sv")).as("si"))
-        .groupBy("label")
-        .agg(sum(col("si").cast("decimal(19,0)") *
-          col("si").cast("decimal(19,0)")).as("nsum"))
-      row2.join(dsum, "label")
+          sum(dec(aggregate(col("embedding"), lit(0L), (a, x) =>
+            a + round(x.cast("double") * x.cast("double") * lit(1e12), 0)
+              .cast("long")))).as("s2sum"),
+          // per-dim component sums in 1e-7 units
+          VectorFunctions.vecSumLong(transform(col("embedding"),
+            x => round(x.cast("double") * lit(PoolScale), 0).cast("long")))
+            .as("si"))
+        // Σ_i (Σ_rows sv)², each square exact in DECIMAL
+        .withColumn("nsum", aggregate(col("si"), dec(lit(0)),
+          (a, si) => dec(a + dec(si) * dec(si))))
         .select(col("label"), col("n"),
           P.snap6(col("s2sum").cast("double") /
             (col("n").cast("double") * lit(1e12))).as("mean_sq_norm"),
@@ -240,7 +227,10 @@ object VectorPack extends QueryPack {
     // n·Σx² − (Σx)² (exact, DECIMAL-widened) so a tiny negative float
     // residue can never produce NaN stds, and both engines see the
     // identical double. Scale: the shuffle carries dim-count keys with
-    // map-side partial sums — corpus size only touches the scan.
+    // map-side partial sums — corpus size only touches the scan. This is
+    // the one per-position posexplode aggregation left: the output is one
+    // row per dimension anyway, and Σsv² must widen to DECIMAL(38,0),
+    // which `vecSumLong`'s overflow-raising BIGINT adds cannot do.
     "q218_embed_standardize" -> ((s, dir) => {
       val P = graft.functions.Portable
       Tables.table(s, dir, "embeddings")

@@ -36,8 +36,11 @@ object StreamingGroupStats {
         case ((src, lang), rows, state: GroupState[GroupStats]) =>
           val prev = state.getOption.getOrElse(GroupStats(src, lang, 0L, 0L, 0L))
           var n = prev.n; var s1 = prev.s1; var s2 = prev.s2
+          // exact: past 2^63 a wrapped s2 would read as a degenerate group
+          // (the batch twin widens Σr² to DECIMAL; here it raises)
           rows.foreach { r =>
-            n += 1; s1 += r.rm; s2 += r.rm * r.rm
+            n += 1; s1 = Math.addExact(s1, r.rm)
+            s2 = Math.addExact(s2, Math.multiplyExact(r.rm, r.rm))
           }
           val next = GroupStats(src, lang, n, s1, s2)
           state.update(next)

@@ -38,9 +38,6 @@ object Supervision {
     @volatile private var failure: Option[Throwable] = None
     private val terminated = new CountDownLatch(1)
 
-    /** The live query, if one is currently running. */
-    def activeQuery: Option[StreamingQuery] = Option(query)
-
     /** Completed restarts (successful re-starts after a failure). */
     def restarts: Int = restartCount
 

@@ -259,4 +259,27 @@ class DatasetOpsSpec extends SparkSpec {
       assert(c >= -1.0 - 1e-9 && c <= 1.0 + 1e-9)
     }
   }
+
+  test("labelCentroids equals the posexplode per-position sum, bit for bit") {
+    val e = Tables.table(spark, sf1, "embeddings")
+    // reference: one row per (label, position), summed, re-assembled in
+    // position order, plus a separate per-label count
+    val ref = e
+      .select(col("label"), posexplode(col("embedding")).as(Seq("i", "x")))
+      .select(col("label"), col("i"),
+        floor(col("x").cast("double") * lit(1e6)).cast("long").as("q"))
+      .groupBy("label", "i").agg(sum(col("q")).as("sv"))
+      .groupBy("label")
+      .agg(transform(array_sort(collect_list(struct(col("i"), col("sv")))),
+        p => p.getField("sv").cast("double")).as("cv"))
+      .join(e.groupBy("label").agg(count(lit(1)).as("n")), "label")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("label").cast("long"), col("cv"), col("n"))
+        .as[(Long, Seq[Double], Long)].collect()
+        .map(r => (r._1, r._2.map(java.lang.Double.doubleToRawLongBits), r._3))
+        .sortBy(_._1).toSeq
+    val got = rows(graft.operators.VectorPack.labelCentroids(spark, sf1))
+    assert(got.nonEmpty)
+    assert(got === rows(ref))
+  }
 }

@@ -54,6 +54,22 @@ class StreamingGroupStatsSpec extends SparkSpec {
     }
   }
 
+  test("a Σr² past 2^63 fails the query instead of wrapping") {
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[(String, String, Long, Long)]
+    val q = StreamingGroupStats.stats(spark,
+        in.toDF().toDF("source", "lang", "doc_id", "rm"))
+      .writeStream.format("memory").outputMode("update")
+      .queryName("gs_overflow").start()
+    try {
+      // each rm² = 4.84e18 fits a long; their sum does not
+      in.addData(Seq(("s", "en", 1L, 2200000000L), ("s", "en", 2L, 2200000000L)))
+      val err = intercept[Exception](q.processAllAvailable())
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException]), err)
+    } finally q.stop()
+  }
+
   test("advantages from streamed state reproduce the q216 contract") {
     val contract = SparkEntry.queries("q216_grpo_advantage")(spark, sf0)
       .select("source", "lang", "doc_id", "advantage")

@@ -49,6 +49,12 @@ class TrainingSpec extends SparkSpec {
     assert(mv.toSeq === Seq(2.0, 4.0))
   }
 
+  test("meanVector raises on factor vectors of unequal length") {
+    val f = Seq(Tuple1(Array(1.0, 3.0)), Tuple1(Array(3.0, 5.0, 7.0))).toDF("factors")
+    val err = intercept[Exception](Training.meanVector(f).collect())
+    assert(err.getMessage.contains("differ in length"), err.getMessage)
+  }
+
   test("LinearSVC separates a linearly separable set") {
     // label = sign of (2*x1 - x2): perfectly separable
     val data = (1 to 200).map { i =>
