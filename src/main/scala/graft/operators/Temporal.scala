@@ -51,29 +51,25 @@ object Temporal {
       .drop("_v")
   }
 
-  /** SAX-style coarse signature of a daily series: split the D days into
-    * `segments` equal spans, emit one bit per span — 1 iff the span's
-    * sum × segments ≥ the series total (above-average activity). Pure
-    * integer compares, so the signature is engine-exact. Used as the
-    * BLOCKING key for similarity search: only same-signature series are
-    * compared (the classic SAX lower-bound filter; recall is bounded by
-    * the blocking rule, which is therefore part of the contract). */
-  def saxSignature(daily: DataFrame, segments: Int): DataFrame = {
-    require(segments >= 1 && segments <= 32)
-    val withSeg = daily.crossJoin(
-      broadcast(daily.agg((max(col("day_idx")) + 1).as("nd"))))
-      .withColumn("seg", // integer DIV: float division could land a
-        // boundary day in the wrong span via ulp error
-        expr(s"CAST((day_idx * $segments) DIV nd AS INT)"))
-    withSeg.groupBy(col("key"), col("seg"))
-      .agg(sum(col("cents")).as("s"))
-      .withColumn("tot", sum(col("s")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("key")))
-      .groupBy("key")
-      .agg(array_join(transform(array_sort(collect_list(struct(col("seg"),
-        when(col("s") * segments >= col("tot"), lit("1"))
-          .otherwise(lit("0")).as("bit")))), x => x.getField("bit")), "")
-        .as("sig"))
+  /** SAX-style coarse signature of a zero-filled daily series array:
+    * split the nd days into `segments` equal spans and emit one bit per
+    * span (0-based j) — 1 iff span j's sum × segments ≥ the series total
+    * (above-average activity), evaluated as a per-row array fold.
+    * Segment j covers indices [⌈j·nd/segments⌉, ⌈(j+1)·nd/segments⌉),
+    * the exact inverse of the q136 oracle's day grouping
+    * (i·segments) div nd; boundary arithmetic stays ≪ 2^53 so the double
+    * floor is exact. Pure integer compares → engine-exact. */
+  private def saxSigOfArray(arr: Column, segments: Int): Column = {
+    val nd = size(arr).cast("long")
+    def bound(j: Column): Column =
+      floor((j * nd + lit(segments - 1)) / lit(segments)).cast("int")
+    val sums = transform(sequence(lit(0), lit(segments - 1)), j =>
+      aggregate(
+        slice(arr, bound(j) + lit(1), bound(j + lit(1)) - bound(j)),
+        lit(0L), (a, x) => a + x))
+    val tot = aggregate(arr, lit(0L), (a, x) => a + x)
+    array_join(transform(sums, s =>
+      when(s * segments >= tot, lit("1")).otherwise(lit("0"))), "")
   }
 
   /** Top-k most correlated key pairs — time-series similarity search
@@ -107,27 +103,6 @@ object Temporal {
     * time axis first. DOMAIN: needs segments ≤ |days| (below that the
     * trailing segments are empty; the reference grouping emits no bit
     * for them) — trivially true for any real daily corpus. */
-  /** SAX signature of a zero-filled series array: bit j (0-based, one
-    * per segment) is 1 iff segment j's sum × segments ≥ the series
-    * total — the same above-average-activity rule as [[saxSignature]],
-    * evaluated as a per-row array fold instead of a grouped plan.
-    * Segment j covers indices [⌈j·nd/segments⌉, ⌈(j+1)·nd/segments⌉),
-    * the exact inverse of the reference grouping (i·segments) div nd;
-    * boundary arithmetic stays ≪ 2^53 so the double floor is exact.
-    * Pure integer compares → engine-exact. */
-  private def saxSigOfArray(arr: Column, segments: Int): Column = {
-    val nd = size(arr).cast("long")
-    def bound(j: Column): Column =
-      floor((j * nd + lit(segments - 1)) / lit(segments)).cast("int")
-    val sums = transform(sequence(lit(0), lit(segments - 1)), j =>
-      aggregate(
-        slice(arr, bound(j) + lit(1), bound(j + lit(1)) - bound(j)),
-        lit(0L), (a, x) => a + x))
-    val tot = aggregate(arr, lit(0L), (a, x) => a + x)
-    array_join(transform(sums, s =>
-      when(s * segments >= tot, lit("1")).otherwise(lit("0"))), "")
-  }
-
   def correlatedPairs(events: DataFrame, keyCol: String, tsCol: String,
                       centsCol: Column, segments: Int, k: Int): DataFrame = {
     require(k >= 1)

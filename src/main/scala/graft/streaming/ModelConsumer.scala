@@ -23,11 +23,19 @@ import graft.operators.ModelCodec
   * within-batch winner is the record with the highest monotonic sequence
   * (Kafka offset / file row position) — Flink gets this order implicitly
   * from per-partition FIFO.
+  *
+  * The keyed state holds only each key's winning sequence number
+  * ([[KeyedState]]): the stale-replay guard compares seqs and nothing else,
+  * and the factors already live in the store, so the state store does not
+  * keep (and checkpoint) a second copy of the model. A checkpoint written
+  * when the state also held the factors cannot be resumed: Spark's state
+  * schema check fails the restart with STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE
+  * instead of reading it — republish into a fresh checkpoint directory.
   */
 object ModelConsumer {
 
   case class KeyedRecord(key: String, seq: Long, factors: Array[Double])
-  case class KeyedState(seq: Long, factors: Array[Double])
+  case class KeyedState(seq: Long)
 
   /** Parse a raw record stream into (key, seq, factors). For Kafka pass
     * seqCol="offset" so within-batch order per key is the log order — the
@@ -65,7 +73,7 @@ object ModelConsumer {
           val incoming = records.maxBy(_.seq)
           val cur = state.getOption
           if (cur.forall(_.seq <= incoming.seq)) {
-            state.update(KeyedState(incoming.seq, incoming.factors))
+            state.update(KeyedState(incoming.seq))
             Iterator.single(incoming)
           } else {
             Iterator.empty

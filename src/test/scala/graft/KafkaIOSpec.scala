@@ -57,31 +57,65 @@ class KafkaIOSpec extends SparkSpec {
     assert(out.collect().head.getString(0) === "1,U,0.5")
   }
 
-  test("serve chain runs end-to-end on a wire-schema twin stream") {
-    // serveFromKafka's ModelConsumer.serveTo call, driven by a
-    // MemoryStream carrying the SAME projected record shape, offsets used
-    // as per-key seq: replay of an older offset must lose
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[(Array[Byte], Array[Byte], String, Int, Long,
-      Timestamp, Int)]
+  private type WireTuple =
+    (Array[Byte], Array[Byte], String, Int, Long, Timestamp, Int)
+
+  /** One twin-stream record: `value` at `offset` of partition 0. */
+  private def twinRec(value: String, offset: Long): WireTuple =
+    ("k".getBytes(UTF_8), value.getBytes(UTF_8), "models", 0, offset,
+      new Timestamp(1700000000000L), 0)
+
+  /** serveFromKafka's ModelConsumer.serveTo call, driven by a MemoryStream
+    * carrying the SAME wire shape, offsets used as per-key seq. */
+  private def serveTwin(in: MemoryStream[WireTuple],
+                        store: ServingStore.FactorStore, dir: String) = {
     val raw = in.toDF().toDF("key", "value", "topic", "partition", "offset",
       "timestamp", "timestampType")
     assert(raw.isStreaming)
+    ModelConsumer.serveTo(spark, KafkaIO.projectRecords(raw), store,
+      Some(dir), seqCol = Some("offset"))
+  }
+
+  test("serve chain runs end-to-end on a wire-schema twin stream") {
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[WireTuple]
     val store = ServingStore.factorStore()
     val dir = java.nio.file.Files.createTempDirectory("kafka-twin").toString
-    val q = ModelConsumer.serveTo(spark, KafkaIO.projectRecords(raw),
-      store, Some(dir), seqCol = Some("offset"))
+    val q = serveTwin(in, store, dir)
     try {
-      def rec(s: String, off: Long) = ("k".getBytes(UTF_8), s.getBytes(UTF_8),
-        "models", 0, off, new Timestamp(1700000000000L), 0)
-      in.addData(rec("7,U,0.5;0.25", 10L))
+      in.addData(twinRec("7,U,0.5;0.25", 10L))
       q.processAllAvailable()
       assert(store.get("7-U").get.toSeq === Seq(0.5, 0.25))
       // an older offset (at-least-once replay) must not clobber newer state
-      in.addData(rec("7,U,0.9;0.9", 5L))
+      in.addData(twinRec("7,U,0.9;0.9", 5L))
       q.processAllAvailable()
       assert(store.get("7-U").get.toSeq === Seq(0.5, 0.25))
     } finally q.stop()
+  }
+
+  test("an older offset loses to the checkpointed seq after a restart") {
+    // the second query knows offset 10 only from the checkpointed state
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[WireTuple]
+    val store = ServingStore.factorStore()
+    val dir = java.nio.file.Files.createTempDirectory("kafka-restart").toString
+    val q1 = serveTwin(in, store, dir)
+    try {
+      in.addData(twinRec("7,U,0.5;0.25", 10L))
+      q1.processAllAvailable()
+    } finally q1.stop()
+
+    val q2 = serveTwin(in, store, dir)
+    try {
+      in.addData(twinRec("7,U,0.9;0.9", 5L), twinRec("8,U,0.3;0.3", 6L))
+      q2.processAllAvailable()
+      assert(store.get("7-U").get.toSeq === Seq(0.5, 0.25))
+      assert(store.get("8-U").get.toSeq === Seq(0.3, 0.3))
+      // a newer offset still wins after the restart
+      in.addData(twinRec("7,U,0.1;0.2", 11L))
+      q2.processAllAvailable()
+      assert(store.get("7-U").get.toSeq === Seq(0.1, 0.2))
+    } finally q2.stop()
   }
 
   test("live source fails ONLY for the missing connector artifact") {
