@@ -109,9 +109,18 @@ object VectorFunctions {
     * length `dim` (callers cast FLOAT[] once in a CTE; list_transform +
     * list_sum preserves the same sequential fold order as the engine's
     * array aggregate). */
-  def cosineOrNullSql(a: String, b: String, dim: Int): String = {
+  def cosineOrNullSql(a: String, b: String, dim: Int): String = cosineSql(a, b, dim, identity)
+
+  /** DuckDB twin of [[cosineRound4]] over FLOAT[] or DOUBLE[] list columns
+    * of length `dim`: each element is cast to DOUBLE (a no-op on DOUBLE
+    * lists) before the products, and the cosine is rounded to 4 places. */
+  def cosineRound4Sql(a: String, b: String, dim: Int): String =
+    s"ROUND(${cosineSql(a, b, dim, e => s"CAST($e AS DOUBLE)")}, 4)"
+
+  private def cosineSql(a: String, b: String, dim: Int,
+                        elem: String => String): String = {
     def dotS(x: String, y: String) =
-      s"list_sum(list_transform(generate_series(1, $dim), i -> $x[i] * $y[i]))"
+      s"list_sum(list_transform(generate_series(1, $dim), i -> ${elem(s"$x[i]")} * ${elem(s"$y[i]")}))"
     val den = s"(sqrt(${dotS(a, a)}) * sqrt(${dotS(b, b)}))"
     s"CASE WHEN $den = 0.0 THEN NULL ELSE ${dotS(a, b)} / $den END"
   }

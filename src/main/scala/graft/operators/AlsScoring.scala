@@ -18,24 +18,26 @@ object AlsScoring {
   /** J2/J5: score every rating with dot(userFactors, itemFactors) — the one
     * rating × factors join, shared by the batch queries and the streaming
     * SGD/MSE loops. Model tables are broadcast — at 100 TB fact scale the
-    * model stays ~O(users+items) and this remains a map-side join.
-    *
-    * Per side: with no mean the join is inner (a rating whose key is absent
-    * is dropped); with a mean it is left-outer and the vector column
-    * (`uf` / `itf`) is coalesced to the mean — the reference's
-    * `orElse(MEAN)` (als-ms/SGD.java:142-147,227, MSE.java:129-158). */
+    * model stays ~O(users+items) and this remains a map-side join. Each
+    * side is one [[joinFactors]]. */
   def predictions(ratings: DataFrame, userF: DataFrame, itemF: DataFrame,
                   meanU: Option[Array[Double]] = None,
-                  meanI: Option[Array[Double]] = None): DataFrame = {
-    def side(base: DataFrame, model: DataFrame, key: String, vec: String,
-             mean: Option[Array[Double]]): DataFrame = mean match {
-      case Some(m) => base.join(broadcast(model), Seq(key), "left_outer")
-        .withColumn(vec, coalesce(col(vec), array(m.toSeq.map(lit): _*)))
-      case None => base.join(broadcast(model), key)
-    }
-    side(side(ratings, userF, "user_id", "uf", meanU),
+                  meanI: Option[Array[Double]] = None): DataFrame =
+    joinFactors(joinFactors(ratings, userF, "user_id", "uf", meanU),
       itemF, "item_id", "itf", meanI)
       .withColumn("prediction", dot(col("uf"), col("itf")))
+
+  /** The one MEAN-fallback join: attach `model`'s vector column `vec` to
+    * `base` on `key`, `model` broadcast. With no mean the join is inner (a
+    * row whose key is absent is dropped); with a mean it is left-outer and
+    * `vec` is coalesced to the mean — the reference's `orElse(MEAN)`
+    * (als-ms/SGD.java:142-147,227, MSE.java:129-158). Used per side by
+    * [[predictions]] and by [[graft.streaming.SgdUpdater.step]]. */
+  def joinFactors(base: DataFrame, model: DataFrame, key: String, vec: String,
+                  mean: Option[Array[Double]]): DataFrame = mean match {
+    case Some(m) => base.join(broadcast(model), Seq(key), "left_outer")
+      .withColumn(vec, coalesce(col(vec), array(m.toSeq.map(lit): _*)))
+    case None => base.join(broadcast(model), key)
   }
 
   /** A4: mean squared error of (rating, prediction). MSE.java:52-69.

@@ -43,6 +43,32 @@ object ModelCodec extends QueryPack {
   def stateKey(rec: Column): Column =
     concat_ws("-", try_element_at(split(rec, ","), lit(1)), parseKind(rec))
 
+  /** State-key kinds: ALS user/item factors, SVM weights, the weight
+    * buckets of [[SvmPack.bucketedStore]]; and the id of the served mean
+    * vectors (ALSMeanVector.scala:35), whose keys [[MeanU]] / [[MeanI]]
+    * are the per-side fallback for a key absent from the model. */
+  val User = "U"
+  val Item = "I"
+  val Weight = "W"
+  val Bucket = "B"
+  val MeanId = "MEAN"
+  val MeanU: String = key(MeanId, User)
+  val MeanI: String = key(MeanId, Item)
+
+  /** The one spelling of the state key "id-KIND": a Scala string for point
+    * reads, a Column for writes, and the parse of (key, factors) rows into
+    * one kind's (`idCol`, `vecCol`) table — non-numeric ids (the MEAN rows)
+    * are dropped. */
+  def key(id: Long, kind: String): String = s"$id-$kind"
+  def key(id: String, kind: String): String = s"$id-$kind"
+  def keyCol(id: Column, kind: String): Column = concat(id, lit(s"-$kind"))
+  def keyedFactors(kv: DataFrame, kind: String, idCol: String,
+                   vecCol: String): DataFrame =
+    kv.filter(col("key").endsWith(s"-$kind"))
+      .select(split(col("key"), "-").getItem(0).try_cast("long").as(idCol),
+        col("factors").as(vecCol))
+      .filter(col(idCol).isNotNull)
+
   /** P5: the SVM kv wire codec (svm-ms/SVMKafkaConsumer.java:74-82).
     * Weights travel as `"featureId,weight"`; the consumer derives state
     * key `"fid-W"` and the double payload. Same poison-record policy as
@@ -52,7 +78,7 @@ object ModelCodec extends QueryPack {
   def parseSvmWeight(rec: Column): Column =
     try_element_at(split(rec, ","), lit(2)).try_cast("double")
   def svmStateKey(rec: Column): Column =
-    concat_ws("-", try_element_at(split(rec, ","), lit(1)), lit("W"))
+    concat_ws("-", try_element_at(split(rec, ","), lit(1)), lit(Weight))
 
   /** "user,item,rating" lines in a `value` column (the SGD/MSE wire input,
     * SGD.java:96-110) -> (user_id, item_id, rating). Null-safe: a malformed

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.QueryPack
 import graft.functions.Portable
-import graft.functions.VectorFunctions.{cosineRound4, sqNorm, toDoubleArray}
+import graft.functions.VectorFunctions.{cosineRound4, cosineRound4Sql, sqNorm, toDoubleArray}
 import graft.sources.Tables
 
 /** Result-set shaping and preference-fitting operators: MMR diversity
@@ -382,13 +382,6 @@ object RerankPack extends QueryPack {
 
   // ---- oracles ----------------------------------------------------------
 
-  private def cosSql(a: String, b: String): String = {
-    def dp(x: String, y: String) =
-      s"list_sum(list_transform(generate_series(1, 64), i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE)))"
-    val denom = s"(sqrt(${dp(a, a)}) * sqrt(${dp(b, b)}))"
-    s"ROUND(CASE WHEN $denom = 0.0 THEN NULL ELSE ${dp(a, b)} / $denom END, 4)"
-  }
-
   def oracles: Map[String, String] = Map(
 
     "q238_mmr_rerank" -> {
@@ -397,7 +390,7 @@ object RerankPack extends QueryPack {
         s"""rem$t AS (SELECT cv.* FROM cv WHERE NOT EXISTS (
            |  SELECT 1 FROM $prev s WHERE s.qid = cv.qid AND s.id = cv.id)),
            |sc$t AS (SELECT r.qid, r.id, r.rel,
-           |           max(${cosSql("r.v", "s.v")}) AS pen
+           |           max(${cosineRound4Sql("r.v", "s.v", 64)}) AS pen
            |         FROM rem$t r JOIN $prev s ON s.qid = r.qid
            |         GROUP BY r.qid, r.id, r.rel),
            |n$t AS (SELECT qid, id,
@@ -416,7 +409,7 @@ object RerankPack extends QueryPack {
       s"""WITH e AS (SELECT vec_id AS id, embedding AS v FROM embeddings),
          |q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings
          |      WHERE vec_id % 50 = 0),
-         |scored AS (SELECT q.qid, e.id, ${cosSql("e.v", "q.qv")} AS rel
+         |scored AS (SELECT q.qid, e.id, ${cosineRound4Sql("e.v", "q.qv", 64)} AS rel
          |           FROM e CROSS JOIN q WHERE e.id <> q.qid),
          |cand AS (SELECT qid, id, rel, rn FROM (
          |           SELECT qid, id, rel, ROW_NUMBER() OVER (PARTITION BY qid
@@ -478,14 +471,14 @@ object RerankPack extends QueryPack {
          |            WHERE vec_id % 2 = 0),
          |ey AS (SELECT vec_id AS id, embedding AS v FROM embeddings
          |       WHERE vec_id % 2 = 1),
-         |f AS (SELECT x.id AS qid, y.id AS id, ${cosSql("y.v", "x.v")} AS sim
+         |f AS (SELECT x.id AS qid, y.id AS id, ${cosineRound4Sql("y.v", "x.v", 64)} AS sim
          |      FROM ex x CROSS JOIN ey y),
          |fr AS (SELECT qid, id, sim, CAST(round(sim * 1e4) AS BIGINT)
          |         AS sim_e4,
          |        ROW_NUMBER() OVER (PARTITION BY qid
          |          ORDER BY sim DESC, id) AS rn FROM f),
          |fk AS (SELECT * FROM fr WHERE rn <= $BitextK),
-         |b AS (SELECT y.id AS qid, x.id AS id, ${cosSql("x.v", "y.v")} AS sim
+         |b AS (SELECT y.id AS qid, x.id AS id, ${cosineRound4Sql("x.v", "y.v", 64)} AS sim
          |      FROM ey y CROSS JOIN ex x),
          |br AS (SELECT qid, id, CAST(round(sim * 1e4) AS BIGINT) AS sim_e4,
          |        ROW_NUMBER() OVER (PARTITION BY qid
@@ -537,18 +530,12 @@ object RerankPack extends QueryPack {
     * cent`KmRounds` (lattice centroid state) and asg`KmRounds` (final
     * assignment). */
   private lazy val kmeansCtesSql: String = {
-    def dp(a: String, b: String) =
-      s"list_sum(list_transform(generate_series(1, 64), i -> $a[i] * $b[i]))"
-    def cosD(a: String, b: String) = {
-      val den = s"(sqrt(${dp(a, a)}) * sqrt(${dp(b, b)}))"
-      s"ROUND(CASE WHEN $den = 0.0 THEN NULL ELSE ${dp(a, b)} / $den END, 4)"
-    }
     val rounds = (1 to KmRounds).map { r =>
         val prev = s"cent${r - 1}"
         s"""asg$r AS (SELECT id, v, cid FROM (
            |  SELECT e.id, e.v, c.cid,
            |         ROW_NUMBER() OVER (PARTITION BY e.id
-           |           ORDER BY ${cosD("e.v", "c.cv")} DESC, c.cid) AS rn
+           |           ORDER BY ${cosineRound4Sql("e.v", "c.cv", 64)} DESC, c.cid) AS rn
            |  FROM e CROSS JOIN $prev c) WHERE rn = 1),
            |dd$r AS (SELECT cid, unnest(generate_series(1, 64)) AS d, v
            |         FROM asg$r),

@@ -32,12 +32,12 @@ object ServePack extends QueryPack {
     // gets an update with a higher seq); latest wins.
     "q16_latest_per_key" -> ((s, dir) => {
       val base = Ratings.userFactors(s, dir, K)
-        .select(concat(col("user_id"), lit("-U")).as("key"),
+        .select(ModelCodec.keyCol(col("user_id"), ModelCodec.User).as("key"),
           (col("user_id") * 2).as("seq"),
           col("uf").as("factors"))
       val updates = Ratings.userFactors(s, dir, K)
         .filter(col("user_id") % 3 === 0)
-        .select(concat(col("user_id"), lit("-U")).as("key"),
+        .select(ModelCodec.keyCol(col("user_id"), ModelCodec.User).as("key"),
           (col("user_id") * 2 + 1).as("seq"),
           transform(col("uf"), f => f + lit(1.0)).as("factors"))
       ModelConsumer.latestPerKeyBatch(base.unionAll(updates))

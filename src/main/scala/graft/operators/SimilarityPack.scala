@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.QueryPack
+import graft.functions.VectorFunctions.cosineRound4Sql
 import graft.sources.Tables
 
 /** Similarity-search queries over the embeddings table (64-dim float
@@ -547,24 +548,6 @@ object SimilarityPack extends QueryPack {
 
   private val Pb = graft.functions.Portable
 
-  /** Rounded cosine between two embedding list columns (FLOAT[] → DOUBLE);
-    * zero-norm vectors yield NULL like the engine's pairSim guard. */
-  private def cosSql(a: String, b: String): String = {
-    def dot(x: String, y: String) =
-      s"list_sum(list_transform(generate_series(1, 64), i -> CAST($x[i] AS DOUBLE) * CAST($y[i] AS DOUBLE)))"
-    val denom = s"(sqrt(${dot(a, a)}) * sqrt(${dot(b, b)}))"
-    s"ROUND(CASE WHEN $denom = 0.0 THEN NULL ELSE ${dot(a, b)} / $denom END, 4)"
-  }
-
-  /** [[cosSql]] over already-DOUBLE list columns (the near-dup corpus casts
-    * before perturbing). */
-  private def cosDblSql(a: String, b: String): String = {
-    def dot(x: String, y: String) =
-      s"list_sum(list_transform(generate_series(1, 64), i -> $x[i] * $y[i]))"
-    val denom = s"(sqrt(${dot(a, a)}) * sqrt(${dot(b, b)}))"
-    s"ROUND(CASE WHEN $denom = 0.0 THEN NULL ELSE ${dot(a, b)} / $denom END, 4)"
-  }
-
   def oracles: Map[String, String] = Map(
     "q38_ann_lsh" ->
       """SELECT CAST(count(*) AS BIGINT) AS n_queries,
@@ -584,9 +567,9 @@ object SimilarityPack extends QueryPack {
          |                        i -> CASE WHEN i = 1 THEN v[i] + 0.1 ELSE v[i] END) AS v
          |  FROM base WHERE id % 5 = 0)
          |SELECT a.id AS id_a, b.id AS id_b,
-         |       ${cosDblSql("a.v", "b.v")} AS cos_sim
+         |       ${cosineRound4Sql("a.v", "b.v", Dim)} AS cos_sim
          |FROM e a JOIN e b ON a.id < b.id
-         |WHERE ${cosDblSql("a.v", "b.v")} >= $NearDupThreshold
+         |WHERE ${cosineRound4Sql("a.v", "b.v", Dim)} >= $NearDupThreshold
          |ORDER BY id_a, id_b""".stripMargin,
 
     "q68_semantic_dedup" ->
@@ -604,7 +587,7 @@ object SimilarityPack extends QueryPack {
          |pairs AS (
          |  SELECT a.id AS doc_a, b.id AS doc_b
          |  FROM e a JOIN e b ON a.id < b.id
-         |  WHERE ${cosDblSql("a.v", "b.v")} >= $NearDupThreshold),
+         |  WHERE ${cosineRound4Sql("a.v", "b.v", Dim)} >= $NearDupThreshold),
          |und AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
          |        UNION SELECT doc_b AS src, doc_a AS dst FROM pairs),
          |verts AS (SELECT DISTINCT src AS id FROM und),
@@ -622,14 +605,14 @@ object SimilarityPack extends QueryPack {
          |c AS (SELECT vec_id AS cid, embedding AS cvec FROM embeddings WHERE vec_id < $NumCentroids),
          |asg AS (SELECT vec_id, cid,
          |               ROW_NUMBER() OVER (PARTITION BY vec_id
-         |                 ORDER BY ${cosSql("e.embedding", "c.cvec")} DESC, cid) AS rn
+         |                 ORDER BY ${cosineRound4Sql("e.embedding", "c.cvec", Dim)} DESC, cid) AS rn
          |        FROM e CROSS JOIN c),
          |buckets AS (SELECT vec_id, cid FROM asg WHERE rn = 1),
          |q AS (SELECT vec_id AS qid, cid FROM buckets WHERE vec_id % 50 = 0),
          |cand AS (SELECT q.qid, b.vec_id AS neg_id
          |         FROM q JOIN buckets b ON b.cid = q.cid AND b.vec_id <> q.qid),
          |scored AS (SELECT cand.qid, cand.neg_id,
-         |                  ${cosSql("eq.embedding", "en.embedding")} AS sim
+         |                  ${cosineRound4Sql("eq.embedding", "en.embedding", Dim)} AS sim
          |           FROM cand JOIN e eq ON eq.vec_id = cand.qid
          |                     JOIN e en ON en.vec_id = cand.neg_id
          |           WHERE en.label <> eq.label),
@@ -645,7 +628,7 @@ object SimilarityPack extends QueryPack {
          |q AS (SELECT vec_id AS qid, embedding AS qvec, label AS qlabel
          |      FROM embeddings WHERE vec_id % 50 = 0),
          |scored AS (SELECT q.qid, e.vec_id AS neg_id,
-         |                  ${cosSql("e.embedding", "q.qvec")} AS sim
+         |                  ${cosineRound4Sql("e.embedding", "q.qvec", Dim)} AS sim
          |           FROM e CROSS JOIN q
          |           WHERE e.vec_id <> q.qid AND e.label <> q.qlabel),
          |ranked AS (SELECT qid, neg_id, sim,
@@ -659,7 +642,7 @@ object SimilarityPack extends QueryPack {
       s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
          |q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id % 50 = 0),
          |scored AS (SELECT q.qid, e.vec_id AS neighbor_id,
-         |                  ${cosSql("e.embedding", "q.qvec")} AS sim
+         |                  ${cosineRound4Sql("e.embedding", "q.qvec", Dim)} AS sim
          |           FROM e CROSS JOIN q WHERE e.vec_id <> q.qid),
          |ranked AS (SELECT qid, neighbor_id, sim,
          |                  CAST(ROW_NUMBER() OVER (PARTITION BY qid
@@ -673,14 +656,14 @@ object SimilarityPack extends QueryPack {
          |c AS (SELECT vec_id AS cid, embedding AS cvec FROM embeddings WHERE vec_id < $NumCentroids),
          |asg AS (SELECT vec_id, cid,
          |               ROW_NUMBER() OVER (PARTITION BY vec_id
-         |                 ORDER BY ${cosSql("e.embedding", "c.cvec")} DESC, cid) AS rn
+         |                 ORDER BY ${cosineRound4Sql("e.embedding", "c.cvec", Dim)} DESC, cid) AS rn
          |        FROM e CROSS JOIN c),
          |buckets AS (SELECT vec_id, cid FROM asg WHERE rn = 1),
          |q AS (SELECT vec_id AS qid, cid FROM buckets WHERE vec_id % 50 = 0),
          |cand AS (SELECT q.qid, b.vec_id AS neighbor_id
          |         FROM q JOIN buckets b ON b.cid = q.cid AND b.vec_id <> q.qid),
          |scored AS (SELECT cand.qid, cand.neighbor_id,
-         |                  ${cosSql("eq.embedding", "en.embedding")} AS sim
+         |                  ${cosineRound4Sql("eq.embedding", "en.embedding", Dim)} AS sim
          |           FROM cand JOIN e eq ON eq.vec_id = cand.qid
          |                     JOIN e en ON en.vec_id = cand.neighbor_id),
          |ranked AS (SELECT qid, neighbor_id, sim,
@@ -706,7 +689,7 @@ object SimilarityPack extends QueryPack {
            |            FROM qb$np JOIN buckets b
            |              ON b.cid = qb$np.cid AND b.vec_id <> qb$np.qid),
            |sc$np AS (SELECT cand$np.qid, cand$np.id,
-           |                 ${cosSql("eq.embedding", "en.embedding")} AS sim
+           |                 ${cosineRound4Sql("eq.embedding", "en.embedding", Dim)} AS sim
            |          FROM cand$np JOIN e eq ON eq.vec_id = cand$np.qid
            |                       JOIN e en ON en.vec_id = cand$np.id),
            |ivf$np AS (SELECT qid, id FROM (
@@ -718,7 +701,7 @@ object SimilarityPack extends QueryPack {
          |q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings
          |      WHERE vec_id % 50 = 0),
          |bf_scored AS (SELECT q.qid, e.vec_id AS id,
-         |                     ${cosSql("e.embedding", "q.qvec")} AS sim
+         |                     ${cosineRound4Sql("e.embedding", "q.qvec", Dim)} AS sim
          |              FROM e CROSS JOIN q WHERE e.vec_id <> q.qid),
          |bf AS (SELECT qid, id FROM (
          |         SELECT qid, id, ROW_NUMBER() OVER (PARTITION BY qid
@@ -728,7 +711,7 @@ object SimilarityPack extends QueryPack {
          |      WHERE vec_id < $NumCentroids),
          |asg AS (SELECT vec_id, cid,
          |               ROW_NUMBER() OVER (PARTITION BY vec_id
-         |                 ORDER BY ${cosSql("e.embedding", "c.cvec")} DESC, cid)
+         |                 ORDER BY ${cosineRound4Sql("e.embedding", "c.cvec", Dim)} DESC, cid)
          |                 AS rn
          |        FROM e CROSS JOIN c),
          |buckets AS (SELECT vec_id, cid FROM asg WHERE rn = 1),
@@ -746,7 +729,7 @@ object SimilarityPack extends QueryPack {
       val steps = (1 until CoresetK).map { k =>
         val prev = if (k == 1) "c0" else s"cents${k - 1}"
         s"""s$k AS (SELECT e.id, e.v,
-           |          max(${cosSql("e.v", "c.v")}) AS smax
+           |          max(${cosineRound4Sql("e.v", "c.v", Dim)}) AS smax
            |        FROM e CROSS JOIN $prev c GROUP BY e.id, e.v),
            |n$k AS (SELECT id, v, smax FROM s$k ORDER BY smax, id LIMIT 1),
            |cents$k AS (SELECT id, v FROM $prev
@@ -784,7 +767,7 @@ object SimilarityPack extends QueryPack {
          |                ELSE v[i] END) AS v
          |  FROM base WHERE id % 5 = 0),
          |pr AS (SELECT a.id AS id_a, b.id AS id_b,
-         |              ${cosDblSql("a.v", "b.v")} AS cos_sim
+         |              ${cosineRound4Sql("a.v", "b.v", Dim)} AS cos_sim
          |       FROM e a JOIN e b ON a.id < b.id),
          |lv AS ($levels),
          |hits AS (SELECT lv.threshold, pr.id_a, pr.id_b
@@ -807,7 +790,7 @@ object SimilarityPack extends QueryPack {
       s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
          |q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id % 50 = 0),
          |bf_scored AS (SELECT q.qid, e.vec_id AS id,
-         |                     ${cosSql("e.embedding", "q.qvec")} AS sim
+         |                     ${cosineRound4Sql("e.embedding", "q.qvec", Dim)} AS sim
          |              FROM e CROSS JOIN q WHERE e.vec_id <> q.qid),
          |truth AS (SELECT qid, id FROM (
          |            SELECT qid, id, ROW_NUMBER() OVER (PARTITION BY qid
@@ -816,14 +799,14 @@ object SimilarityPack extends QueryPack {
          |c AS (SELECT vec_id AS cid, embedding AS cvec FROM embeddings WHERE vec_id < $NumCentroids),
          |asg AS (SELECT vec_id, cid,
          |               ROW_NUMBER() OVER (PARTITION BY vec_id
-         |                 ORDER BY ${cosSql("e.embedding", "c.cvec")} DESC, cid) AS rn
+         |                 ORDER BY ${cosineRound4Sql("e.embedding", "c.cvec", Dim)} DESC, cid) AS rn
          |        FROM e CROSS JOIN c),
          |buckets AS (SELECT vec_id, cid FROM asg WHERE rn = 1),
          |qb AS (SELECT vec_id AS qid, cid FROM buckets WHERE vec_id % 50 = 0),
          |cand0 AS (SELECT qb.qid, b.vec_id AS id
          |          FROM qb JOIN buckets b ON b.cid = qb.cid AND b.vec_id <> qb.qid),
          |ivf_scored AS (SELECT cand0.qid, cand0.id,
-         |                      ${cosSql("eq.embedding", "en.embedding")} AS sim
+         |                      ${cosineRound4Sql("eq.embedding", "en.embedding", Dim)} AS sim
          |               FROM cand0 JOIN e eq ON eq.vec_id = cand0.qid
          |                          JOIN e en ON en.vec_id = cand0.id),
          |cand AS (SELECT qid, id, rank FROM (
@@ -851,7 +834,7 @@ object SimilarityPack extends QueryPack {
       s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
          |q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id % 50 = 0),
          |bf_scored AS (SELECT q.qid, e.vec_id AS id,
-         |                     ${cosSql("e.embedding", "q.qvec")} AS sim
+         |                     ${cosineRound4Sql("e.embedding", "q.qvec", Dim)} AS sim
          |              FROM e CROSS JOIN q WHERE e.vec_id <> q.qid),
          |bf AS (SELECT qid, id FROM (
          |         SELECT qid, id, ROW_NUMBER() OVER (PARTITION BY qid
@@ -860,14 +843,14 @@ object SimilarityPack extends QueryPack {
          |c AS (SELECT vec_id AS cid, embedding AS cvec FROM embeddings WHERE vec_id < $NumCentroids),
          |asg AS (SELECT vec_id, cid,
          |               ROW_NUMBER() OVER (PARTITION BY vec_id
-         |                 ORDER BY ${cosSql("e.embedding", "c.cvec")} DESC, cid) AS rn
+         |                 ORDER BY ${cosineRound4Sql("e.embedding", "c.cvec", Dim)} DESC, cid) AS rn
          |        FROM e CROSS JOIN c),
          |buckets AS (SELECT vec_id, cid FROM asg WHERE rn = 1),
          |qb AS (SELECT vec_id AS qid, cid FROM buckets WHERE vec_id % 50 = 0),
          |cand AS (SELECT qb.qid, b.vec_id AS id
          |         FROM qb JOIN buckets b ON b.cid = qb.cid AND b.vec_id <> qb.qid),
          |ivf_scored AS (SELECT cand.qid, cand.id,
-         |                      ${cosSql("eq.embedding", "en.embedding")} AS sim
+         |                      ${cosineRound4Sql("eq.embedding", "en.embedding", Dim)} AS sim
          |               FROM cand JOIN e eq ON eq.vec_id = cand.qid
          |                         JOIN e en ON en.vec_id = cand.id),
          |ivf AS (SELECT qid, id FROM (
@@ -893,7 +876,7 @@ object SimilarityPack extends QueryPack {
          |c AS (SELECT vec_id AS cid, embedding AS cvec FROM embeddings WHERE vec_id < $NumCentroids),
          |asg AS (SELECT vec_id, cid,
          |               ROW_NUMBER() OVER (PARTITION BY vec_id
-         |                 ORDER BY ${cosSql("e.embedding", "c.cvec")} DESC, cid) AS rn
+         |                 ORDER BY ${cosineRound4Sql("e.embedding", "c.cvec", Dim)} DESC, cid) AS rn
          |        FROM e CROSS JOIN c),
          |buckets AS (SELECT vec_id AS id, cid FROM asg WHERE rn = 1),
          |ranked AS (SELECT cid, id,
@@ -948,7 +931,7 @@ object SimilarityPack extends QueryPack {
          |      WHERE vec_id < $NumCentroids),
          |asg AS (SELECT e.vec_id, c.cid,
          |               ROW_NUMBER() OVER (PARTITION BY e.vec_id
-         |                 ORDER BY ${cosSql("e.embedding", "c.centv")} DESC, c.cid) AS rn
+         |                 ORDER BY ${cosineRound4Sql("e.embedding", "c.centv", Dim)} DESC, c.cid) AS rn
          |        FROM embeddings e CROSS JOIN c),
          |buckets AS (SELECT vec_id, cid FROM asg WHERE rn = 1),
          |cd AS (SELECT corpus.id, cb.code,
@@ -1020,7 +1003,7 @@ object SimilarityPack extends QueryPack {
          |q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings
          |      WHERE vec_id % 20 = 0),
          |scored AS (SELECT q.qid, e.vec_id AS nid,
-         |                  ${cosSql("e.embedding", "q.qvec")} AS sim
+         |                  ${cosineRound4Sql("e.embedding", "q.qvec", Dim)} AS sim
          |           FROM e CROSS JOIN q WHERE e.vec_id <> q.qid),
          |topk AS (SELECT qid, sim FROM (
          |           SELECT qid, sim,

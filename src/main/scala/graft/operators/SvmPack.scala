@@ -53,7 +53,7 @@ object SvmPack extends QueryPack {
     * the q05 layout) into a bucket-keyed serving store: key "bucket-B",
     * value = range-sized array with weights at `idx % range` offsets —
     * the layout RangePartitionSVMPredict.java:63-70 amortizes lookups
-    * against, consumed by PredictBench.svmBucketed. */
+    * against, read by PredictService.predictBucketed. */
   def bucketedStore(layout: DataFrame,
                     range: Int = Range): graft.streaming.ServingStore.FactorStore = {
     val store = graft.streaming.ServingStore.factorStore()
@@ -73,7 +73,7 @@ object SvmPack extends QueryPack {
               System.err.println(s"[bucketedStore] skipping bad entry '$kv'")
           }
         }
-        store.put(s"${r.getLong(0)}-B", packed)
+        store.put(ModelCodec.key(r.getLong(0), ModelCodec.Bucket), packed)
       }
     }
     store

@@ -95,7 +95,7 @@ object Training {
     def row(df: DataFrame, kind: String) =
       meanVector(df.withColumnRenamed(
         if (kind == "U") "uf" else "itf", "factors"))
-        .select(ModelCodec.encodeRecord(lit("MEAN"), lit(kind),
+        .select(ModelCodec.encodeRecord(lit(ModelCodec.MeanId), lit(kind),
           col("mean_vector")).as("record"))
     row(userF, "U").unionAll(row(itemF, "I"))
   }

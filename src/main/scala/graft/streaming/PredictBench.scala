@@ -11,14 +11,16 @@ import scala.util.Random
   *    (ALSPredictRandom.java:55-107)
   *  - [[svmRandom]]: N random sparse vectors, ≥10% feature density
   *    (SVMPredictRandom.java:54-99)
-  *  - [[svmBucketed]]: same workload issued per `featureId/range` bucket —
-  *    the client-side amortization the range layout exists for
+  *  - [[svmBucketed]]: same workload issued per `featureId/range` bucket
+  *    through [[PredictService.predictBucketed]]
   *    (RangePartitionSVMPredict.java:55-124)
   *  - [[writeCsv]]: the per-query latency CSV the reference clients emit
   *    (S12; ALSPredictRandom.java:94-97)
   *
-  * These measure the SERVING path (in-process store reads). The batch path
-  * — the same predictions as joins — is benched by Bench.scala's q09/q10.
+  * These only generate the workload, time [[PredictService]]'s calls and
+  * write the CSV; they measure the SERVING path (in-process store reads).
+  * The batch path — the same predictions as joins — is benched by
+  * Bench.scala's q09/q10.
   */
 object PredictBench {
 
@@ -42,48 +44,36 @@ object PredictBench {
     }
   }
 
-  /** N random sparse SVM predictions: feature count uniform in
-    * [10% of max, max], one store lookup per feature. */
+  /** N random sparse SVM predictions, one store lookup per feature. */
   def svmRandom(store: ServingStore.FactorStore, n: Int,
                 maxFeatures: Int, numFeatures: Int,
-                seed: Long = 42L): Seq[QueryStat] = {
-    val svc = new PredictService(store)
-    val rnd = new Random(seed)
-    (1 to n).map { i =>
-      val nf = math.max(1, maxFeatures / 10) + rnd.nextInt(
-        maxFeatures - math.max(1, maxFeatures / 10) + 1)
-      val feats = Seq.fill(nf)(
-        (rnd.nextInt(numFeatures) + 1L, rnd.nextDouble() * 2 - 1)).toMap
-      val t0 = System.nanoTime()
-      val p = svc.predictSparse(feats)
-      QueryStat(i, feats.size, found = true, p, (System.nanoTime() - t0) / 1e3)
-    }
-  }
+                seed: Long = 42L): Seq[QueryStat] =
+    sparse(n, maxFeatures, numFeatures, seed, _.size)(
+      new PredictService(store).predictSparse)
 
-  /** The bucketed variant: same sparse workload, but weights are fetched
-    * once per `featureId/range` bucket from a bucket-keyed store
-    * ("bucket-B" -> packed weights at bucket offsets). */
+  /** The bucketed variant: the same sparse workload, predicted by
+    * [[PredictService.predictBucketed]] against a bucket-keyed store. */
   def svmBucketed(bucketStore: ServingStore.FactorStore, n: Int,
                   maxFeatures: Int, numFeatures: Int, range: Int,
-                  seed: Long = 42L): Seq[QueryStat] = {
+                  seed: Long = 42L): Seq[QueryStat] =
+    sparse(n, maxFeatures, numFeatures, seed, _.keySet.map(_ / range).size)(
+      new PredictService(bucketStore).predictBucketed(_, range))
+
+  /** `n` seeded random sparse vectors — feature count uniform in [10% of
+    * max, max], ids in [1, numFeatures], values in [-1, 1) — each timed
+    * through `predict`. */
+  private def sparse(n: Int, maxFeatures: Int, numFeatures: Int, seed: Long,
+                     lookups: Map[Long, Double] => Int)(
+      predict: Map[Long, Double] => Double): Seq[QueryStat] = {
     val rnd = new Random(seed)
+    val minFeatures = math.max(1, maxFeatures / 10)
     (1 to n).map { i =>
-      val nf = math.max(1, maxFeatures / 10) + rnd.nextInt(
-        maxFeatures - math.max(1, maxFeatures / 10) + 1)
-      val feats = Seq.fill(nf)(
+      val feats = Seq.fill(minFeatures + rnd.nextInt(maxFeatures - minFeatures + 1))(
         (rnd.nextInt(numFeatures) + 1L, rnd.nextDouble() * 2 - 1)).toMap
       val t0 = System.nanoTime()
-      val byBucket = feats.groupBy { case (fid, _) => fid / range }
-      val p = byBucket.iterator.map { case (bucket, fs) =>
-        bucketStore.get(s"$bucket-B") match {
-          case Some(w) => fs.iterator.map { case (fid, x) =>
-            val off = (fid % range).toInt
-            if (off < w.length) w(off) * x else 0.0
-          }.sum
-          case None => 0.0
-        }
-      }.sum
-      QueryStat(i, byBucket.size, found = true, p, (System.nanoTime() - t0) / 1e3)
+      val p = predict(feats)
+      val micros = (System.nanoTime() - t0) / 1e3
+      QueryStat(i, lookups(feats), found = true, p, micros)
     }
   }
 

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.operators.ModelCodec.{Bucket, Item, MeanI, MeanU, User, Weight, key}
+
 /** Point-prediction against the served model — the Spark analog of the
   * reference's query clients (SURVEY.md §2.3 J1/J4/J5).
   *
@@ -29,8 +31,8 @@ final class PredictService(store: ServingStore.FactorStore) {
   /** J5: ALS pair prediction. None iff a side is absent and that side's
     * MEAN row is not served. The MEAN row is read only on a miss. */
   def predictPair(userId: Long, itemId: Long): Option[Double] = {
-    val u = store.get(s"$userId-U").orElse(store.get(ServingStore.MeanU))
-    val i = store.get(s"$itemId-I").orElse(store.get(ServingStore.MeanI))
+    val u = store.get(key(userId, User)).orElse(store.get(MeanU))
+    val i = store.get(key(itemId, Item)).orElse(store.get(MeanI))
     for (uv <- u; iv <- i) yield dot(uv, iv)
   }
 
@@ -39,7 +41,21 @@ final class PredictService(store: ServingStore.FactorStore) {
     * live under key "fid-W" with a 1-element factor array. */
   def predictSparse(features: Map[Long, Double]): Double =
     features.iterator.map { case (fid, x) =>
-      store.get(s"$fid-W").map(_.head * x).getOrElse(0.0)
+      store.get(key(fid, Weight)).map(_.head * x).getOrElse(0.0)
+    }.sum
+
+  /** J4: [[predictSparse]] over a bucket-keyed store
+    * ([[graft.operators.SvmPack.bucketedStore]]), one lookup per
+    * `featureId / range` bucket (RangePartitionSVMPredict.java:56-106).
+    * Absent buckets and offsets contribute 0. */
+  def predictBucketed(features: Map[Long, Double], range: Int): Double =
+    features.groupBy { case (fid, _) => fid / range }.iterator.map {
+      case (bucket, fs) => store.get(key(bucket, Bucket)).fold(0.0) { w =>
+        fs.iterator.map { case (fid, x) =>
+          val off = (fid % range).toInt
+          if (off < w.length) w(off) * x else 0.0
+        }.sum
+      }
     }.sum
 
   /** Signed class decision, threshold 0 (SVMPredict.java:80-85). */

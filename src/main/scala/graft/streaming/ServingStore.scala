@@ -2,7 +2,9 @@ package graft.streaming
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+
+import graft.operators.{AlsScoring, ModelCodec}
 
 /** The served-model store — Spark's stand-in for Flink queryable state
   * (SURVEY.md §7.3).
@@ -25,8 +27,8 @@ import org.apache.spark.sql.{DataFrame, Row}
   * to the fact data); the in-memory [[TrieMapServingStore]] is the
   * single-process impl, BOUNDED by an explicit byte budget — a 100M-key
   * model must fail loudly at the put that crosses the budget, not OOM the
-  * driver minutes later. [[ServingStore.snapshotDF]] exposes the state
-  * relationally so serving-side queries can also run as joins.
+  * driver minutes later. [[ServingStore.read]] is the Spark loops' one
+  * read per micro-batch, relational so scoring and SGD run as joins.
   */
 trait ServingStore[K, V] {
   def get(key: K): Option[V]
@@ -37,24 +39,23 @@ trait ServingStore[K, V] {
 
 /** Thread-safe in-memory latest-value store with byte accounting.
   *
-  * Every put is weighed ([[TrieMapServingStore.defaultWeigh]] unless a
-  * model-specific weigher is supplied) and the running total compared to
-  * `maxBytes`; a put that would cross the budget throws
-  * IllegalStateException naming the key, the budget, and the remedy —
-  * the loud-rejection contract. Replacing an existing key re-weighs the
+  * Every put is weighed ([[TrieMapServingStore.defaultWeigh]]) and the
+  * running total compared to `maxBytes`; a put that would cross the budget
+  * throws IllegalStateException naming the key, the budget, and the remedy
+  * — the loud-rejection contract. Replacing an existing key re-weighs the
   * entry (a SHRINKING update frees budget); reads stay lock-free on the
   * TrieMap, only the accounting path synchronizes (upserts arrive as one
   * driver-side micro-batch loop, never hot). */
 final class TrieMapServingStore[K, V](
-    val maxBytes: Long = TrieMapServingStore.DefaultMaxBytes,
-    weigh: (K, V) => Long = TrieMapServingStore.defaultWeigh[K, V] _)
+    val maxBytes: Long = TrieMapServingStore.DefaultMaxBytes)
     extends ServingStore[K, V] {
+  import TrieMapServingStore.defaultWeigh
   private val m = TrieMap.empty[K, V]
   private var used = 0L
   override def get(key: K): Option[V] = m.get(key)
   override def put(key: K, value: V): Unit = synchronized {
-    val next = used + weigh(key, value) -
-      m.get(key).map(weigh(key, _)).getOrElse(0L)
+    val next = used + defaultWeigh(key, value) -
+      m.get(key).map(defaultWeigh(key, _)).getOrElse(0L)
     if (next > maxBytes) {
       throw new IllegalStateException(
         s"ServingStore over budget: key '$key' would bring the store to " +
@@ -78,16 +79,13 @@ object TrieMapServingStore {
   val DefaultMaxBytes: Long = 1L << 30
 
   /** JVM-shape estimate of an entry's heap cost: object headers plus the
-    * payload of the common serving types (String keys, primitive-array
-    * values); unknown types charge a flat object cost. Deliberately a
-    * floor-ish estimate used for budget ACCOUNTING, not allocation. */
+    * payload of the serving types (String keys, Array[Double] values);
+    * anything else charges a flat object cost. Deliberately a floor-ish
+    * estimate used for budget ACCOUNTING, not allocation. */
   def defaultWeigh[K, V](k: K, v: V): Long = {
     def one(x: Any): Long = x match {
       case s: String => 40L + 2L * s.length
       case a: Array[Double] => 16L + 8L * a.length
-      case a: Array[Float] => 16L + 4L * a.length
-      case a: Array[Long] => 16L + 8L * a.length
-      case a: Array[_] => 16L + 8L * a.length
       case _ => 64L
     }
     one(k) + one(v) + 40L // TrieMap node + entry overhead
@@ -96,19 +94,10 @@ object TrieMapServingStore {
 
 object ServingStore {
 
-  /** A factor-model store: state key "id-KIND" -> factor vector, exactly the
-    * reference's `ValueState<Tuple2<String,String>>` payload but typed. */
+  /** A factor-model store: state key ([[graft.operators.ModelCodec.key]])
+    * -> factor vector, exactly the reference's
+    * `ValueState<Tuple2<String,String>>` payload but typed. */
   type FactorStore = ServingStore[String, Array[Double]]
-
-  /** State keys of the served mean vectors (ALSMeanVector.scala:35): the
-    * per-side fallback for a user or item absent from the model, read by
-    * [[PredictService]], [[SgdUpdater]] and [[StreamingEvaluator]]. */
-  val MeanU = "MEAN-U"
-  val MeanI = "MEAN-I"
-
-  /** The store's (user, item) MEAN rows; a side is None when not served. */
-  def means(store: FactorStore): (Option[Array[Double]], Option[Array[Double]]) =
-    (store.get(MeanU), store.get(MeanI))
 
   def factorStore(maxBytes: Long = TrieMapServingStore.DefaultMaxBytes)
       : TrieMapServingStore[String, Array[Double]] =
@@ -127,27 +116,32 @@ object ServingStore {
       }
     }
 
-  /** The store's state split into the two relational factor tables —
-    * (user_id, uf) and (item_id, itf); non-numeric keys (the MEAN rows)
-    * are excluded. The single place that knows the "id-KIND" key format
-    * on the read side. */
-  def factorFrames(spark: org.apache.spark.sql.SparkSession,
-                   store: FactorStore): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.functions._
-    val snap = snapshotDF(spark, store)
-    def side(kind: String, idCol: String, vecCol: String) =
-      snap.filter(col("key").endsWith(s"-$kind"))
-        .select(split(col("key"), "-").getItem(0).try_cast("long").as(idCol),
-          col("factors").as(vecCol))
-        .filter(col(idCol).isNotNull)
-    (side("U", "user_id", "uf"), side("I", "item_id", "itf"))
+  /** One read of the served model: the factor tables (user_id, uf) and
+    * (item_id, itf) and the (user, item) MEAN rows, a mean None when not
+    * served. All four come from ONE `snapshot`, so they are one version of
+    * the store. */
+  final case class Model(userF: DataFrame, itemF: DataFrame,
+                         meanU: Option[Array[Double]],
+                         meanI: Option[Array[Double]])
+
+  def read(spark: SparkSession, store: FactorStore): Model = {
+    import spark.implicits._
+    val snap = store.snapshot
+    // the relational face of the served model (SURVEY.md §2.3 J1): the
+    // snapshot as one per-batch LocalRelation of (key, factors)
+    val kv = snap.toSeq.toDF("key", "factors")
+    Model(ModelCodec.keyedFactors(kv, ModelCodec.User, "user_id", "uf"),
+      ModelCodec.keyedFactors(kv, ModelCodec.Item, "item_id", "itf"),
+      snap.get(ModelCodec.MeanU), snap.get(ModelCodec.MeanI))
   }
 
-  /** The store's state as a DataFrame — the relational face of the served
-    * model, so predict paths can run as joins (SURVEY.md §2.3 J1). */
-  def snapshotDF(spark: org.apache.spark.sql.SparkSession,
-                 store: FactorStore): DataFrame = {
-    import spark.implicits._
-    store.snapshot.toSeq.toDF("key", "factors")
+  /** The per-micro-batch prefix of the SGD and MSE loops: parse the
+    * "user,item,rating" lines (malformed rows dropped), [[read]] the model
+    * once, and score them with [[graft.operators.AlsScoring.predictions]].
+    * Returns the scored ratings and the model they were scored against. */
+  def scoreBatch(lines: DataFrame, store: FactorStore): (DataFrame, Model) = {
+    val m = read(lines.sparkSession, store)
+    (AlsScoring.predictions(ModelCodec.parseRatings(lines), m.userF, m.itemF,
+      m.meanU, m.meanI), m)
   }
 }

@@ -19,14 +19,14 @@ import graft.operators.{AlsScoring, ModelCodec}
   * Spark re-design: per-record RPC+update becomes a *mini-batch* gradient
   * step as pure dataflow. [[step]] is the one implementation: the batch
   * query q17 calls it on a scored DataFrame, and [[updateLoop]] calls it on
-  * each micro-batch scored against a snapshot of the store — the streaming
-  * loop is the batch step run incrementally. Scoring is
-  * [[graft.operators.AlsScoring.predictions]] with the store's MEAN rows as
-  * the per-side fallback; each side's gradient is one partial-agg shuffle,
-  * and the updated vectors are upserted into the [[ServingStore]], closing
-  * the same loop at micro-batch granularity. Gradients within a batch are
-  * computed from the same snapshot (the reference tolerates stale reads the
-  * same way — SURVEY.md §7.4).
+  * each micro-batch scored by [[ServingStore.scoreBatch]] (one store read,
+  * the prefix [[StreamingEvaluator]] shares) — the streaming loop is the
+  * batch step run incrementally. Each side's gradient is one partial-agg
+  * shuffle joined to the model by [[graft.operators.AlsScoring.joinFactors]]
+  * (MEAN fallback), and the updated vectors are upserted into the
+  * [[ServingStore]], closing the same loop at micro-batch granularity.
+  * Gradients within a batch are computed from the same snapshot (the
+  * reference tolerates stale reads the same way — SURVEY.md §7.4).
   *
   * Update rule per key (lr = learning rate, λ = L2 regularization):
   *   u' = u + lr * ( Σ_ratings err·i  −  λ·u )   with err = r − u·i
@@ -56,12 +56,7 @@ object SgdUpdater {
         .groupBy(col(keyCol))
         .agg(vecSum(col("g")).as("grad"))
       // u' = u + lr*(grad − λ·u)
-      val joined = mean match {
-        case Some(m) => grads.join(broadcast(cur), Seq(keyCol), "left_outer")
-          .withColumn(vecCol, coalesce(col(vecCol), array(m.toSeq.map(lit): _*)))
-        case None => cur.join(grads, keyCol)
-      }
-      joined.select(col(keyCol),
+      AlsScoring.joinFactors(grads, cur, keyCol, vecCol, mean).select(col(keyCol),
         zip_with(col(vecCol), col("grad"),
           (u, g) => u + lit(lr) * (g - lit(lambda) * u)).as(vecCol))
     }
@@ -70,26 +65,26 @@ object SgdUpdater {
   }
 
   /** Wire a rating-record stream into the feedback loop: each micro-batch
-    * reads the store snapshot, takes one [[step]], and upserts updated
-    * vectors back under their "id-U"/"id-I" state keys. */
+    * is scored by [[ServingStore.scoreBatch]] (one store read), takes one
+    * [[step]], and upserts the updated vectors back under their user and
+    * item state keys. */
   def updateLoop(spark: SparkSession, ratingLines: DataFrame,
                  store: ServingStore.FactorStore,
                  lr: Double, lambda: Double = 0.0,
                  checkpointDir: Option[String] = None): StreamingQuery = {
     val w = ratingLines.writeStream
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val ratings = ModelCodec.parseRatings(batch)
-        val (meanU, meanI) = ServingStore.means(store)
-        val (userF, itemF) = ServingStore.factorFrames(batch.sparkSession, store)
+        val (scored, m) = ServingStore.scoreBatch(batch, store)
         // one scored join per batch, shared by both gradient sides
-        val scored = AlsScoring.predictions(ratings, userF, itemF, meanU, meanI)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        scored.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          val (newU, newI) = step(scored, userF, itemF, lr, lambda, meanU, meanI)
+          val (newU, newI) = step(scored, m.userF, m.itemF, lr, lambda, m.meanU, m.meanI)
           ServingStore.upsertBatch(store, newU
-            .select(concat(col("user_id"), lit("-U")).as("key"), col("uf").as("factors"))
+            .select(ModelCodec.keyCol(col("user_id"), ModelCodec.User).as("key"),
+              col("uf").as("factors"))
             .unionAll(newI
-              .select(concat(col("item_id"), lit("-I")).as("key"), col("itf").as("factors"))))
+              .select(ModelCodec.keyCol(col("item_id"), ModelCodec.Item).as("key"),
+                col("itf").as("factors"))))
         } finally scored.unpersist()
       }
     checkpointDir.fold(w)(d => w.option("checkpointLocation", d)).start()

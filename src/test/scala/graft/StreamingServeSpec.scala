@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.operators.{AlsScoring, Ratings}
+import graft.operators.{AlsScoring, ModelCodec, Ratings}
 import graft.streaming._
 
 /** End-to-end serve loop (SURVEY.md §7.3) driven by MemoryStream — no Kafka
@@ -54,10 +54,10 @@ class StreamingServeSpec extends SparkSpec {
     val svc = new PredictService(store)
     assert(svc.predictPair(7, 3).get === 1.0 * 0.5 + 2.0 * 0.25)
     // the fallback is per side: a served MEAN-I covers absent items only
-    store.put(ServingStore.MeanI, Array(1.0, 1.0))
+    store.put(ModelCodec.MeanI, Array(1.0, 1.0))
     assert(svc.predictPair(7, 99).get === 3.0) // 1*1 + 2*1
     assert(svc.predictPair(42, 3).isEmpty) // no MEAN-U served
-    store.put(ServingStore.MeanU, Array(2.0, 4.0))
+    store.put(ModelCodec.MeanU, Array(2.0, 4.0))
     assert(svc.predictPair(42, 3).get === 2.0 * 0.5 + 4.0 * 0.25)
     assert(svc.predictPair(42, 99).get === 2.0 * 1.0 + 4.0 * 1.0)
     assert(svc.predictPair(7, 3).get === 1.0 * 0.5 + 2.0 * 0.25) // served keys win
@@ -99,8 +99,8 @@ class StreamingServeSpec extends SparkSpec {
   test("SGD with MEAN fallback onboards a user missing from the model") {
     implicit val sqlCtx = spark.sqlContext
     val store = ServingStore.factorStore()
-    store.put(ServingStore.MeanU, Array(0.5, 0.5))
-    store.put(ServingStore.MeanI, Array(0.5, 0.5))
+    store.put(ModelCodec.MeanU, Array(0.5, 0.5))
+    store.put(ModelCodec.MeanI, Array(0.5, 0.5))
     store.put("7-I", Array(1.0, 2.0)) // item exists; user 42 does not
     val in = MemoryStream[String]
     val q = SgdUpdater.updateLoop(spark, in.toDF(), store, lr = 0.1)
@@ -122,8 +122,8 @@ class StreamingServeSpec extends SparkSpec {
     val store = ServingStore.factorStore()
     store.put("1-U", Array(1.0, 0.0))
     store.put("7-I", Array(2.0, 0.0))
-    store.put(ServingStore.MeanU, Array(0.5, 0.5))
-    store.put(ServingStore.MeanI, Array(0.5, 0.5))
+    store.put(ModelCodec.MeanU, Array(0.5, 0.5))
+    store.put(ModelCodec.MeanI, Array(0.5, 0.5))
     val results = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Long)]
     val in = MemoryStream[String]
     val q = StreamingEvaluator.mseStream(spark, in.toDF(), store,
@@ -143,7 +143,7 @@ class StreamingServeSpec extends SparkSpec {
     val store = ServingStore.factorStore()
     store.put("1-U", Array(1.0, 0.0))
     store.put("7-I", Array(2.0, 0.0))
-    store.put(ServingStore.MeanU, Array(0.5, 0.5))
+    store.put(ModelCodec.MeanU, Array(0.5, 0.5))
     val results = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Long)]
     val in = MemoryStream[String]
     val q = StreamingEvaluator.mseStream(spark, in.toDF(), store,
@@ -165,8 +165,8 @@ class StreamingServeSpec extends SparkSpec {
       val st = ServingStore.factorStore()
       st.put("1-U", Array(0.5, 0.25)); st.put("2-U", Array(-0.75, 1.0))
       st.put("7-I", Array(1.0, 2.0)); st.put("8-I", Array(0.125, -0.5))
-      st.put(ServingStore.MeanU, Array(0.5, 0.5))
-      st.put(ServingStore.MeanI, Array(0.25, 0.75))
+      st.put(ModelCodec.MeanU, Array(0.5, 0.5))
+      st.put(ModelCodec.MeanI, Array(0.25, 0.75))
       st
     }
     // known pairs, an unknown user (42), an unknown item (9), both unknown
@@ -183,12 +183,8 @@ class StreamingServeSpec extends SparkSpec {
     } finally q.stop()
 
     val model = seeded()
-    val (meanU, meanI) = ServingStore.means(model)
-    val (userF, itemF) = ServingStore.factorFrames(spark, model)
-    val scored = AlsScoring.predictions(
-      graft.operators.ModelCodec.parseRatings(lines.toDF("value")),
-      userF, itemF, meanU, meanI)
-    val (newU, newI) = SgdUpdater.step(scored, userF, itemF, lr, lambda, meanU, meanI)
+    val (scored, m) = ServingStore.scoreBatch(lines.toDF("value"), model)
+    val (newU, newI) = SgdUpdater.step(scored, m.userF, m.itemF, lr, lambda, m.meanU, m.meanI)
     val batch = newU.as[(Long, Array[Double])].collect().map { case (id, v) => s"$id-U" -> v } ++
       newI.as[(Long, Array[Double])].collect().map { case (id, v) => s"$id-I" -> v }
     assert(batch.map(_._1).toSet ===
@@ -201,11 +197,66 @@ class StreamingServeSpec extends SparkSpec {
     assert(store.size === batch.length + 2) // + the two MEAN rows
   }
 
+  test("one SGD and one MSE micro-batch each read the store once") {
+    implicit val sqlCtx = spark.sqlContext
+    // counts the trait calls a loop makes on the store it is handed
+    final class Counting(under: ServingStore.FactorStore) extends ServingStore.FactorStore {
+      var gets, snapshots = 0
+      override def get(key: String): Option[Array[Double]] = { gets += 1; under.get(key) }
+      override def put(key: String, value: Array[Double]): Unit = under.put(key, value)
+      override def size: Int = under.size
+      override def snapshot: Map[String, Array[Double]] = { snapshots += 1; under.snapshot }
+    }
+    def seeded(): Counting = {
+      val st = ServingStore.factorStore()
+      st.put("1-U", Array(0.5, 0.25)); st.put("7-I", Array(1.0, 2.0))
+      st.put(ModelCodec.MeanU, Array(0.5, 0.5))
+      st.put(ModelCodec.MeanI, Array(0.25, 0.75))
+      new Counting(st)
+    }
+    val lines = Seq("1,7,4.0", "42,7,5.0", "1,9,2.0")
+
+    val sgdStore = seeded()
+    val sgdIn = MemoryStream[String]
+    val sgd = SgdUpdater.updateLoop(spark, sgdIn.toDF(), sgdStore, lr = 0.1)
+    try {
+      sgdIn.addData(lines)
+      sgd.processAllAvailable()
+    } finally sgd.stop()
+    assert((sgdStore.snapshots, sgdStore.gets) === ((1, 0)))
+
+    val mseStore = seeded()
+    val mseIn = MemoryStream[String]
+    val results = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val mse = StreamingEvaluator.mseStream(spark, mseIn.toDF(), mseStore,
+      (_, _, n) => results.synchronized { results += n })
+    try {
+      mseIn.addData(lines)
+      mse.processAllAvailable()
+    } finally mse.stop()
+    assert(results.synchronized(results.toSeq) === Seq(3L))
+    assert((mseStore.snapshots, mseStore.gets) === ((1, 0)))
+  }
+
+  test("ModelCodec: the Scala state key equals the Column state key") {
+    import ModelCodec._
+    val ids = Seq((7L, User), (3L, Item), (10L, Weight), (2L, Bucket))
+    val fromScala = ids.map { case (id, kind) => key(id, kind) } ++
+      Seq(key(MeanId, User), key(MeanId, Item))
+    val fromCol = spark.range(1).select(
+      ids.map { case (id, kind) => keyCol(lit(id), kind) } ++
+        Seq(keyCol(lit(MeanId), User), keyCol(lit(MeanId), Item)): _*)
+      .head().toSeq
+    assert(fromCol === fromScala)
+    assert(fromScala === Seq("7-U", "3-I", "10-W", "2-B", "MEAN-U", "MEAN-I"))
+    assert(Seq(MeanU, MeanI) === Seq("MEAN-U", "MEAN-I"))
+  }
+
   test("poison records do not kill the serve or SGD queries") {
     implicit val sqlCtx = spark.sqlContext
     val store = ServingStore.factorStore()
-    store.put(ServingStore.MeanU, Array(0.5, 0.5))
-    store.put(ServingStore.MeanI, Array(0.5, 0.5))
+    store.put(ModelCodec.MeanU, Array(0.5, 0.5))
+    store.put(ModelCodec.MeanI, Array(0.5, 0.5))
     val in = MemoryStream[String]
     val q = ModelConsumer.serveTo(spark, in.toDF(), store)
     try {
@@ -242,8 +293,8 @@ class StreamingServeSpec extends SparkSpec {
     itf.foreach(r => store.put(s"${r.getLong(0)}-I", r.getSeq[Double](1).toArray))
 
     def mseNow(): Double = {
-      val (u, i) = ServingStore.factorFrames(spark, store)
-      AlsScoring.mse(AlsScoring.predictions(Ratings.ratings(spark, sf0), u, i))
+      val m = ServingStore.read(spark, store)
+      AlsScoring.mse(AlsScoring.predictions(Ratings.ratings(spark, sf0), m.userF, m.itemF))
         .collect()(0).getDouble(0)
     }
 
