@@ -110,6 +110,27 @@ object AuditPack extends QueryPack {
   val ConfCovNum = 4
   val ConfCovDen = 5
 
+  /** A q153 foreign-key check: every `fact.key` must match some
+    * `dim.dimKey`. */
+  final case class RefFk(name: String, fact: String, key: String,
+                         dim: String, dimKey: String)
+
+  /** A q153 primary-key check: `keys` (one or two columns) are unique in
+    * `table`. */
+  final case class RefPk(name: String, table: String, keys: Seq[String])
+
+  /** The star schema's constraints that q153 audits (query and oracle). */
+  val RefFks: Seq[RefFk] = Seq(
+    RefFk("fk_orders_custkey", "orders", "o_custkey", "customer", "c_custkey"),
+    RefFk("fk_lineitem_orderkey", "lineitem", "l_orderkey", "orders", "o_orderkey"),
+    RefFk("fk_lineitem_partkey", "lineitem", "l_partkey", "part", "p_partkey"),
+    RefFk("fk_lineitem_suppkey", "lineitem", "l_suppkey", "supplier", "s_suppkey"),
+    RefFk("fk_customer_nationkey", "customer", "c_nationkey", "nation", "n_nationkey"))
+  val RefPks: Seq[RefPk] = Seq(
+    RefPk("pk_customer", "customer", Seq("c_custkey")),
+    RefPk("pk_orders", "orders", Seq("o_orderkey")),
+    RefPk("pk_lineitem", "lineitem", Seq("l_orderkey", "l_linenumber")))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Split-conformal calibration, Mondrian (per-source) variant — the
@@ -336,48 +357,54 @@ object AuditPack extends QueryPack {
     }),
 
     // Referential-integrity + key-constraint audit: every FK edge of the
-    // star schema as a LEFT ANTI join (violations = facts whose key has
-    // no dimension row), every PK as a duplicate count — one audit row
-    // per constraint. This is the "can I trust the joins" gate a
-    // pipeline runs before training-set assembly; at 100 TB each check
-    // is one column-pruned scan + one equi-join (dimension side
-    // broadcastable; AQE decides), the PK checks are partial-aggregable
-    // groupBy counts, and the 1-row summaries union for free.
+    // star schema (violations = fact rows whose key has no dimension row;
+    // a NULL fact key is a violation, a NULL dimension key matches
+    // nothing) and every PK as a duplicate count — one audit row per
+    // constraint. This is the "can I trust the joins" gate a pipeline runs
+    // before training-set assembly.
+    //
+    // Scale shape: ONE column-pruned scan per table (lineitem takes part
+    // in four checks and is read once, not seven times). Each table row
+    // emits one tall (check_name, side, k1, k2) row per check it takes
+    // part in; one partially aggregated groupBy(check_name, k1, k2)
+    // counts each key's fact, dimension and PK rows — the shuffle that
+    // replaces the five broadcast anti-joins — and a groupBy(check_name)
+    // of those per-key counts yields the audit row. One "none" row per
+    // check keeps all eight rows when a table is empty.
     "q153_ref_integrity" -> ((s, dir) => {
-      def fk(name: String, fact: DataFrame, key: String,
-             dim: DataFrame, dimKey: String): DataFrame = {
-        val checked = fact.select(col(key))
-        val bad = checked.join(
-          dim.select(col(dimKey)).distinct(),
-          checked(key) === dim(dimKey), "left_anti")
-        checked.agg(count(lit(1)).as("n_checked"))
-          .crossJoin(bad.agg(count(lit(1)).as("n_violations")))
-          .select(lit(name).as("check_name"), col("n_checked"),
-            col("n_violations"), (col("n_violations") === 0).as("ok"))
+      def tall(keys: Seq[(String, String, Column, Column)]): Column =
+        inline(array(keys.map { case (check, side, k1, k2) =>
+          struct(lit(check).as("check_name"), lit(side).as("side"),
+            k1.cast("long").as("k1"), k2.cast("long").as("k2"))
+        }: _*))
+      val noKey = lit(null)
+      val tables = (RefFks.flatMap(f => Seq(f.fact, f.dim)) ++
+        RefPks.map(_.table)).distinct
+      val scans = tables.map { t =>
+        Tables.table(s, dir, t).select(tall(
+          RefFks.filter(_.fact == t).map(f =>
+            (f.name, "fact", col(f.key), noKey)) ++
+          RefFks.filter(_.dim == t).map(f =>
+            (f.name, "dim", col(f.dimKey), noKey)) ++
+          RefPks.filter(_.table == t).map(p =>
+            (p.name, "pk", col(p.keys.head),
+              p.keys.lift(1).map(col).getOrElse(noKey)))))
       }
-      def pk(name: String, t: DataFrame, keys: Seq[String]): DataFrame =
-        t.groupBy(keys.map(col): _*).agg(count(lit(1)).as("_n"))
-          .agg(sum(col("_n")).as("n_checked"),
-            sum(when(col("_n") > 1, col("_n")).otherwise(0L))
-              .as("n_violations"))
-          .select(lit(name).as("check_name"), col("n_checked"),
-            col("n_violations"), (col("n_violations") === 0).as("ok"))
-      val cust = Tables.table(s, dir, "customer")
-      val ord = Tables.table(s, dir, "orders")
-      val li = Tables.table(s, dir, "lineitem")
-      val part = Tables.table(s, dir, "part")
-      val supp = Tables.table(s, dir, "supplier")
-      val nat = Tables.table(s, dir, "nation")
-      Seq(
-        fk("fk_orders_custkey", ord, "o_custkey", cust, "c_custkey"),
-        fk("fk_lineitem_orderkey", li, "l_orderkey", ord, "o_orderkey"),
-        fk("fk_lineitem_partkey", li, "l_partkey", part, "p_partkey"),
-        fk("fk_lineitem_suppkey", li, "l_suppkey", supp, "s_suppkey"),
-        fk("fk_customer_nationkey", cust, "c_nationkey", nat, "n_nationkey"),
-        pk("pk_customer", cust, Seq("c_custkey")),
-        pk("pk_orders", ord, Seq("o_orderkey")),
-        pk("pk_lineitem", li, Seq("l_orderkey", "l_linenumber")))
-        .reduce(_.unionAll(_))
+      val none = s.range(1).select(tall(
+        (RefFks.map(_.name) ++ RefPks.map(_.name))
+          .map(c => (c, "none", noKey, noKey))))
+      def rowsOf(side: String) = count(when(col("side") === side, 1))
+      (scans :+ none).reduce(_ unionAll _)
+        .groupBy(col("check_name"), col("k1"), col("k2"))
+        .agg(rowsOf("fact").as("nf"), rowsOf("dim").as("nd"),
+          rowsOf("pk").as("np"))
+        .groupBy(col("check_name"))
+        .agg(sum(col("nf") + col("np")).as("n_checked"),
+          sum(when(col("np") > 1, col("np"))
+            .when(col("nd") === 0 || col("k1").isNull, col("nf"))
+            .otherwise(0L)).as("n_violations"))
+        .select(col("check_name"), col("n_checked"), col("n_violations"),
+          (col("n_violations") === 0).as("ok"))
         .orderBy("check_name")
     }),
 
@@ -986,32 +1013,24 @@ object AuditPack extends QueryPack {
     },
 
     "q153_ref_integrity" -> {
-      def fk(name: String, fact: String, key: String,
-             dim: String, dimKey: String): String =
-        s"""SELECT '$name' AS check_name,
-           |  (SELECT count(*) FROM $fact) AS n_checked,
-           |  (SELECT count(*) FROM $fact f LEFT JOIN
-           |     (SELECT DISTINCT $dimKey FROM $dim) d ON f.$key = d.$dimKey
-           |   WHERE d.$dimKey IS NULL) AS n_violations""".stripMargin
-      def pk(name: String, t: String, keys: Seq[String]): String =
-        s"""SELECT '$name' AS check_name,
-           |  (SELECT count(*) FROM $t) AS n_checked,
+      val fks = RefFks.map(f =>
+        s"""SELECT '${f.name}' AS check_name,
+           |  (SELECT count(*) FROM ${f.fact}) AS n_checked,
+           |  (SELECT count(*) FROM ${f.fact} f LEFT JOIN
+           |     (SELECT DISTINCT ${f.dimKey} FROM ${f.dim}) d
+           |     ON f.${f.key} = d.${f.dimKey}
+           |   WHERE d.${f.dimKey} IS NULL) AS n_violations""".stripMargin)
+      val pks = RefPks.map(p =>
+        s"""SELECT '${p.name}' AS check_name,
+           |  (SELECT count(*) FROM ${p.table}) AS n_checked,
            |  (SELECT coalesce(sum(n), 0) FROM
-           |     (SELECT count(*) AS n FROM $t GROUP BY ${keys.mkString(", ")})
-           |   WHERE n > 1) AS n_violations""".stripMargin
-      val checks = Seq(
-        fk("fk_orders_custkey", "orders", "o_custkey", "customer", "c_custkey"),
-        fk("fk_lineitem_orderkey", "lineitem", "l_orderkey", "orders", "o_orderkey"),
-        fk("fk_lineitem_partkey", "lineitem", "l_partkey", "part", "p_partkey"),
-        fk("fk_lineitem_suppkey", "lineitem", "l_suppkey", "supplier", "s_suppkey"),
-        fk("fk_customer_nationkey", "customer", "c_nationkey", "nation", "n_nationkey"),
-        pk("pk_customer", "customer", Seq("c_custkey")),
-        pk("pk_orders", "orders", Seq("o_orderkey")),
-        pk("pk_lineitem", "lineitem", Seq("l_orderkey", "l_linenumber")))
+           |     (SELECT count(*) AS n FROM ${p.table}
+           |      GROUP BY ${p.keys.mkString(", ")})
+           |   WHERE n > 1) AS n_violations""".stripMargin)
       s"""SELECT check_name, CAST(n_checked AS BIGINT) AS n_checked,
          |       CAST(n_violations AS BIGINT) AS n_violations,
          |       n_violations = 0 AS ok
-         |FROM (${checks.mkString("\nUNION ALL\n")})
+         |FROM (${(fks ++ pks).mkString("\nUNION ALL\n")})
          |ORDER BY check_name""".stripMargin
     },
 

@@ -62,8 +62,8 @@ object Dedup {
     array_distinct(T.wordNgrams(T.tokens(text), n))
 
   /** One row per document: (id, shs = [[shingleSet]]). The MinHash
-    * pipelines checkpoint THIS table once — the signature reads the array,
-    * the Jaccard verify reads its [[shingleRows]] explode. */
+    * pipelines checkpoint THIS table once — the signature and the
+    * candidate Jaccard verify ([[jaccard]]) both read the array. */
   def shingleSets(docs: DataFrame, n: Int,
                   id: String = "doc_id", text: String = "text"): DataFrame =
     graft.plans.Spread(docs).select(col(id), shingleSet(col(text), n).as("shs"))
@@ -151,17 +151,18 @@ object Dedup {
   def setSizes(sh: DataFrame, id: String = "doc_id"): DataFrame =
     sh.groupBy(col(id)).agg(count(lit(1)).as("n_sh"))
 
-  /** THE set-overlap join: pair rows (a, b, n_shared, …) ⋈ the per-side
-    * set sizes, appending n_a and n_b from `sizes` (id, n_sh). Every
-    * Jaccard, containment and overlap ratio here is n_shared read against
-    * these two columns. */
+  /** THE set-size join of the all-pairs forms: pair rows (a, b, n_shared,
+    * …) ⋈ the per-side set sizes, appending n_a and n_b from `sizes`
+    * (id, n_sh). Every all-pairs Jaccard, containment and overlap ratio
+    * here is n_shared read against these two columns; the candidate
+    * verify ([[jaccard]]) reads all three from its two set rows. */
   def withSetSizes(shared: DataFrame, sizes: DataFrame, id: String = "doc_id",
                    a: String = "doc_a", b: String = "doc_b"): DataFrame =
     shared
       .join(sizes.select(col(id).as(a), col("n_sh").as("n_a")), a)
       .join(sizes.select(col(id).as(b), col("n_sh").as("n_b")), b)
 
-  /** |A∩B| / |A∪B| over [[withSetSizes]]' n_shared, n_a, n_b (DOUBLE). */
+  /** |A∩B| / |A∪B| over n_shared, n_a, n_b (DOUBLE). */
   def jaccardRatio: Column =
     col("n_shared").cast("double") / (col("n_a") + col("n_b") - col("n_shared"))
 
@@ -174,21 +175,31 @@ object Dedup {
       .groupBy(col("doc_a"), col("doc_b"))
       .agg(count(lit(1)).as("n_shared"))
 
-  /** Exact Jaccard over distinct shingle sets for given (doc_a, doc_b)
-    * pairs: |A∩B| via equi-join on the shingle, sizes via per-doc counts. */
-  def jaccard(pairs: DataFrame, sh: DataFrame, id: String = "doc_id"): DataFrame =
-    jaccardSized(pairs, sh, setSizes(sh, id), id)
-
-  /** [[jaccard]] with the per-doc `sizes` supplied by a caller that
-    * already needs them. */
-  private def jaccardSized(pairs: DataFrame, sh: DataFrame, sizes: DataFrame,
-                           id: String): DataFrame = {
-    val shared = pairs
-      .join(sh.select(col(id).as("doc_a"), col("sh")), "doc_a")
-      .join(sh.select(col(id).as("doc_b"), col("sh")), Seq("doc_b", "sh"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("n_shared"))
-    withSetSizes(shared, sizes, id).withColumn("jaccard", jaccardRatio)
+  /** THE candidate verify: exact Jaccard of KNOWN (doc_a, doc_b) pairs
+    * over the (id, shs) set table ([[shingleSets]]), ROW-LOCAL. Each pair
+    * joins its two set rows once per side and reads n_shared =
+    * |sa ∩ sb|, n_a = |sa|, n_b = |sb| (BIGINT) and the ratio from the
+    * two arrays in place — no shingle explode, no (doc, shingle) join, no
+    * groupBy over pairs, no set-size joins. Pairs that share no shingle
+    * (an empty set included) are absent, as in the all-pairs join form.
+    * Any other column c of `sets` arrives per side as c_a and c_b (q180
+    * reads both signatures from the same two joins).
+    *
+    * Contract: `pairs` distinct, the arrays of `sets` distinct per row
+    * (as [[shingleSet]] builds them), `id` unique in `sets`. */
+  def jaccard(pairs: DataFrame, sets: DataFrame, id: String = "doc_id"): DataFrame = {
+    val extra = sets.columns.filterNot(Set(id, "shs"))
+    def side(s: String): DataFrame = sets.select(
+      col(id).as(s"doc_$s") +: col("shs").as(s"_s$s") +:
+        extra.map(c => col(c).as(s"${c}_$s")).toSeq: _*)
+    pairs.join(side("a"), "doc_a").join(side("b"), "doc_b")
+      .withColumn("n_shared",
+        size(array_intersect(col("_sa"), col("_sb"))).cast("long"))
+      .filter(col("n_shared") > 0)
+      .withColumn("n_a", size(col("_sa")).cast("long"))
+      .withColumn("n_b", size(col("_sb")).cast("long"))
+      .withColumn("jaccard", jaccardRatio)
+      .drop("_sa", "_sb")
   }
 
   /** Threshold Jaccard self-join via PREFIX FILTERING (Chaudhuri et al.
@@ -211,12 +222,11 @@ object Dedup {
     require(threshold > 0 && threshold <= 1, "threshold must be in (0, 1]")
     import org.apache.spark.sql.expressions.Window
     val sh = shIn.localCheckpoint()
-    val counts = setSizes(sh, id)
     val dfreq = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-    val w = Window.partitionBy(col(id)).orderBy(col("df"), col("sh"))
+    val doc = Window.partitionBy(col(id))
     val prefixes = sh.join(dfreq, "sh")
-      .withColumn("rn", row_number().over(w))
-      .join(counts, id)
+      .withColumn("rn", row_number().over(doc.orderBy(col("df"), col("sh"))))
+      .withColumn("n_sh", count(lit(1)).over(doc))
       .filter(col("rn") <=
         col("n_sh") - ceil(lit(threshold) * col("n_sh")) + 1)
       .select(col(id), col("sh"))
@@ -224,7 +234,8 @@ object Dedup {
       .join(prefixes.select(col(id).as("doc_b"), col("sh")), "sh")
       .filter(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b").distinct()
-    jaccardSized(cand, sh, counts, id).filter(col("jaccard") >= threshold)
+    val sets = sh.groupBy(col(id)).agg(collect_set(col("sh")).as("shs"))
+    jaccard(cand, sets, id).filter(col("jaccard") >= threshold)
   }
 
   /** All-pairs exact Jaccard WITHOUT materializing the pair cross product:
@@ -270,7 +281,7 @@ object Dedup {
     * collisions every day; this touches only buckets a delta doc lands
     * in). Candidates = delta bands ⋈ (base ∪ delta) bands, so cost is
     * bounded by the DELTA's collisions; the Jaccard verify reads only
-    * candidate docs' shingles. In production the base signatures/bands
+    * candidate docs' shingle sets. In production the base signatures/bands
     * are a persisted index (written once by the full run, appended by
     * each delta run) — recomputing them here stands in for one index
     * scan. Output matches [[minhashLsh]] restricted to pairs with ≥1
@@ -294,7 +305,7 @@ object Dedup {
       .select(least(col("doc_x"), col("doc_y")).as("doc_a"),
         greatest(col("doc_x"), col("doc_y")).as("doc_b"))
       .distinct()
-    jaccard(cand, shingleRows(sets, id), id).filter(col("jaccard") >= threshold)
+    jaccard(cand, sets, id).filter(col("jaccard") >= threshold)
   }
 
   /** Full MinHash+LSH near-dup pipeline: candidates from LSH buckets,
@@ -303,12 +314,12 @@ object Dedup {
                  bands: Int = 4, threshold: Double = 0.5,
                  id: String = "doc_id", text: String = "text"): DataFrame = {
     // EAGER local checkpoint: the shingle-set table (the heavy tokenize +
-    // n-gram map) feeds the signatures AND the three references inside the
-    // jaccard verify; eager, so those stages read blocks instead of racing
-    // to compute the shared RDD concurrently.
+    // n-gram map) feeds the signatures AND both sides of the jaccard
+    // verify; eager, so those stages read blocks instead of racing to
+    // compute the shared RDD concurrently.
     val sets = shingleSets(docs, shingleN, id, text).localCheckpoint()
     val cand = lshCandidates(lshBands(signatures(sets, numHashes, id), numHashes, bands, id), id)
-    jaccard(cand, shingleRows(sets, id), id).filter(col("jaccard") >= threshold)
+    jaccard(cand, sets, id).filter(col("jaccard") >= threshold)
   }
 
   /** Per-document SimHash over `bits` bits of the token hashes (with

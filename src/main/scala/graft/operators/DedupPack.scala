@@ -35,19 +35,19 @@ object DedupPack extends QueryPack {
     * the exact Jaccard: (doc_a, doc_b, n_shared, jaccard, n_agree) — the
     * input of the q180 estimate audit and the q191 sweep. */
   private def agreeVsExact(s: SparkSession, dir: String, numHashes: Int): DataFrame = {
-    val sets = Dedup.shingleSets(withCopies(s, dir, mod = 2), 3)
-      .localCheckpoint() // signatures + exact-verify share the scan
-    val sigs = Dedup.signatures(sets, numHashes)
-      .localCheckpoint() // bands + both agreement sides share it
-    val cand = Dedup.lshCandidates(Dedup.lshBands(sigs, numHashes, 4))
-    val est = cand
-      .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("siga")), "doc_a")
-      .join(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sigb")), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        Dedup.sigAgreement(col("siga"), col("sigb")).as("n_agree"))
-    Dedup.jaccard(cand, Dedup.shingleRows(sets))
-      .select(col("doc_a"), col("doc_b"), col("n_shared"), col("jaccard"))
-      .join(est, Seq("doc_a", "doc_b"))
+    // ONE checkpoint of (doc_id, shs, sig): the bands read the signature,
+    // and the verify's two side joins bring each pair both shingle sets
+    // AND both signatures (sig_a, sig_b), so the estimate needs no joins
+    // of its own. Documents without a signature (no shingle) have no
+    // candidate and drop here.
+    val docs = Dedup.shingleSets(withCopies(s, dir, mod = 2), 3)
+      .withColumn("sig", Dedup.minhash(col("shs"), numHashes))
+      .filter(col("sig").isNotNull)
+      .localCheckpoint()
+    val cand = Dedup.lshCandidates(Dedup.lshBands(docs, numHashes, 4))
+    Dedup.jaccard(cand, docs)
+      .select(col("doc_a"), col("doc_b"), col("n_shared"), col("jaccard"),
+        Dedup.sigAgreement(col("sig_a"), col("sig_b")).as("n_agree"))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -118,8 +118,8 @@ object DedupPack extends QueryPack {
       // verified-LSH pairs = candidates whose exact Jaccard clears the
       // threshold, and the exact table already holds EVERY pair that
       // clears it — so the verify stage is a pair-key semi-join against
-      // it; walking Σ df(shingle) a second time over the candidate pairs
-      // (Dedup.jaccard(cand, sh)) recomputed the same numbers
+      // it; a candidate verify (Dedup.jaccard(cand, sets)) would
+      // recompute the same numbers
       val lsh = cand.join(exact, Seq("doc_a", "doc_b"), "left_semi")
         .localCheckpoint()
       val m = cand.agg(count(lit(1)).as("n_cand"))

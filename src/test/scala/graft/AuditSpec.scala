@@ -87,6 +87,80 @@ class AuditSpec extends SparkSpec {
     }
   }
 
+  /** A scratch dataset dir holding exactly the six q153 tables: customer,
+    * orders, part, supplier and nation below, and `lineitem`. Expected
+    * values follow the q153 oracle SQL: an FK check counts every fact row
+    * and the rows that find no dimension row (`f.key = d.key` is never
+    * true for a NULL on either side); a PK check sums the rows of every
+    * key group with more than one row (GROUP BY puts NULL keys in one
+    * group). */
+  private def withRefTables(lineitem: Seq[(Option[Long], Option[Long],
+      Option[Long], Option[Int])])(body: Map[String, (Long, Long)] => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory("q153").toFile
+    try {
+      def write(t: String, df: org.apache.spark.sql.DataFrame): Unit =
+        df.write.parquet(s"$dir/$t.parquet")
+      write("nation", Seq(Some(0), Some(1), None).toDF("n_nationkey"))
+      write("customer", Seq[(Option[Long], Option[Int])](
+          (Some(1L), Some(0)), (Some(2L), Some(1)), (Some(2L), Some(5)),
+          (Some(3L), None), (None, Some(0)), (None, Some(1)))
+        .toDF("c_custkey", "c_nationkey"))
+      write("orders", Seq[(Option[Long], Option[Long])](
+          (Some(10L), Some(1L)), (Some(11L), Some(2L)), (Some(12L), Some(9L)),
+          (Some(13L), None), (Some(13L), Some(3L)))
+        .toDF("o_orderkey", "o_custkey"))
+      write("part", Seq(Some(100L), Some(101L), None).toDF("p_partkey"))
+      write("supplier", Seq(7L, 8L).toDF("s_suppkey"))
+      write("lineitem", lineitem
+        .toDF("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber"))
+      val out = SparkEntry.queries("q153_ref_integrity")(spark, dir.toString)
+        .as[(String, Long, Long, Boolean)].collect()
+      out.foreach(r => assert(r._4 === (r._3 == 0L), r))
+      body(out.map(r => r._1 -> ((r._2, r._3))).toMap)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
+
+  /** (n_checked, n_violations) of the checks that do not read lineitem,
+    * over [[withRefTables]]' tables. */
+  private val refNonLineitem = Map(
+    // 6 customers; nation key 5 has no nation row and a NULL nation key
+    // matches nothing, not even the NULL nation row
+    "fk_customer_nationkey" -> ((6L, 2L)),
+    // custkey 2 twice and NULL twice
+    "pk_customer" -> ((6L, 4L)),
+    // custkey 9 has no customer; a NULL custkey matches no NULL customer
+    "fk_orders_custkey" -> ((5L, 2L)),
+    // orderkey 13 twice
+    "pk_orders" -> ((5L, 2L)))
+
+  test("q153 over an empty lineitem keeps all eight rows") {
+    withRefTables(Seq.empty) { out =>
+      assert(out === refNonLineitem ++ Map(
+        "fk_lineitem_orderkey" -> ((0L, 0L)),
+        "fk_lineitem_partkey" -> ((0L, 0L)),
+        "fk_lineitem_suppkey" -> ((0L, 0L)),
+        "pk_lineitem" -> ((0L, 0L))))
+    }
+  }
+
+  test("q153 counts NULL fact keys and duplicate PK rows as the oracle does") {
+    withRefTables(Seq(
+      (Some(10L), Some(100L), Some(7L), Some(1)),
+      (Some(10L), Some(100L), Some(7L), Some(1)), // duplicate PK (10, 1)
+      (Some(11L), Some(101L), Some(8L), Some(1)),
+      (None, Some(100L), Some(7L), Some(1)),      // NULL orderkey, twice:
+      (None, Some(100L), Some(7L), Some(1)),      // one PK group (NULL, 1)
+      (Some(12L), None, Some(7L), None),          // NULL partkey
+      (Some(99L), Some(102L), Some(9L), Some(2))  // no order, part, supplier
+    )) { out =>
+      assert(out === refNonLineitem ++ Map(
+        "fk_lineitem_orderkey" -> ((7L, 3L)),
+        "fk_lineitem_partkey" -> ((7L, 2L)),
+        "fk_lineitem_suppkey" -> ((7L, 1L)),
+        "pk_lineitem" -> ((7L, 4L))))
+    }
+  }
+
   test("upsertSnapshot labels all four action classes correctly") {
     val old = Seq((1L, "same"), (2L, "before"), (4L, "gone")).toDF("id", "body")
     val neu = Seq((1L, "same"), (2L, "after"), (3L, "fresh")).toDF("id", "body")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Decontaminate, Dedup, DedupPack, DupGroups}
 
@@ -140,10 +141,50 @@ class DedupSpec extends SparkSpec {
       (1L, "a b c d"),   // shingles: "a b c", "b c d"
       (2L, "a b c e")    // shingles: "a b c", "b c e"
     ).toDF("doc_id", "text")
-    val sh = Dedup.shingles(docs, 3)
+    val sets = Dedup.shingleSets(docs, 3)
     val pairs = Seq((1L, 2L)).toDF("doc_a", "doc_b")
-    val j = Dedup.jaccard(pairs, sh).head().getAs[Double]("jaccard")
+    val j = Dedup.jaccard(pairs, sets).head().getAs[Double]("jaccard")
     assert(math.abs(j - 1.0 / 3.0) < 1e-12) // 1 shared of 3 distinct
+  }
+
+  /** The candidate verify in its join form: explode the sets, join each
+    * pair's (doc_b, sh) rows, count per pair, then join both set sizes.
+    * The reference that the row-local [[Dedup.jaccard]] must equal. */
+  private def joinFormJaccard(pairs: DataFrame, sets: DataFrame): DataFrame = {
+    val sh = Dedup.shingleRows(sets)
+    val shared = pairs
+      .join(sh.select(col("doc_id").as("doc_a"), col("sh")), "doc_a")
+      .join(sh.select(col("doc_id").as("doc_b"), col("sh")), Seq("doc_b", "sh"))
+      .groupBy(col("doc_a"), col("doc_b"))
+      .agg(count(lit(1)).as("n_shared"))
+    Dedup.withSetSizes(shared, Dedup.setSizes(sh))
+      .withColumn("jaccard", Dedup.jaccardRatio)
+  }
+
+  test("row-local jaccard equals the join form on seeded random sets") {
+    val rnd = new scala.util.Random(42)
+    val vocab = (1 to 24).map(i => s"s$i")
+    // doc 0 has an empty set; docs 1 and 2 are disjoint; the rest draw
+    // distinct random subsets of a small vocabulary, so most pairs overlap
+    val sets = (Seq(0L -> Seq.empty[String], 1L -> Seq("s1", "s2", "s3"),
+        2L -> Seq("s4", "s5")) ++
+      (3L until 60L).map(id =>
+        id -> rnd.shuffle(vocab).take(1 + rnd.nextInt(10))))
+      .toDF("doc_id", "shs")
+    val ids = 0L until 60L
+    val pairs = (for (a <- ids; b <- ids if a < b && rnd.nextInt(3) > 0)
+      yield (a, b)) ++ Seq((0L, 5L), (1L, 2L))
+    val pairDf = pairs.distinct.toDF("doc_a", "doc_b")
+    def rows(df: DataFrame) =
+      df.select("doc_a", "doc_b", "n_shared", "n_a", "n_b", "jaccard")
+        .as[(Long, Long, Long, Long, Long, Double)].collect()
+        .sortBy(r => (r._1, r._2)).toSeq
+    val rowLocal = rows(Dedup.jaccard(pairDf, sets))
+    assert(rowLocal === rows(joinFormJaccard(pairDf, sets)))
+    assert(rowLocal.size > 100, "the random sets must give many overlapping pairs")
+    val keys = rowLocal.map(r => (r._1, r._2)).toSet
+    assert(!keys.contains((1L, 2L)), "a pair with no shared shingle is absent")
+    assert(!keys.exists(k => k._1 == 0L), "a document with an empty set pairs with nothing")
   }
 
   test("prefixFilterJaccard equals the exact all-pairs threshold join") {
