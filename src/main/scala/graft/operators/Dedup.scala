@@ -37,6 +37,20 @@ object Dedup {
       .groupBy(col("content_hash"))
       .agg(min(col(id)).as("keeper"), count(lit(1)).as("n_copies"))
 
+  /** (doc_id, text) → one (block_len, h, doc_id) row per size the doc has
+    * that many tokens for; h = md5 of its first block_len tokens joined by
+    * ' '. Sizes ride one exploded literal, one pass over the tokens. Used
+    * by q215 and [[graft.streaming.StreamingPrefixCache]]. */
+  def prefixBlocks(docs: DataFrame, sizes: Seq[Int]): DataFrame =
+    docs.select(col("doc_id"), T.tokens(col("text")).as("toks"))
+      .select(col("doc_id"), col("toks"),
+        explode(array(sizes.map(lit): _*)).as("block_len"))
+      .filter(size(col("toks")) >= col("block_len"))
+      .select(col("block_len"),
+        md5(array_join(slice(col("toks"), lit(1), col("block_len")), " "))
+          .as("h"),
+        col("doc_id"))
+
   /** Distinct word-`n`-gram shingles per document: (id, sh). Tokenize +
     * n-gram explode is the heavy map of the whole MinHash family — a
     * narrow single-row-group input would serialize it on one core, so

@@ -550,15 +550,7 @@ object DedupPack extends QueryPack {
     // 4-element literal, so the whole curve is a single aggregation
     // cascade.
     "q215_prefix_blocks" -> ((s, dir) => {
-      val toks = graft.functions.TextFunctions.tokens(col("text"))
-      Tables.table(s, dir, "documents")
-        .select(col("doc_id"), toks.as("toks"))
-        .select(col("doc_id"), col("toks"),
-          explode(array(PrefixBlockSizes.map(lit): _*)).as("block_len"))
-        .filter(size(col("toks")) >= col("block_len"))
-        .select(col("block_len"),
-          md5(array_join(slice(col("toks"), lit(1), col("block_len")), " "))
-            .as("h"))
+      Dedup.prefixBlocks(Tables.table(s, dir, "documents"), PrefixBlockSizes)
         .groupBy("block_len", "h").agg(count(lit(1)).as("c"))
         .groupBy("block_len")
         .agg(sum(col("c")).as("n_docs"),

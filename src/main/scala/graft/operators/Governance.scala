@@ -170,22 +170,27 @@ object Governance {
       .withColumn("rn", row_number().over(wr))
       .filter(col("rn") === col("k_rank") - col("cum_before"))
       .select(col(grpCol), col("v").as("qv"))
-    val cov = scored.filter(!col("is_cal")).select(grpCol, "v")
-      .join(broadcast(qh), Seq(grpCol), "left_outer")
-      .groupBy(grpCol)
-      .agg(count(lit(1)).as("n_test"),
-        sum(when(col("qv").isNull || col("v") <= col("qv"), 1L)
-          .otherwise(0L)).as("n_cov"))
+    val cov = coverageCounts(scored.filter(!col("is_cal")).select(grpCol, "v")
+      .join(broadcast(qh), Seq(grpCol), "left_outer"), grpCol)
     m.join(broadcast(qh), Seq(grpCol), "left_outer")
       .join(cov, Seq(grpCol), "left_outer")
       .select(col(grpCol), col("n_cal"), col("k_rank"),
         (col("qv").cast("double") / 1e6).as("qhat"),
         coalesce(col("n_test"), lit(0L)).as("n_test"),
-        coalesce(col("n_cov"), lit(0L)).as("n_covered"),
+        coalesce(col("n_covered"), lit(0L)).as("n_covered"),
         when(coalesce(col("n_test"), lit(0L)) === 0,
           lit(null).cast("double"))
           .otherwise(P.snap6(
-            col("n_cov").cast("double") / col("n_test"))).as("coverage"))
+            col("n_covered").cast("double") / col("n_test"))).as("coverage"))
       .orderBy(grpCol)
   }
+
+  /** Per group of (grpCol, v, qv) rows: n_test = rows, n_covered = rows
+    * with qv NULL (q̂ = +∞) or v <= qv — q227's test-half count, which
+    * [[graft.streaming.StreamingConformal]] runs in Update mode. */
+  def coverageCounts(scored: DataFrame, grpCol: String): DataFrame =
+    scored.groupBy(grpCol)
+      .agg(count(lit(1)).as("n_test"),
+        sum(when(col("qv").isNull || col("v") <= col("qv"), 1L)
+          .otherwise(0L)).as("n_covered"))
 }

@@ -584,11 +584,6 @@ object MiningPack extends QueryPack {
     })
   )
 
-  /** DuckDB twin of [[graft.functions.TextFunctions.tokens]] (same
-    * expression TextPack's oracles use). */
-  private def toksSql(text: String): String =
-    s"list_filter(regexp_split_to_array($text, '\\s+'), t -> len(t) > 0)"
-
   def oracles: Map[String, String] = Map(
     "q208_target_encoding" -> {
       val oof = graft.functions.Portable.snap6Sql(
@@ -679,7 +674,7 @@ object MiningPack extends QueryPack {
 
     "q231_doremi_step" ->
       s"""WITH toks AS (
-         |  SELECT source, unnest(${toksSql("text")}) AS tok FROM documents),
+         |  SELECT source, unnest(${TextPack.toksSql("text")}) AS tok FROM documents),
          |tf AS (SELECT tok, count(*) AS cnt FROM toks GROUP BY 1),
          |vocab AS (
          |  SELECT tok FROM (
@@ -708,7 +703,7 @@ object MiningPack extends QueryPack {
 
     "q164_oov_rate" ->
       s"""WITH toks AS (
-         |  SELECT doc_id, unnest(${toksSql("text")}) AS tok FROM documents),
+         |  SELECT doc_id, unnest(${TextPack.toksSql("text")}) AS tok FROM documents),
          |tf AS (SELECT tok, count(*) AS cnt FROM toks GROUP BY 1),
          |vocab AS (
          |  SELECT tok FROM (
@@ -725,7 +720,7 @@ object MiningPack extends QueryPack {
          |FROM per ORDER BY doc_id""".stripMargin,
 
     "q168_zipf_fit" ->
-      s"""WITH toks AS (SELECT unnest(${toksSql("text")}) AS tok FROM documents),
+      s"""WITH toks AS (SELECT unnest(${TextPack.toksSql("text")}) AS tok FROM documents),
          |tf AS (SELECT tok, count(*) AS cnt FROM toks GROUP BY 1),
          |top AS (SELECT cnt, rank FROM (
          |          SELECT cnt, row_number() OVER (ORDER BY cnt DESC, tok)
@@ -787,7 +782,7 @@ object MiningPack extends QueryPack {
 
     "q172_feature_hash" ->
       s"""WITH toks AS (
-         |  SELECT doc_id, unnest(${toksSql("text")}) AS tok FROM documents),
+         |  SELECT doc_id, unnest(${TextPack.toksSql("text")}) AS tok FROM documents),
          |h AS (SELECT doc_id, ${Portable.hash32mSql("tok")} % $FeatDim AS b
          |      FROM toks)
          |SELECT doc_id, count(*) AS n_tok,
@@ -868,7 +863,7 @@ object MiningPack extends QueryPack {
       val t0 = s"CAST(floor((((ns - o) - $e0) * ((ns - o) - $e0) / ($e0))" +
         " * 1000000.0) AS BIGINT)"
       s"""WITH pres AS (
-         |  SELECT DISTINCT doc_id, source, unnest(${toksSql("text")}) AS tok
+         |  SELECT DISTINCT doc_id, source, unnest(${TextPack.toksSql("text")}) AS tok
          |  FROM documents),
          |dft AS (SELECT tok, CAST(count(*) AS BIGINT) AS df
          |        FROM pres GROUP BY 1),

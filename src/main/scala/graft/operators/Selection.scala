@@ -327,6 +327,14 @@ object Selection {
       .filter(col("n_docs") >= 2 && col("q_max") > col("q_min"))
   }
 
+  /** Per-group (n, s1 = Σrm, s2 = Σrm² as DECIMAL(38,0)) of an integer
+    * reward: q216's aggregate, which [[graft.streaming.StreamingGroupStats]]
+    * runs in Update mode. A NULL rm is counted in n, skipped by the sums. */
+  def rewardStats(df: DataFrame, groupCols: Seq[String], rmCol: String): DataFrame =
+    df.groupBy(groupCols.map(col): _*)
+      .agg(count(lit(1)).as("n"), sum(col(rmCol)).as("s1"),
+        sum((col(rmCol) * col(rmCol)).cast("decimal(38,0)")).as("s2"))
+
   def qualityLogitSql(stopwords: Seq[String]): String = {
     val hits = s"len(list_filter(toks, t -> t IN (${stopwords.map(w => s"'$w'").mkString(", ")})))"
     s"""CASE WHEN len(toks) = 0 THEN 0.0 ELSE

@@ -268,9 +268,7 @@ object SelectionPack extends QueryPack {
         .cast("long")
       val d = docs(s, dir)
         .select(col("source"), col("lang"), col("doc_id"), micro.as("rm"))
-      val g = d.groupBy("source", "lang")
-        .agg(count(lit(1)).as("n"), sum(col("rm")).as("s1"),
-          sum((col("rm") * col("rm")).cast("decimal(38,0)")).as("s2"))
+      val g = Selection.rewardStats(d, Seq("source", "lang"), "rm")
         .withColumn("var_num",
           col("n").cast("decimal(19,0)") * col("s2")
             - col("s1").cast("decimal(19,0)") * col("s1").cast("decimal(19,0)"))

@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+
+import graft.operators.Governance
 
 /** Streaming face of the q227 Mondrian conformal gate
   * ([[graft.operators.Governance.conformalThreshold]]): the batch job
@@ -15,15 +16,19 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
   * Thresholds arrive as a static (grp, qv) table — a stream-static
   * inner join, so only calibrated groups are monitored (matching the
   * batch operator's output domain) and a NULL qv keeps the batch
-  * convention q̂ = +∞: every row covered, coverage trivially 1. State
-  * is two longs per GROUP (n_test, n_covered), mergeable integer adds —
-  * any micro-batch split folds to the identical frontier the batch
-  * aggregation computes (StreamingConformalSpec pins the parity
-  * against the q227 contract values).
+  * convention q̂ = +∞: every row covered, coverage trivially 1. The
+  * count is q227's own [[graft.operators.Governance.coverageCounts]] run
+  * as an Update-mode stateful aggregate; it merges, so any micro-batch
+  * split reaches the batch frontier (StreamingConformalSpec pins it and
+  * the per-batch rows). By the batch rule a NULL v is counted in n_test
+  * and covered only under a NULL qv.
+  *
+  * A checkpoint of the earlier `mapGroupsWithState` fold does not resume:
+  * the first batch fails with STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA
+  * (`flatMapGroupsWithState` in the metadata, `stateStoreSave` in the plan).
   */
 object StreamingConformal {
 
-  case class ScoredRow(grp: String, id: Long, v: Long, qv: Option[Long])
   case class Coverage(grp: String, n_test: Long, n_covered: Long)
 
   /** scores: STREAMING (grp, id, v e6-score long);
@@ -31,21 +36,7 @@ object StreamingConformal {
   def coverage(spark: SparkSession, scores: DataFrame,
                thresholds: DataFrame): Dataset[Coverage] = {
     import spark.implicits._
-    scores.join(broadcast(thresholds), Seq("grp"))
-      .select(col("grp"), col("id"), col("v"), col("qv"))
-      .as[ScoredRow]
-      .groupByKey(_.grp)
-      .mapGroupsWithState[Coverage, Coverage](GroupStateTimeout.NoTimeout) {
-        case (grp, rows, state: GroupState[Coverage]) =>
-          val prev = state.getOption.getOrElse(Coverage(grp, 0L, 0L))
-          var n = prev.n_test; var cov = prev.n_covered
-          rows.foreach { r =>
-            n += 1
-            if (r.qv.forall(r.v <= _)) cov += 1
-          }
-          val next = Coverage(grp, n, cov)
-          state.update(next)
-          next
-      }
+    Governance.coverageCounts(
+      scores.join(broadcast(thresholds), Seq("grp")), "grp").as[Coverage]
   }
 }

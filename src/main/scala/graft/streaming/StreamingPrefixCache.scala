@@ -1,10 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-
-import graft.functions.TextFunctions
 
 /** Streaming face of the q215 prefix-block accounting: as documents
   * arrive, each (block_len, prefix-hash) key keeps ONE boolean of state —
@@ -30,21 +27,8 @@ object StreamingPrefixCache {
   case class HitRow(block_len: Int, doc_id: Long, hit: Boolean)
   case class Seen(seen: Boolean)
 
-  /** (doc_id, text) stream → one (block_len, prefix-hash, doc_id) row per
-    * configured block size the doc is long enough for. Same hashing as
-    * the q215 batch audit: md5 over the first B tokens joined by ' '. */
-  def blocks(docs: DataFrame, sizes: Seq[Int]): DataFrame = {
-    val toks = TextFunctions.tokens(col("text"))
-    sizes.map { b =>
-      docs
-        .filter(size(toks) >= b)
-        .select(lit(b).as("block_len"),
-          md5(array_join(slice(toks, lit(1), lit(b)), " ")).as("h"),
-          col("doc_id"))
-    }.reduce(_ unionAll _)
-  }
-
-  /** Tag every block row hit/miss against the keyed seen-state. */
+  /** Tag every [[graft.operators.Dedup.prefixBlocks]] row hit/miss
+    * against the keyed seen-state. */
   def hits(spark: SparkSession, blockRows: DataFrame): Dataset[HitRow] = {
     import spark.implicits._
     blockRows.as[BlockRow]

@@ -1,14 +1,19 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.operators.stateful.StateStoreSaveExec
+import org.apache.spark.sql.execution.streaming.operators.stateful.flatmapgroupswithstate.FlatMapGroupsWithStateExec
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 
+import graft.operators.Governance
 import graft.streaming.StreamingConformal
 
 /** Batch≡stream parity for the conformal coverage monitor: streaming the
   * q227 test half through [[StreamingConformal.coverage]] under any
   * micro-batch split reproduces the contract's (n_test, n_covered)
-  * exactly, including the q̂ = ∞ (null threshold) convention. */
+  * exactly, including the q̂ = ∞ (null threshold) convention, and the
+  * rows of the first micro-batch equal q227's coverage count over the
+  * rows added so far. */
 class StreamingConformalSpec extends SparkSpec {
   import spark.implicits._
 
@@ -57,6 +62,21 @@ class StreamingConformalSpec extends SparkSpec {
       try {
         in.addData(testScores.take(cut))
         q.processAllAvailable()
+        // per-batch emission: Update mode emits q227's coverage count over
+        // the rows added so far, one row per group touched
+        val firstBatch = spark.table(name)
+          .as[(String, Long, Long)].collect().toSet
+        val batchSoFar = Governance.coverageCounts(
+            testScores.take(cut).toDF("grp", "id", "v")
+              .join(thresholds, Seq("grp")), "grp")
+          .as[(String, Long, Long)].collect().toSet
+        assert(firstBatch === batchSoFar, s"cut=$cut first batch")
+        val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+          .lastExecution.executedPlan
+        assert(plan.collect { case a: StateStoreSaveExec => a }.nonEmpty,
+          s"no stateful aggregate:\n$plan")
+        assert(plan.collect { case f: FlatMapGroupsWithStateExec => f }.isEmpty,
+          s"a hand fold is planned:\n$plan")
         in.addData(testScores.drop(cut))
         q.processAllAvailable()
         val frontier = spark.table(name)

@@ -1,16 +1,19 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.streaming.operators.stateful.StateStoreSaveExec
+import org.apache.spark.sql.execution.streaming.operators.stateful.flatmapgroupswithstate.FlatMapGroupsWithStateExec
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Portable, TextFunctions}
-import graft.operators.TextPack
+import graft.operators.{Selection, TextPack}
 import graft.streaming.StreamingGroupStats
 
 /** Batch≡stream parity for the group-reward sufficient statistics: under
   * any micro-batch split the per-group frontier (n, Σr, Σr²) equals the
-  * batch aggregation, and advantages computed from the streamed state
-  * reproduce the q216 contract values. */
+  * batch aggregation, the rows of the first micro-batch equal q216's
+  * aggregate over the rows added so far, and advantages computed from the
+  * streamed state reproduce the q216 contract values. */
 class StreamingGroupStatsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -39,6 +42,23 @@ class StreamingGroupStatsSpec extends SparkSpec {
       try {
         in.addData(rewards.take(cut))
         q.processAllAvailable()
+        // per-batch emission: Update mode emits q216's aggregate over the
+        // rows added so far, one row per group touched
+        val firstBatch = spark.table(name)
+          .as[(String, String, Long, Long, Long)].collect().toSet
+        val batchSoFar = Selection.rewardStats(
+            rewards.take(cut).toDF("source", "lang", "doc_id", "rm"),
+            Seq("source", "lang"), "rm")
+          .select(col("source"), col("lang"), col("n"), col("s1"),
+            col("s2").cast("bigint"))
+          .as[(String, String, Long, Long, Long)].collect().toSet
+        assert(firstBatch === batchSoFar, s"cut=$cut first batch")
+        val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+          .lastExecution.executedPlan
+        assert(plan.collect { case a: StateStoreSaveExec => a }.nonEmpty,
+          s"no stateful aggregate:\n$plan")
+        assert(plan.collect { case f: FlatMapGroupsWithStateExec => f }.isEmpty,
+          s"a hand fold is planned:\n$plan")
         in.addData(rewards.drop(cut))
         q.processAllAvailable()
         // frontier: per group the row with the LARGEST n (stats only grow)

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.operators.Dedup
 import graft.streaming.StreamingPrefixCache
 
 /** Batch≡stream parity for the prefix-cache accounting: under any
@@ -29,7 +30,7 @@ class StreamingPrefixCacheSpec extends SparkSpec {
       implicit val sqlCtx = spark.sqlContext
       val in = MemoryStream[(Long, String)]
       val out = StreamingPrefixCache.hits(spark,
-        StreamingPrefixCache.blocks(
+        Dedup.prefixBlocks(
           in.toDF().toDF("doc_id", "text"), sizes))
       val name = s"pc_$cut"
       val q = out.writeStream.format("memory").outputMode("append")
@@ -58,7 +59,7 @@ class StreamingPrefixCacheSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, String)]
     val out = StreamingPrefixCache.hits(spark,
-      StreamingPrefixCache.blocks(in.toDF().toDF("doc_id", "text"), Seq(2)))
+      Dedup.prefixBlocks(in.toDF().toDF("doc_id", "text"), Seq(2)))
     val q = out.writeStream.format("memory").outputMode("append")
       .queryName("pc_one").start()
     try {
@@ -73,7 +74,7 @@ class StreamingPrefixCacheSpec extends SparkSpec {
   }
 
   test("blocks() matches the q215 hashing (same md5 over first B tokens)") {
-    val b = StreamingPrefixCache.blocks(
+    val b = Dedup.prefixBlocks(
       docs.toDF("doc_id", "text"), Seq(2))
       .filter(col("doc_id") === 1L).select("h").as[String].head()
     val md = java.security.MessageDigest.getInstance("MD5")
